@@ -122,8 +122,9 @@ case class AbsMax(child: Expression) extends UnaryExpression {
   * Input contract (one deliberate divergence, the lb_count style): a
   * NULL amax yields a NULL ARRAY here, where the HOF yields an array
   * of null elements. The only caller guards `amax > 0` before
-  * encoding, so no row with null amax reaches this expression;
-  * QuantExprSpec documents the corner instead of testing it.
+  * encoding, so no row with null amax reaches this expression; any
+  * other SQL caller must guard a NULL amax itself. QuantExprSpec pins
+  * the corner in both execution modes.
   */
 case class Sq8Quantize(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -114,8 +114,14 @@ case class InCount(left: Expression, right: Expression)
   * UTF8String.numChars (code points, so an emoji counts 1). The fold
   * is exact long arithmetic: acc stays in [0, 1e9), b ≤ 0x10FFFF·256
   * + numChars, so a·131 + b < 1.4e11 — no overflow is reachable and
-  * ANSI's checked ops can never fire (the HOF's CAST is from an INT
-  * product bounded the same way). A null token poisons the fold to
+  * ANSI's checked ops can never fire. The HOF is NOT bounded the same
+  * way: it computes ascii(t)*256 + length(t) in INT arithmetic, which
+  * under ANSI throws once that sum passes 2^31 - 1 — for a token of
+  * about 1.86e9 characters whose first code point is 0x10FFFF, more
+  * for smaller ones — where fp_hash returns a value. The divergence is
+  * unreachable only because no real token comes near that length (a
+  * string value is capped at 2 GB of UTF-8, so it is not strictly
+  * impossible). A null token poisons the fold to
   * NULL exactly like `acc + null`; the fold never recovers, and the
   * skipped later per-token features are side-effect-free (ascii
   * cannot throw), so early-null is unobservable. NULL array → NULL,

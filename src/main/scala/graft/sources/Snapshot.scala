@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 
 /** Snapshot export/read/retention pipeline — the reference tool's own
   * capability re-expressed for a Spark+parquet world (SURVEY §0.1,
@@ -16,7 +16,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Incremental export exploits immutability the way the reference
   * exploits SSTable immutability: a table whose content signature
   * matches the parent snapshot is NOT rewritten — its manifest entry
-  * points at the parent's files.
+  * points at the parent's files. Inheritance is also FILE-granular for
+  * flat tables: each partition of the exported DataFrame is signed
+  * separately, a partition equal to one of the parent's files links to
+  * that file, and only the remaining partitions are written (the
+  * reference uploads only the SSTables HDFS does not have). One entry
+  * may therefore own files in several tags, and retention keeps every
+  * ancestor tag a kept tag links into. See [[export]] for the fallbacks.
   *
   * All I/O goes through the Hadoop FileSystem API, so the same code
   * runs against local disk here and HDFS/S3 on a cluster. The
@@ -35,8 +41,17 @@ object Snapshot {
     * advisory: a file without stats is always scanned.
     */
   case class ColumnStats(min: Long, max: Long)
+  /** `signature` is the file's own content signature, in the table
+    * signature's format (see [[partitionSums]]), recorded by [[export]]
+    * only when the file provably holds exactly one partition's rows. A
+    * later export links a partition with the same signature to this
+    * file instead of rewriting it. Absent for files of legacy
+    * manifests, DSv2 appends and whole-table fallback writes; such
+    * files never match.
+    */
   case class FileEntry(path: String, size: Long,
-                       stats: Map[String, ColumnStats] = Map.empty)
+                       stats: Map[String, ColumnStats] = Map.empty,
+                       signature: Option[String] = None)
   /** `dir` is set for hive-partitioned tables (partition values are
     * directory-encoded, so readers need the base dir, not bare files).
     *
@@ -335,37 +350,54 @@ object Snapshot {
   }
 
   /** Content signature used for incremental skip: row count + schema
-    * hash + an order-independent CONTENT fingerprint (the DECIMAL(38,0)
+    * hash + an order-independent CONTENT fingerprint (the exact integer
     * sum of per-row xxhash64 over every column — commutative, so
-    * partition order and parallelism cannot change it, and exact
-    * integer so both the sum and the comparison are deterministic).
-    * Without the content term, a change that preserves row count and
-    * schema (an UPDATE) would silently inherit the parent's stale
-    * files — wrong data, not a degraded mode. The (count, hash) pair
-    * is ONE aggregation job over the same scan the old count-only
-    * signature already paid for.
+    * partition order and parallelism cannot change it, and exact so
+    * both the sum and the comparison are deterministic). Without the
+    * content term, a change that preserves row count and schema (an
+    * UPDATE) would silently inherit the parent's stale files — wrong
+    * data, not a degraded mode.
     *
-    * Columns xxhash64 cannot consume (maps) degrade to a no-fingerprint
-    * signature that never matches — such tables are always rewritten
-    * (conservative, never wrong).
+    * This returns each partition's (row count, hash sum) of `pinned`
+    * from ONE job with no shuffle: the table signature adds them up,
+    * and a partition's own signature (same format, its own rows and
+    * sum) is what [[export]] matches against the parent's files. The
+    * table string is byte-identical to the earlier
+    * `sum(xxhash64(struct(*)).cast("decimal(38,0)"))` form: each task
+    * carries its sum as a 128-bit two's-complement pair, rebuilt
+    * exactly on the driver, so no sum wraps.
+    *
+    * Columns xxhash64 cannot consume (maps) fail analysis: None, and
+    * the caller degrades to a no-fingerprint signature that never
+    * matches — such tables are always rewritten (conservative, never
+    * wrong).
     */
-  private def signatureAndRows(df: DataFrame): (Long, String) = {
-    import org.apache.spark.sql.functions.{xxhash64, struct, col, sum, count, lit}
-    try {
-      // backtick-quote each column name: bare col(name) RE-PARSES the
-      // name, so a column literally named "a.b" would resolve as
-      // struct-field access — fingerprinting the wrong data (silent
-      // stale inheritance) or failing analysis for no reason
-      val cols = df.columns.map(n => col(s"`${n.replace("`", "``")}`"))
-      val r = df.select(xxhash64(struct(cols: _*)).cast("decimal(38,0)").as("h"))
-        .agg(count(lit(1)), sum(col("h"))).head
-      val rows = r.getLong(0)
-      val content = if (r.isNullAt(1)) "empty" else r.getDecimal(1).toBigInteger.toString
-      (rows, s"${signatureOf(df.schema, rows)}:$content")
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        val rows = df.count()
-        (rows, s"${signatureOf(df.schema, rows)}:nohash-${java.util.UUID.randomUUID()}")
+  private def partitionSums(pinned: DataFrame): Option[Seq[(Long, java.math.BigInteger)]] = {
+    import org.apache.spark.sql.functions.{xxhash64, struct, col}
+    // backtick-quote each column name: bare col(name) RE-PARSES the
+    // name, so a column literally named "a.b" would resolve as
+    // struct-field access — fingerprinting the wrong data (silent
+    // stale inheritance) or failing analysis for no reason
+    val cols = pinned.columns.map(n => col(s"`${n.replace("`", "``")}`"))
+    val hashes =
+      try Some(pinned.select(xxhash64(struct(cols: _*))))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    hashes.map { h =>
+      h.queryExecution.toRdd.mapPartitionsWithIndex { (i, it) =>
+        var rows, hi, lo = 0L
+        while (it.hasNext) {
+          val x = it.next().getLong(0)
+          val sum = lo + x
+          // sign extension of x, plus the carry out of the unsigned low word
+          hi += (x >> 63) + (if (java.lang.Long.compareUnsigned(sum, lo) < 0) 1L else 0L)
+          lo = sum
+          rows += 1
+        }
+        Iterator((i, rows, hi, lo))
+      }.collect().sortBy(_._1).toSeq.map { case (_, rows, hi, lo) =>
+        rows -> java.math.BigInteger.valueOf(hi).shiftLeft(64)
+          .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))
+      }
     }
   }
 
@@ -379,27 +411,6 @@ object Snapshot {
                                    rows: Long): String =
     s"$rows:${schema.catalogString.hashCode}"
 
-  /** Export `tables` as snapshot `tag`. With a parent, tables whose
-    * signature is unchanged are linked to the parent's files instead
-    * of rewritten (incremental transfer).
-    *
-    * Each written table lands in a FRESH generation directory
-    * `root/<tag>/<table>/g-<uuid>` — never `mode("overwrite")` into a
-    * fixed path, which would DELETE the live generation's data files
-    * while the current manifest still references them (a crash or a
-    * concurrent reader between that delete and the manifest swap loses
-    * committed data). The old generation stays on disk, unreferenced
-    * once the new manifest lands, and vacuum() sweeps it — the same
-    * write-new/swap/sweep discipline the DSv2 committer uses. The
-    * manifest swap serializes on the DSv2 commit lock, so a swap never
-    * interleaves with a DSv2 commit's read-modify-write — but note the
-    * SEMANTICS: export REPLACES the tag's table set wholesale (the
-    * caller declares the complete snapshot), so a table appended to
-    * the same tag by a concurrent DSv2 writer and not included in
-    * `tables` is dropped from the new manifest by design. Don't mix
-    * live appends and exports on one tag; use separate tags with a
-    * parent link.
-    */
   /** Tags and table names become filesystem path segments under
     * `root`. A slashed tag (`x/y`) commits `root/x/y/manifest.json` —
     * a manifest [[listTags]] (depth-1) never sees — so a later
@@ -419,6 +430,47 @@ object Snapshot {
           "name commits a manifest listTags never sees, and vacuum would then sweep " +
           "its referenced files as orphans")
 
+  /** Export `tables` as snapshot `tag`. With a parent, tables whose
+    * signature is unchanged are linked to the parent's files instead
+    * of rewritten (incremental transfer).
+    *
+    * A flat table whose signature differs is inherited FILE by file.
+    * The DataFrame is planned once and its row RDD pinned, so the
+    * signature job and the write see the same rows in partition `i`.
+    * A non-empty partition whose signature equals a parent file's links
+    * to that file; each parent file stands for at most one partition, so
+    * two identical partitions still get two files. The remaining
+    * partitions are written through a PartitionPruningRDD, so linked
+    * partitions are never recomputed. Matching is scoped to a parent
+    * entry with the same schema JSON: xxhash64 ignores column names, so
+    * a rename with identical values must not inherit. A written file
+    * records its signature only when that is provable — every write task
+    * produced exactly one file, and its footer row count equals its
+    * partition's. Anything else (several files per task under
+    * `maxRecordsPerFile`, a footer that disagrees) falls back to the
+    * whole-table write, with no per-file signatures. The whole-table
+    * write also serves hive-partitioned tables, columns xxhash64 cannot
+    * hash (maps) and an empty table. Parent files without a signature
+    * (legacy manifests, DSv2 appends) never match, and empty partitions
+    * write nothing.
+    *
+    * Each write lands in a FRESH generation directory
+    * `root/<tag>/<table>/g-<uuid>` — never `mode("overwrite")` into a
+    * fixed path, which would DELETE the live generation's data files
+    * while the current manifest still references them (a crash or a
+    * concurrent reader between that delete and the manifest swap loses
+    * committed data). The old generation stays on disk, unreferenced
+    * once the new manifest lands, and vacuum() sweeps it — the same
+    * write-new/swap/sweep discipline the DSv2 committer uses. The
+    * manifest swap serializes on the DSv2 commit lock, so a swap never
+    * interleaves with a DSv2 commit's read-modify-write — but note the
+    * SEMANTICS: export REPLACES the tag's table set wholesale (the
+    * caller declares the complete snapshot), so a table appended to
+    * the same tag by a concurrent DSv2 writer and not included in
+    * `tables` is dropped from the new manifest by design. Don't mix
+    * live appends and exports on one tag; use separate tags with a
+    * parent link.
+    */
   def export(s: SparkSession, tables: Map[String, DataFrame], root: String,
              tag: String, parent: Option[String] = None,
              partitionBy: Map[String, Seq[String]] = Map.empty): Manifest = {
@@ -430,19 +482,8 @@ object Snapshot {
     tables.keys.foreach(requireSafeSegment("snapshot table name", _))
     val parentManifest = parent.map(readManifest(s, root, _))
     val entries = tables.map { case (name, df) =>
-      val (rows, sig) = signatureAndRows(df)
-      val inherited = parentManifest.flatMap(_.tables.get(name)).filter(_.signature == sig)
-      val entry = inherited.getOrElse {
-        val dir = s"$root/$tag/$name/g-${java.util.UUID.randomUUID().toString.take(8)}"
-        val partCols = partitionBy.getOrElse(name, Nil)
-        val writer = df.write.mode("error") // the generation dir is fresh by construction
-        (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer).parquet(dir)
-        val files = listParquetRecursive(s, fs(s, root), new Path(dir))
-        TableEntry(files, rows, sig,
-          dir = if (partCols.nonEmpty) Some(dir) else None, partitionBy = partCols,
-          schemaJson = Some(df.schema.json))
-      }
-      name -> entry
+      name -> exportTable(s, root, tag, name, df, partitionBy.getOrElse(name, Nil),
+        parentManifest.flatMap(_.tables.get(name)))
     }
     exportRaceHook() // test seam: the pre-commit window a concurrent retain can land in
     // OCC commit: the generation read and the preconditioned swap sit in
@@ -461,7 +502,9 @@ object Snapshot {
       // manifest, INSIDE the same lock retain() takes, and lose loudly
       // otherwise (the retention won; this export's inherited sources
       // are gone). The exporting tag itself is excluded — its manifest
-      // is the one being written.
+      // is the one being written. Every file of every entry is checked,
+      // not one per entry: a file-granular entry links files owned by
+      // several ancestor tags.
       val f = fs(s, root)
       val rootQ = f.makeQualified(new Path(root))
       val owners = entries.values.flatMap(e =>
@@ -502,6 +545,104 @@ object Snapshot {
     }
   }
 
+  /** One table of [[export]]: inherit the parent's entry whole, link
+    * unchanged partitions file by file, or write the whole table.
+    */
+  private def exportTable(s: SparkSession, root: String, tag: String, name: String,
+                          df: DataFrame, partCols: Seq[String],
+                          parentEntry: Option[TableEntry]): TableEntry = {
+    // pin the partitions: one planned RDD feeds the signature job and
+    // the write, so partition i holds the same rows in both
+    val rdd = df.queryExecution.toRdd
+    val pinned = GraftShim.ofInternalRows(df.sparkSession, rdd, df.schema)
+    val sums = partitionSums(pinned)
+    val rows = sums.fold(rdd.count())(_.map(_._1).sum)
+    def sigOf(n: Long, content: String) = s"${signatureOf(df.schema, n)}:$content"
+    val sig = sigOf(rows, sums match {
+      case None => s"nohash-${java.util.UUID.randomUUID()}"
+      case Some(_) if rows == 0 => "empty"
+      case Some(ps) => ps.map(_._2).reduce(_ add _).toString
+    })
+    parentEntry.filter(_.signature == sig).getOrElse {
+      def freshDir() = s"$root/$tag/$name/g-${java.util.UUID.randomUUID().toString.take(8)}"
+      val schemaJson = Some(df.schema.json)
+      val granular =
+        if (partCols.nonEmpty || rows == 0) None
+        else sums.flatMap { ps =>
+          val parentFiles = parentEntry.filter(_.schemaJson == schemaJson).toSeq.flatMap(_.files)
+          writeChanged(s, root, pinned, rdd, ps.map { case (n, h) => n -> sigOf(n, h.toString) },
+            parentFiles, freshDir())
+        }
+      granular match {
+        case Some(files) => TableEntry(files, rows, sig, schemaJson = schemaJson)
+        case None =>
+          val dir = freshDir()
+          val writer = pinned.write.mode("error") // the generation dir is fresh by construction
+          (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer).parquet(dir)
+          val files = listParquetRecursive(s, fs(s, root), new Path(dir)).map(_._1)
+          TableEntry(files, rows, sig,
+            dir = if (partCols.nonEmpty) Some(dir) else None, partitionBy = partCols,
+            schemaJson = schemaJson)
+      }
+    }
+  }
+
+  /** Spark's data file name: `part-<task partition id>-<job uuid>-c<n>...`. */
+  private val partFileName = """part-(\d+)-.*""".r
+
+  /** The file-granular write of a flat table, given each partition of
+    * `pinned` (the DataFrame over `rdd`) as (row count, signature):
+    * match non-empty partitions to `parentFiles` by signature (multiset)
+    * and write the rest into `dir`. Returns the entry's files in
+    * partition order, or None — with `dir` deleted — when a written file
+    * is not provably one partition's rows.
+    */
+  private def writeChanged(s: SparkSession, root: String, pinned: DataFrame,
+                           rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                           parts: Seq[(Long, String)], parentFiles: Seq[FileEntry],
+                           dir: String): Option[Seq[FileEntry]] = {
+    val pool = scala.collection.mutable.Map(
+      parentFiles.filter(_.signature.isDefined).groupBy(_.signature.get).toSeq: _*)
+    val plan: Seq[Either[FileEntry, Int]] = parts.indices.filter(parts(_)._1 > 0).map { i =>
+      val sig = parts(i)._2
+      pool.get(sig) match {
+        case Some(file +: rest) => pool(sig) = rest; Left(file)
+        case _ => Right(i)
+      }
+    }
+    val changed = plan.collect { case Right(i) => i }
+    if (changed.isEmpty) return Some(plan.collect { case Left(file) => file })
+    GraftShim.ofInternalRows(pinned.sparkSession,
+        org.apache.spark.rdd.PartitionPruningRDD.create(rdd, changed.toSet), pinned.schema)
+      .write.mode("error").parquet(dir)
+    val f = fs(s, root)
+    // task j of the pruned write holds partition changed(j)
+    val written = listParquetRecursive(s, f, new Path(dir)).groupBy { case (fe, _) =>
+      new Path(fe.path).getName match {
+        case partFileName(task) => task.toInt
+        case _ => -1
+      }
+    }
+    val proven = written.keySet == changed.indices.toSet && changed.indices.forall { j =>
+      written(j) match {
+        case Seq((_, footerRows)) => footerRows.contains(parts(changed(j))._1)
+        case _ => false
+      }
+    }
+    if (!proven) {
+      f.delete(new Path(dir), true)
+      None
+    } else {
+      val own = changed.indices.map { j =>
+        changed(j) -> written(j).head._1.copy(signature = Some(parts(changed(j))._2))
+      }.toMap
+      Some(plan.map {
+        case Left(file) => file
+        case Right(i) => own(i)
+      })
+    }
+  }
+
   /** Max-per-appId union of two txns ledgers: each writer's recorded
     * progress is the furthest version EITHER side saw — merging can
     * only make the replay check stricter, never re-admit a replay.
@@ -514,8 +655,12 @@ object Snapshot {
       k -> math.max(a.getOrElse(k, Long.MinValue), b.getOrElse(k, Long.MinValue))
     }.toMap
 
-  private def listParquetRecursive(s: SparkSession, f: FileSystem, dir: Path): Seq[FileEntry] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
+  /** The parquet files under `dir`, each with the row count its footer
+    * declares (None when the footer could not be read).
+    */
+  private def listParquetRecursive(s: SparkSession, f: FileSystem,
+                                   dir: Path): Seq[(FileEntry, Option[Long])] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[(FileEntry, Option[Long])]
     // one conf clone for the whole listing — newHadoopConf() copies the
     // entire Hadoop conf, so cloning per file is O(files) wasted work
     // at manifest-build time on many-file snapshots
@@ -523,11 +668,12 @@ object Snapshot {
     val it = f.listFiles(dir, true)
     while (it.hasNext) {
       val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet"))
-        out += FileEntry(st.getPath.toString, st.getLen,
-          footerStats(st.getPath, conf))
+      if (st.getPath.getName.endsWith(".parquet")) {
+        val (stats, rows) = footerStats(st.getPath, conf)
+        out += FileEntry(st.getPath.toString, st.getLen, stats) -> rows
+      }
     }
-    out.sortBy(_.path).toSeq
+    out.sortBy(_._1.path).toSeq
   }
 
   /** Harvest per-file min/max for int32/int64 columns from the parquet
@@ -535,10 +681,11 @@ object Snapshot {
     * time). A column appears only if EVERY row group has trustworthy
     * statistics; integer stats are exact in parquet-mr, so presence ⇒
     * correctness. Errors degrade to "no stats" — pruning is always
-    * advisory.
+    * advisory — and to no row count. The row count (the sum over row
+    * groups) comes from the same footer read.
     */
-  private def footerStats(p: Path,
-                          conf: org.apache.hadoop.conf.Configuration): Map[String, ColumnStats] =
+  private def footerStats(p: Path, conf: org.apache.hadoop.conf.Configuration)
+      : (Map[String, ColumnStats], Option[Long]) =
     try {
       // the SESSION's Hadoop conf, not a bare `new Configuration()` —
       // a configured filesystem (S3 credentials, HA nameservice) would
@@ -575,9 +722,9 @@ object Snapshot {
             }
           }
         }
-        acc.toMap
+        (acc.toMap, Some(reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum))
       } finally reader.close()
-    } catch { case _: Exception => Map.empty }
+    } catch { case _: Exception => (Map.empty, None) }
 
   private def parseInstant(t: String): Option[java.time.Instant] =
     try Some(java.time.Instant.parse(t))
@@ -829,7 +976,11 @@ object Snapshot {
     * g→p→k where p inherited table B from g and k inherited table A
     * from p) — single-level protection would delete g and leave p, a
     * live listed snapshot, with dangling file references. Iterate to
-    * fixpoint over the manifests of every protected tag.
+    * fixpoint over the manifests of every protected tag. Retention is
+    * tag-granular: since [[export]] links unchanged partitions file by
+    * file, a kept tag keeps EVERY ancestor that owns one of its files —
+    * a table that only grows keeps its whole chain of tags, each holding
+    * just the files it added.
     *
     * LOCK-HOLD TRADE (advice r19): the whole run — listTags, one
     * readManifest per protected tag in the closure, and the recursive

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.functions._
 import graft.sources.Snapshot
 
 /** Manifest schema evolution, both directions (r12 — motivated by the
@@ -74,5 +75,30 @@ class ManifestCompatSpec extends SparkSpec {
     val back = Snapshot.readManifest(spark, root, "v1").tables("t")
     assert(back == entry,
       "every field incl. dotted ledger keys and Long.MaxValue must round-trip")
+  }
+
+  test("BACKWARD: a manifest without per-file signatures parses and takes the whole-table path") {
+    val root = Files.createTempDirectory("mcompat_filesig").toString
+    val t = spark.range(0, 3000, 1, 3).select(col("id"), (col("id") % 11).as("v"))
+    Snapshot.export(spark, Map("t" -> t), root, "v1")
+    // rewrite v1 in the pre-signature wire format: an absent Option
+    // field is omitted from the JSON, so no file carries "signature"
+    val written = Snapshot.readManifest(spark, root, "v1")
+    Snapshot.writeManifest(spark, root, written.copy(tables = written.tables.map {
+      case (n, e) => n -> e.copy(files = e.files.map(_.copy(signature = None)))
+    }))
+    val raw = Files.readString(Paths.get(root, "v1", "manifest.json"))
+    assert(raw.split("\"signature\"").length == 2,
+      s"precondition: only the table-level signature is left: $raw")
+    val v1 = Snapshot.readManifest(spark, root, "v1").tables("t")
+    assert(v1.files.size == 3 && v1.files.forall(_.signature.isEmpty))
+    // the table-level signature still matches: whole-table inheritance
+    val same = Snapshot.export(spark, Map("t" -> t), root, "v2", Some("v1"))
+    assert(same.tables("t").files == v1.files)
+    // a grown table finds no per-file signature to match: every partition is written
+    val grown = t.unionByName(spark.range(3000, 3100, 1, 1).select(col("id"), (col("id") % 11).as("v")))
+    val m = Snapshot.export(spark, Map("t" -> grown), root, "v3", Some("v1"))
+    assert(m.tables("t").files.size == 4 && m.tables("t").files.forall(_.path.contains("/v3/")))
+    assert(Snapshot.read(spark, root, "v3", "t").count() == 3100)
   }
 }

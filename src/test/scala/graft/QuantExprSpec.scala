@@ -205,6 +205,26 @@ class QuantExprSpec extends SparkSpec {
       "sq8_quantize must match the HOF bit-for-bit on overflow inputs")
   }
 
+  test("sq8_quantize on a NULL amax: a NULL array, where the HOF gives nulls per element") {
+    // the one deliberate divergence from the HOF (Sq8Quantize's input
+    // contract): q_sim_quantized guards amax > 0, but the function is
+    // registered session-wide, so the corner is pinned here
+    graft.functions.QuantExprs.register(spark)
+    val rows = Seq(
+      Row(0, Seq[java.lang.Float](1f, null, -2f), null),
+      Row(1, null, null))
+    def run() = mkDf(rows, quantSchema).select(col("id"),
+      expr("sq8_quantize(a, amax)").as("fast"),
+      expr("transform(a, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0D / amax + 0.5D) AS BIGINT))")
+        .as("ref")).orderBy("id").collect()
+    for ((mode, out) <- Seq("codegen" -> withForcedCodegen(run()), "interpreted" -> withInterpreted(run()))) {
+      assert(out(0).isNullAt(1), s"$mode: a NULL amax must yield a NULL array")
+      assert(out(0).getSeq[Any](2) == Seq(null, null, null),
+        s"$mode: the HOF yields one null per element")
+      assert(out(1).isNullAt(1) && out(1).isNullAt(2), s"$mode: a NULL array stays NULL in both")
+    }
+  }
+
   // ---- long_dot ----------------------------------------------------
 
   private val longSchema = StructType(Seq(

@@ -1,0 +1,144 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.sources.Snapshot
+
+/** File-granular incremental export: a flat table whose signature
+  * differs from the parent's links every partition that equals one of
+  * the parent's files and writes only the others. Partitions come from
+  * `spark.range(..., numSlices)` and unions of such frames, so each
+  * case knows which partitions changed.
+  */
+class SnapshotFileGranularSpec extends SparkSpec {
+
+  private def shape(ids: DataFrame): DataFrame =
+    ids.select(col("id"), (col("id") * 7).as("v"), concat(lit("k"), col("id")).as("s"))
+
+  /** `n` rows of ids from `from`, in `slices` partitions. */
+  private def rows(from: Long, n: Long, slices: Int): DataFrame =
+    shape(spark.range(from, from + n, 1, slices).toDF())
+
+  private def base = rows(0, 4000, 4)
+
+  private def paths(m: Snapshot.Manifest, t: String) = m.tables(t).files.map(_.path)
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("an append writes only the new partition; the other paths point into the parent") {
+    val root = Files.createTempDirectory("snap_fg_append").toString
+    val m1 = Snapshot.export(spark, Map("t" -> base), root, "t1")
+    assert(m1.tables("t").files.size == 4 && m1.tables("t").files.forall(_.signature.isDefined),
+      "a full export records one signed file per partition")
+    val grown = base.unionByName(rows(4000, 500, 1))
+    val m2 = Snapshot.export(spark, Map("t" -> grown), root, "t2", Some("t1"))
+    val files = m2.tables("t").files
+    assert(files.size == 5)
+    assert(files.take(4) == m1.tables("t").files, "unchanged partitions must link the parent's files")
+    assert(files.last.path.contains("/t2/") && files.last.signature.isDefined)
+    assert(m2.tables("t").rows == 4500)
+    assert(sameRows(Snapshot.read(spark, root, "t2", "t"), grown))
+  }
+
+  test("an UPDATE inside one partition rewrites only that partition") {
+    val root = Files.createTempDirectory("snap_fg_update").toString
+    val m1 = Snapshot.export(spark, Map("t" -> base), root, "t1")
+    // id 1234 lies in the second of the four 1000-row partitions
+    val updated = base.withColumn("v", when(col("id") === 1234, lit(-1L)).otherwise(col("v")))
+    val m2 = Snapshot.export(spark, Map("t" -> updated), root, "t2", Some("t1"))
+    val (before, after) = (paths(m1, "t"), paths(m2, "t"))
+    assert(after.size == 4)
+    assert(after(1).contains("/t2/") && !before.contains(after(1)), "the updated partition is rewritten")
+    assert(Seq(0, 2, 3).forall(i => after(i) == before(i)), s"the others must link: $after")
+    assert(sameRows(Snapshot.read(spark, root, "t2", "t"), updated))
+  }
+
+  test("a column rename with identical values inherits nothing") {
+    val root = Files.createTempDirectory("snap_fg_rename").toString
+    val m1 = Snapshot.export(spark, Map("t" -> base), root, "t1")
+    // xxhash64 ignores names: the renamed partitions hash exactly like the parent's files
+    val renamed = base.withColumnRenamed("v", "w")
+    val m2 = Snapshot.export(spark, Map("t" -> renamed), root, "t2", Some("t1"))
+    assert(paths(m2, "t").forall(_.contains("/t2/")), s"rename inherited files: ${paths(m2, "t")}")
+    assert(paths(m2, "t").intersect(paths(m1, "t")).isEmpty)
+    val back = Snapshot.read(spark, root, "t2", "t")
+    assert(back.columns.toSeq == Seq("id", "w", "s") && sameRows(back, renamed))
+  }
+
+  test("two identical partitions get two distinct files") {
+    val root = Files.createTempDirectory("snap_fg_twins").toString
+    // `slices` partitions, each holding the same 1000 rows
+    def copies(slices: Int) =
+      shape(spark.range(0, 1000L * slices, 1, slices).select((col("id") % 1000).as("id")))
+    // the parent holds ONE copy: the first twin links it, the second is written
+    val m1 = Snapshot.export(spark, Map("t" -> copies(1)), root, "t1")
+    val twins = copies(2)
+    val m2 = Snapshot.export(spark, Map("t" -> twins), root, "t2", Some("t1"))
+    val p2 = paths(m2, "t")
+    assert(p2.size == 2 && p2.distinct.size == 2, s"each twin needs its own file: $p2")
+    assert(p2.head == paths(m1, "t").head && p2(1).contains("/t2/"))
+    assert(m2.tables("t").files.map(_.signature).distinct.size == 1, "the twins sign alike")
+    // the parent now holds two signed copies: both twins link, to DIFFERENT files
+    val m3 = Snapshot.export(spark, Map("t" -> twins.unionByName(rows(5000, 10, 1))),
+      root, "t3", Some("t2"))
+    assert(paths(m3, "t").take(2) == p2)
+    assert(Snapshot.read(spark, root, "t3", "t").count() == 2010)
+  }
+
+  test("forcing maxRecordsPerFile falls back to the whole-table write") {
+    val root = Files.createTempDirectory("snap_fg_maxrec").toString
+    val m1 = Snapshot.export(spark, Map("t" -> base), root, "t1")
+    val grown = base.unionByName(rows(4000, 500, 1))
+    val key = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(key, "300")
+    val m2 =
+      try Snapshot.export(spark, Map("t" -> grown), root, "t2", Some("t1"))
+      finally spark.conf.unset(key)
+    val files = m2.tables("t").files
+    // 4 x 1000 rows + 500 rows at 300 per file: 4 x 4 + 2 files, all new, none signed
+    assert(files.size == 18 && files.forall(_.path.contains("/t2/")), paths(m2, "t"))
+    assert(files.forall(_.signature.isEmpty), "a multi-file task must not record per-file signatures")
+    assert(paths(m2, "t").intersect(paths(m1, "t")).isEmpty)
+    assert(sameRows(Snapshot.read(spark, root, "t2", "t"), grown))
+    // the abandoned pruned write left nothing behind beside the fallback generation
+    val gens = new java.io.File(s"$root/t2/t").listFiles().filter(_.getName.startsWith("g-"))
+    assert(gens.length == 1, gens.map(_.getName).mkString(", "))
+  }
+
+  test("retain(1) then vacuum leaves the newest tag fully readable") {
+    val root = Files.createTempDirectory("snap_fg_retain").toString
+    val v2 = base.unionByName(rows(4000, 500, 1))
+    val v3 = v2.unionByName(rows(4500, 500, 1))
+    Snapshot.export(spark, Map("t" -> base), root, "t1")
+    Snapshot.export(spark, Map("t" -> v2), root, "t2", Some("t1"))
+    val m3 = Snapshot.export(spark, Map("t" -> v3), root, "t3", Some("t2"))
+    assert(Set("/t1/", "/t2/", "/t3/").forall(t => paths(m3, "t").exists(_.contains(t))),
+      "t3 owns files in all three tags")
+    // t3 links into t1 and t2, so retention keeps both
+    assert(Snapshot.retain(spark, root, 1).isEmpty)
+    Snapshot.vacuum(spark, root)
+    val fresh = spark.newSession()
+    assert(sameRows(Snapshot.read(fresh, root, "t3", "t"), v3))
+    assert(fresh.read.format("graft.sources.SnapshotSource").option("root", root)
+      .option("tag", "t3").option("table", "t").load().count() == 5000)
+  }
+
+  test("the table signature equals the decimal(38,0) sum form when the hash sum overflows a long") {
+    val root = Files.createTempDirectory("snap_fg_sig").toString
+    val df = rows(0, 3000, 3)
+    val cols = df.columns.map(n => col(s"`$n`"))
+    val old = df.select(xxhash64(struct(cols: _*)).cast("decimal(38,0)").as("h"))
+      .agg(count(lit(1)), sum(col("h"))).head
+    val total = old.getDecimal(1).toBigInteger
+    assert(total.bitLength > 63, s"precondition: the hash sum $total must overflow a long")
+    val expected = s"${old.getLong(0)}:${df.schema.catalogString.hashCode}:$total"
+    val m = Snapshot.export(spark, Map("t" -> df), root, "t1")
+    assert(m.tables("t").signature == expected)
+    // a table-level match still inherits the whole entry and writes nothing
+    val m2 = Snapshot.export(spark, Map("t" -> df.repartition(5)), root, "t2", Some("t1"))
+    assert(m2.tables("t") == m.tables("t"))
+  }
+}
