@@ -11,17 +11,22 @@ import org.apache.spark.sql.SparkSession
   * runs; keeping the map in one place makes every future join/AQE conf
   * change atomic across all four.
   *
+  * The builder also loads [[graft.plans.GraftExtensions]], Graft's one
+  * install point for its SQL functions and the as-of strategy.
+  *
   * PlanAudit and ScaleRehearsal deliberately keep their own builders:
   * PlanAudit's counts are compared against r4-onward history captured
   * at local[4] without the r21 join confs, and ScaleRehearsal
-  * parameterizes shuffle partitions per leg.
+  * parameterizes shuffle partitions per leg. ScaleRehearsal loads the
+  * extension itself; PlanAudit's session does not, and relies on the
+  * install SparkEntry.queries applies before building each query.
   */
 object GraftSession {
 
   /** Conf pairs every measured/verified session runs with. `cpus`
     * feeds shuffle parallelism (scale-adaptive: the driver benches at
-    * 32 and 8 cores); the rest are env-parameterized with the local
-    * defaults OPTIMIZATION_r21.md §4 measured and justified:
+    * 32 and 8 cores); the rest are the fixed values OPTIMIZATION_r21.md
+    * §4 measured and justified:
     *  - AQE on (coalescing, runtime join conversion, skew splits);
     *  - preferSortMergeJoin=false (guide §3.1/§9): shuffled hash join
     *    where its size conditions hold — skips both sides' sorts; the
@@ -36,19 +41,18 @@ object GraftSession {
     */
   def confs(cpus: String): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> cpus,
-    "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true"),
-    "spark.sql.join.preferSortMergeJoin" ->
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"),
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL", "64m"),
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "64m",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 
-  /** `local[cpus]` builder carrying [[confs]] — `.getOrCreate()` and
-    * per-main extras are the caller's.
+  /** `local[cpus]` builder carrying [[confs]] and GraftExtensions —
+    * `.getOrCreate()` and per-main extras are the caller's.
     */
   def builder(cpus: String): SparkSession.Builder =
-    confs(cpus).foldLeft(SparkSession.builder().master(s"local[$cpus]")) {
+    confs(cpus).foldLeft(SparkSession.builder().master(s"local[$cpus]")
+        .withExtensions(new graft.plans.GraftExtensions)) {
       case (b, (k, v)) => b.config(k, v)
     }
 }

@@ -22,6 +22,7 @@ object ScaleRehearsal {
     // plan pathology (ratio doesn't)
     val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus0]")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus0))
@@ -317,7 +318,6 @@ object ScaleRehearsal {
     // label re-keying uses the same multiplicative scheme as asof's
     // user re-key. Runs the REAL knnGraphImpl dataflow (join → cosine
     // → per-src top-3 window → global order).
-    graft.functions.VectorExprs.register(spark)
     val embG = embBase
       .withColumn("rep", explode(expr(s"sequence(1, $k)")))
       .select((col("vec_id") + col("rep") * lit(embStride)).as("vec_id"),

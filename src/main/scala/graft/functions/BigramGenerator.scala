@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -43,10 +42,4 @@ case class BigramGenerator(child: Expression)
     copy(child = newChild)
 
   override def prettyName: String = "bigrams"
-}
-
-object BigramGenerator {
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigrams", exprs => BigramGenerator(exprs.head), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -112,11 +111,4 @@ case class LowerBoundCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "lb_count"
-}
-
-/** Registration for SQL-expression use (`expr("lb_count(bs, v)")`). */
-object BoundsExprs {
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lb_count", exprs => LowerBoundCount(exprs(0), exprs(1)), "built-in")
 }

@@ -150,7 +150,6 @@ object FnSuites {
     * property (aligned z-chunks are exact squares) and codegen parity.
     */
   def fnZorder(s: SparkSession, dir: String): DataFrame = {
-    ZOrderExprs.register(s)
     Tables.part(s, dir)
       .select(col("p_partkey"),
         col("p_size").cast("bigint").as("x"),

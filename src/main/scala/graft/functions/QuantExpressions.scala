@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -279,18 +278,4 @@ case class LongDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "long_dot"
-}
-
-/** Registration for SQL-expression use (`expr("abs_max(a)")`,
-  * `expr("sq8_quantize(a, amax)")`, `expr("long_dot(qa, qb)")`).
-  */
-object QuantExprs {
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "abs_max", exprs => AbsMax(exprs(0)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq8_quantize", exprs => Sq8Quantize(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_dot", exprs => LongDot(exprs(0), exprs(1)), "built-in")
-  }
 }

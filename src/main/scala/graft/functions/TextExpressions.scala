@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -185,16 +184,4 @@ case class FpHash(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "fp_hash"
-}
-
-/** Registration for SQL-expression use (`expr("in_count(toks, array(...))")`,
-  * `expr("fp_hash(toks)")`).
-  */
-object TextExprs {
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "in_count", exprs => InCount(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fp_hash", exprs => FpHash(exprs(0)), "built-in")
-  }
 }

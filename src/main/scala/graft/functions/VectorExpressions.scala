@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -175,16 +174,4 @@ case class FloatDoubleDotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "double_dot"
-}
-
-/** Registration for SQL-expression use (`expr("float_dot(a, b)")`,
-  * `expr("double_dot(a, p)")`).
-  */
-object VectorExprs {
-  def register(s: SparkSession): Unit = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_dot", exprs => FloatDotProduct(exprs(0), exprs(1)), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "double_dot", exprs => FloatDoubleDotProduct(exprs(0), exprs(1)), "built-in")
-  }
 }

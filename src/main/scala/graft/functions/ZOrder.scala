@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -62,11 +61,4 @@ object MortonInterleave {
 
   /** z = even bits from x, odd bits from y (static: called from codegen). */
   def interleave(x: Long, y: Long): Long = spread(x) | (spread(y) << 1)
-}
-
-/** Registration for SQL-expression use (`expr("morton(x, y)")`). */
-object ZOrderExprs {
-  def register(s: SparkSession): Unit =
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "morton", exprs => MortonInterleave(exprs(0), exprs(1)), "built-in")
 }

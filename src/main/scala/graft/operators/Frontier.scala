@@ -87,7 +87,6 @@ object Frontier {
     * (pmi desc, bigram) — a total order, no bounded-size global sort.
     */
   def collocations(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.BigramGenerator.register(s)
     val docs = Tables.documents(s, dir)
       // r22 (guide §4): array_remove(arr, '') ≡ filter(arr, t -> t != '')
       // when the array has no null elements (split never yields any) —
@@ -662,7 +661,6 @@ object Frontier {
     * counts grow ×K (each clone meets the same partners).
     */
   private[graft] def intervalOverlapImpl(partA: DataFrame, partB: DataFrame): DataFrame = {
-    graft.functions.BoundsExprs.register(partA.sparkSession)
     val nq = 64 // quantile buckets; raise with data volume (window partitions are ~|points|/nq)
     def side(src: DataFrame, prefix: String): DataFrame =
       src

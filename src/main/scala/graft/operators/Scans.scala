@@ -404,7 +404,6 @@ object Scans {
   private val embedSnapRoots = scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
   def snapshotEmbed(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     graft.SessionToken.sweep(embedSnapRoots)(graft.SessionToken.deleteDir)
     val root = embedSnapRoots.getOrElseUpdate((graft.SessionToken(s), dir), {
       val r = java.nio.file.Files.createTempDirectory("graft_snap_emb").toString

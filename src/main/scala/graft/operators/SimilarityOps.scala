@@ -53,7 +53,6 @@ object SimilarityOps {
 
   /** Brute-force cosine top-10 against the vec_id=0 query vector. */
   def simTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val emb = Tables.embeddings(s, dir)
     // headOption, not head: a source with no vec_id=0 (routine on an
     // empty/filtered 100 TB slice) means "no query vector", and the
@@ -96,7 +95,6 @@ object SimilarityOps {
     * 10-value label, but the dataflow is identical.
     */
   def simPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     // norms are per-vector: compute them once before the pair join
     // (O(n·d)) instead of per candidate pair (O(n²·d)); bit-identical
     // to the oracle's in-expression norms since the fold is the same.
@@ -124,13 +122,12 @@ object SimilarityOps {
     * the last ulp.
     */
   def knnGraph(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     knnGraphImpl(Tables.embeddings(s, dir))
   }
 
   /** Dataflow body over any (vec_id, label, embedding) frame — the
     * ScaleRehearsal blocked-self-join leg runs exactly this code on an
-    * inflated frame (caller registers VectorExprs on its session).
+    * inflated frame (the caller's session loads graft.plans.GraftExtensions).
     */
   def knnGraphImpl(emb: DataFrame): DataFrame = {
     val a = emb
@@ -156,7 +153,6 @@ object SimilarityOps {
     * smallest id in the near-dup relation).
     */
   def dedupEmbed(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val a = Tables.embeddings(s, dir)
       .select(col("vec_id").as("v1"), col("label"), col("embedding").as("e1"))
       .withColumn("na", normExpr("e1"))
@@ -176,7 +172,6 @@ object SimilarityOps {
     * tiebreak. Probe side broadcasts.
     */
   def knnLabel(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val probes = Tables.embeddings(s, dir).where(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
       .withColumn("np", normExpr("pe"))
@@ -230,7 +225,6 @@ object SimilarityOps {
     * containment in the brute-force ranking.
     */
   def simAnnLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val planes: Array[Array[Double]] = Array.tabulate(8, 64) { (j, d) =>
       val h = (2654435761L * (j * 64 + d + 1)) & 0xffffffffL
       h.toDouble / 2147483648.0 - 1.0
@@ -295,7 +289,6 @@ object SimilarityOps {
     * collect — no second `head` job.
     */
   def simAnnIvf(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExprs.register(s)
     val emb = Tables.embeddings(s, dir)
     val collectedRows = emb.where(col("vec_id") < 16)
       .orderBy("vec_id").select(col("vec_id"), col("embedding"))
@@ -382,7 +375,6 @@ object SimilarityOps {
     // amax>0 filter (the §4.4 pattern), so each row paid the 64-lambda
     // scan twice; the codegen form keeps the duplication cheap and the
     // whole quantize/dot pipeline inside whole-stage codegen.
-    graft.functions.QuantExprs.register(s)
     val q = Tables.embeddings(s, dir)
       .withColumn("amax", expr("abs_max(embedding)"))
       // amax > 0 alone does NOT exclude a NaN component (Spark orders

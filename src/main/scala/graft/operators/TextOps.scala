@@ -86,7 +86,6 @@ object TextOps {
     // argument, TextExprSpec the adversarial pin. This query ran FOUR
     // interpreted IN-lambdas over every token of every document; each
     // is now one codegen hash-probe pass.
-    graft.functions.TextExprs.register(s)
     def ratio(ws: Seq[String]) =
       s"CAST(in_count(toks, array${sqlList(ws)}) AS DOUBLE) / size(toks)"
     Tables.documents(s, dir)
@@ -117,7 +116,6 @@ object TextOps {
     * pieces), average token length, stopword ratio, composite score.
     */
   def textQuality(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExprs.register(s) // in_count — see textLangId's note
     Tables.documents(s, dir)
       .withColumn("toks", split(col("text"), " "))
       .withColumn("n_toks", size(col("toks")).cast("int"))
@@ -161,7 +159,6 @@ object TextOps {
     // and spec-pinned on unicode/supplementary/empty/null tokens in
     // TextExprSpec, since the ASCII-only fixture can never exercise
     // the risky branch through the oracle).
-    graft.functions.TextExprs.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), expr("fp_hash(split(text, ' '))").as("fp"))
       .orderBy("doc_id")
@@ -172,7 +169,6 @@ object TextOps {
     * directly, no intermediate array), then global top-20.
     */
   def udtfBigrams(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.BigramGenerator.register(s)
     Tables.documents(s, dir)
       .select(expr("bigrams(split(text, ' '))"))
       .groupBy(col("bigram"))

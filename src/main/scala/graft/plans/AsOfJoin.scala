@@ -144,14 +144,15 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** User-facing API for the native as-of join. */
+/** User-facing API for the native as-of join. The session must load
+  * [[GraftExtensions]] (or have run its install), which plans the node
+  * through [[AsOfStrategy]].
+  */
 object AsOf {
   def join(leftDf: DataFrame, rightDf: DataFrame,
            leftKey: String, rightKey: String,
            leftTs: String, rightTs: String): DataFrame = {
     val s = leftDf.sparkSession
-    if (!s.experimental.extraStrategies.contains(AsOfStrategy))
-      s.experimental.extraStrategies = s.experimental.extraStrategies :+ AsOfStrategy
     val lp = leftDf.queryExecution.analyzed
     val rp0 = rightDf.queryExecution.analyzed
     // SELF-JOIN dedup (what Spark's analyzer does for Join nodes and a

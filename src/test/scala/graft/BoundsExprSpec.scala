@@ -66,7 +66,6 @@ class BoundsExprSpec extends SparkSpec {
 
   /** (id -> value-or-null) for both forms under the current session conf. */
   private def bothForms(): Map[Int, (Option[Int], Option[Int])] = {
-    graft.functions.BoundsExprs.register(spark)
     val df = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(fixtureRows).asJava),
       schema)
@@ -111,7 +110,6 @@ class BoundsExprSpec extends SparkSpec {
   }
 
   test("documented domain edge: null probe is the one divergence (HOF 0, lb_count NULL)") {
-    graft.functions.BoundsExprs.register(spark)
     val df = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(
         Seq(Row(0, Seq[java.lang.Double](1.0, 2.0), null)): Seq[Row]).asJava),

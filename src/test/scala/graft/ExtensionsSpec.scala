@@ -1,231 +1,88 @@
 package graft
 
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
-import graft.plans.DotProductFusion
+import graft.plans.{AsOfJoinExec, AsOfStrategy, GraftExtensions}
 
-/** Catalyst extension showcases: the DotProductFusion optimizer rule
-  * and the BigramGenerator table function.
+/** The install point for Graft's Catalyst surface: GraftExtensions on
+  * the sessions Graft builds, SparkEntry's idempotent install on the
+  * others, and the BigramGenerator table function it carries.
   */
 class ExtensionsSpec extends SparkSpec {
 
-  test("DotProductFusion rewrites the HOF dot product into float_dot") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ DotProductFusion
-    try {
-      val df = graft.sources.Tables.embeddings(spark, sf)
-        .withColumn("d", expr(
-          "aggregate(zip_with(embedding, embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"))
-      val optimized = df.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("float_dot"), optimized)
+  private val arities = Seq("float_dot" -> 2, "double_dot" -> 2, "abs_max" -> 1,
+    "sq8_quantize" -> 2, "long_dot" -> 2, "in_count" -> 2, "fp_hash" -> 1,
+    "bigrams" -> 1, "lb_count" -> 2, "morton" -> 2)
 
-      // and the rewrite is value-identical to the unfused form
-      graft.functions.VectorExprs.register(spark)
-      val direct = graft.sources.Tables.embeddings(spark, sf)
-        .withColumn("d", expr("float_dot(embedding, embedding)"))
-      val a = df.select(col("vec_id"), col("d")).orderBy("vec_id").collect()
-      val b = direct.select(col("vec_id"), col("d")).orderBy("vec_id").collect()
-      assert(a.sameElements(b))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == DotProductFusion)
-    }
-  }
+  private def resolves(s: SparkSession, name: String): Boolean =
+    s.sessionState.functionRegistry.functionExists(FunctionIdentifier(name))
 
-  test("float_dot matches HOF semantics on ragged and null-element inputs") {
-    import spark.implicits._
-    graft.functions.VectorExprs.register(spark)
-    val df = Seq(
-      (1L, Seq(1.0f, 2.0f), Seq(3.0f, 4.0f)),          // equal lengths → 11.0
-      (2L, Seq(1.0f, 2.0f, 5.0f), Seq(3.0f, 4.0f)),    // ragged → HOF gives NULL
-      (3L, Seq.empty[Float], Seq.empty[Float])          // empty → 0.0
-    ).toDF("id", "a", "b")
-    val hofExpr = "aggregate(zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-      "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    val rows = df.select(col("id"), expr(hofExpr).as("hof"), expr("float_dot(a, b)").as("fd"))
-      .orderBy("id").collect()
-    rows.foreach { r =>
-      assert(r.isNullAt(1) == r.isNullAt(2), s"null disagreement at id=${r.getLong(0)}")
-      if (!r.isNullAt(1)) assert(r.getDouble(1) == r.getDouble(2))
-    }
-    // null element → NULL, matching zip_with/aggregate null propagation
-    val withNull = Seq((1L, Seq(Some(1.0f), None), Seq(Some(2.0f), Some(3.0f))))
-      .toDF("id", "a", "b")
-      .select(expr(hofExpr).as("hof"), expr("float_dot(a, b)").as("fd"))
-      .collect().head
-    assert(withNull.isNullAt(0) && withNull.isNullAt(1))
-  }
-
-  test("fusion does NOT fire on non-float arrays or different lambdas") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ DotProductFusion
-    try {
-      // double arrays → no rewrite
-      val dbl = graft.sources.Tables.embeddings(spark, sf)
-        .withColumn("e2", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .withColumn("d", expr(
-          "aggregate(zip_with(e2, e2, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
-            "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"))
-      assert(!dbl.queryExecution.optimizedPlan.toString.contains("float_dot"))
-      // sum-of-elements (not a product lambda) → no rewrite
-      val sums = graft.sources.Tables.embeddings(spark, sf)
-        .withColumn("d", expr(
-          "aggregate(embedding, CAST(0 AS DOUBLE), (acc, v) -> acc + v)"))
-      assert(!sums.queryExecution.optimizedPlan.toString.contains("float_dot"))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == DotProductFusion)
-    }
-  }
-
-  test("BandedRangeJoin rewrites the pure time-range theta join into an equi join") {
-    def naive = {
-      val e = graft.sources.Tables.events(spark, sf)
-      val a = e.where(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("ts").as("p_ts"))
-      val b = e.where(col("event_type") === "signup")
-        .select(col("event_id").as("s_id"), col("ts").as("s_ts"))
-      a.join(b, col("s_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("s_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"))
-    }
-    val before = naive.orderBy("p_id", "s_id").collect()
-    assert(naive.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"),
-      "without the rule the theta join must be a nested loop")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.BandedRangeJoin
-    try {
-      val rewritten = naive
-      val physical = rewritten.queryExecution.executedPlan.toString
-      assert(!physical.contains("BroadcastNestedLoopJoin") && !physical.contains("CartesianProduct"),
-        "rule must produce an equi-joinable plan:\n" + physical)
-      assert(rewritten.queryExecution.optimizedPlan.toString.contains("graft_band_bin"),
-        "bin columns must appear in the rewritten plan")
-      val after = rewritten.orderBy("p_id", "s_id").collect()
-      assert(after.sameElements(before), "rewrite must be result-identical")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.BandedRangeJoin)
-    }
-  }
-
-  test("BandedRangeJoin: boundary-heavy random timestamps — rewrite is result-identical") {
-    // the fixture can't be trusted to contain exact band-edge pairs, so
-    // construct them: partners at exactly ±600 s (inclusive boundary, must
-    // match), ±601 s (just outside, must not), anchors snapped onto 10-min
-    // bin multiples (where a bin-assignment off-by-one would live), and
-    // NULL timestamps (must never match). The nested-loop result before
-    // the rule is the semantics; the banded plan after must reproduce it.
-    val rnd = new scala.util.Random(7)
-    val base = 1700000000L
-    val aSecs = (1 to 40).map { _ =>
-      val t = base + rnd.nextInt(36000)
-      if (rnd.nextInt(3) == 0) t - (t % 600) else t // frequent bin-edge landings
-    }
-    val bSecs = (1 to 40).map(_ => base + rnd.nextInt(36000)) ++
-      aSecs.take(5).flatMap(t => Seq(t + 600, t - 600, t + 601, t - 601))
-    import spark.implicits._
-    val a = aSecs.zipWithIndex.map { case (t, i) => (i.toLong, Some(t)) }
-      .:+((999L, Option.empty[Long])).toDF("p_id", "p_sec")
-      .select(col("p_id"), timestamp_seconds(col("p_sec")).as("p_ts"))
-    val b = bSecs.zipWithIndex.map { case (t, i) => (i.toLong, Some(t)) }
-      .:+((998L, Option.empty[Long])).toDF("s_id", "s_sec")
-      .select(col("s_id"), timestamp_seconds(col("s_sec")).as("s_ts"))
-    def joined = a.join(b,
-      col("s_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("s_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"))
-      .select("p_id", "s_id")
-    val before = joined.orderBy("p_id", "s_id").collect()
-    assert(joined.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.BandedRangeJoin
-    try {
-      val rewritten = joined
-      assert(rewritten.queryExecution.optimizedPlan.toString.contains("graft_band_bin"))
-      val after = rewritten.orderBy("p_id", "s_id").collect()
-      assert(after.sameElements(before), "banded rewrite diverged on boundary data")
-      // the constructed inclusive-boundary pairs must actually be present
-      val matched = before.map(r => (r.getLong(0), r.getLong(1))).toSet
-      aSecs.take(5).zipWithIndex.foreach { case (t, i) =>
-        val plus = bSecs.indexOf(t + 600).toLong
-        assert(matched.contains((i.toLong, plus)), s"exact +600s boundary pair $i missing")
-      }
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.BandedRangeJoin)
-    }
-  }
-
-  test("BandedRangeJoin does NOT fire when an equi conjunct already exists") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.BandedRangeJoin
-    try {
-      val e = graft.sources.Tables.events(spark, sf)
-      val a = e.where(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-      val b = e.where(col("event_type") === "signup")
-        .select(col("event_id").as("s_id"), col("user_id").as("s_user"), col("ts").as("s_ts"))
-      val j = a.join(b, col("p_user") === col("s_user") &&
-        col("s_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("s_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"))
-      assert(!j.queryExecution.optimizedPlan.toString.contains("graft_band_bin"),
-        "equi-keyed range joins must keep the user's key, not band")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.BandedRangeJoin)
-    }
-  }
-
-  test("BandedRangeJoin: pre-epoch timestamps (negative micros) — no pair missed by trunc binning") {
-    // UnixMicros is negative before 1970, and IntegralDivide truncates
-    // toward ZERO while bin semantics reason in floor terms — the zero
-    // bin is double-width (-w, w) and all boundaries are >= w apart, so
-    // a <=w step still crosses at most one boundary and the ±1 probe
-    // fan must cover every true pair. That argument lives only in
-    // review notes unless data straddles the epoch; this pins it.
-    val rnd = new scala.util.Random(42)
-    val w = 600 // seconds; INTERVAL 10 MINUTES
-    // cluster points around the epoch and around ±w multiples, the
-    // exact trunc/floor disagreement zone, plus inclusive boundaries
-    val aSecs = (1 to 30).map(_ => (rnd.nextInt(4 * w) - 2 * w).toLong) ++
-      Seq(-w.toLong, -1L, 0L, 1L, w.toLong)
-    val bSecs = (1 to 30).map(_ => (rnd.nextInt(4 * w) - 2 * w).toLong) ++
-      aSecs.take(8).flatMap(t => Seq(t - w, t + w, t - w - 1, t + w + 1))
-    import spark.implicits._
-    val a = aSecs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("p_id", "p_sec")
-      .select(col("p_id"), timestamp_seconds(col("p_sec")).as("p_ts"))
-    val b = bSecs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("s_id", "s_sec")
-      .select(col("s_id"), timestamp_seconds(col("s_sec")).as("s_ts"))
-    def joined = a.join(b,
-      col("s_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("s_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"))
-      .select("p_id", "s_id")
-    val before = joined.orderBy("p_id", "s_id").collect()
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.BandedRangeJoin
-    try {
-      val rewritten = joined
-      assert(rewritten.queryExecution.optimizedPlan.toString.contains("graft_band_bin"),
-        "the rule must fire on pre-epoch data too")
-      val after = rewritten.orderBy("p_id", "s_id").collect()
-      assert(after.sameElements(before), "banded rewrite lost or invented pre-epoch pairs")
-      // the brute-force ground truth, independent of Spark entirely
-      val want = (for {
-        (at, ai) <- aSecs.zipWithIndex
-        (bt, bi) <- bSecs.zipWithIndex
-        if math.abs(at - bt) <= w
-      } yield (ai.toLong, bi.toLong)).sorted
-      assert(before.map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted == want)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == graft.plans.BandedRangeJoin)
-    }
-  }
+  /** AsOfStrategy entries the session's planner runs: the injected one
+    * plus any the install added. */
+  private def asOfStrategies(s: SparkSession): Int =
+    s.sessionState.planner.strategies.count(_ == AsOfStrategy)
 
   test("BigramGenerator emits n-1 bigrams per doc and handles short docs") {
     import spark.implicits._
-    graft.functions.BigramGenerator.register(spark)
     val df = Seq("a b c d", "solo", "x y").toDF("text")
       .select(expr("bigrams(split(text, ' '))"))
     assert(df.collect().map(_.getString(0)).toSeq == Seq("a b", "b c", "c d", "x y"))
+  }
+
+  test("every table function resolves on the session and on its newSession()") {
+    assert(GraftExtensions.functions.map(_._1.funcName).sorted == arities.map(_._1).sorted)
+    for (s <- Seq(spark, spark.newSession()); (name, _) <- arities)
+      assert(resolves(s, name), s"$name does not resolve")
+  }
+
+  test("a wrong argument count fails analysis with the function's name and arity") {
+    for ((name, arity) <- arities; n <- Seq(arity - 1, arity + 1)) {
+      val call = s"$name(${Seq.fill(n)("id").mkString(", ")})"
+      val e = intercept[AnalysisException](spark.range(1).selectExpr(call))
+      assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), s"$call: ${e.getMessage}")
+      assert(e.getMessage.contains(s"`$name` requires $arity parameters") &&
+        e.getMessage.contains(s"actual number is $n"), s"$call: ${e.getMessage}")
+    }
+  }
+
+  test("SparkEntry's install fixes a session whose Graft functions were dropped") {
+    val s = spark.newSession()
+    arities.foreach { case (name, _) =>
+      s.sessionState.functionRegistry.dropFunction(FunctionIdentifier(name)) }
+    assert(arities.forall { case (name, _) => !resolves(s, name) })
+    intercept[AnalysisException](s.range(1).selectExpr("float_dot(array(1f), array(1f))"))
+    val injected = asOfStrategies(s)
+
+    val dedup = SparkEntry.queries("q_dedup_embed")(s, sf)
+    dedup.queryExecution.assertAnalyzed()
+    assert(arities.forall { case (name, _) => resolves(s, name) })
+    assert(asOfStrategies(s) == injected + 1, "the install must add AsOfStrategy")
+    val asof = SparkEntry.queries("q_join_asof_custom")(s, sf)
+    asof.queryExecution.assertAnalyzed()
+    assert(asof.queryExecution.sparkPlan.collect { case j: AsOfJoinExec => j }.size == 1,
+      asof.queryExecution.sparkPlan.toString)
+  }
+
+  test("running the install twice adds AsOfStrategy once") {
+    val s = spark.newSession()
+    s.sessionState.functionRegistry.dropFunction(FunctionIdentifier("morton"))
+    val injected = asOfStrategies(s)
+    GraftExtensions.install(s)
+    GraftExtensions.install(s)
+    assert(asOfStrategies(s) == injected + 1)
+  }
+
+  test("on a session built with the extension the install adds nothing") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    def builders = arities.map { case (name, _) =>
+      registry.lookupFunctionBuilder(FunctionIdentifier(name)).get }
+    val before = builders
+    val injected = asOfStrategies(s)
+    GraftExtensions.install(s)
+    assert(injected == 1 && asOfStrategies(s) == 1)
+    assert(builders.zip(before).forall { case (a, b) => a eq b },
+      "the install must not re-register the extension's functions")
   }
 }

@@ -15,15 +15,10 @@ class GraftSessionSpec extends AnyFunSuite {
     val m = GraftSession.confs("7").toMap
     assert(m("spark.sql.shuffle.partitions") == "7",
       "shuffle parallelism must track the cpu argument (scale-adaptive, not a constant)")
-    // env-parameterized defaults (OPTIMIZATION_r21.md §4); if the
-    // driver env ever sets these the assertions still hold unless the
-    // DEFAULT itself drifts — which is what this pin is for
-    if (!sys.env.contains("SPARK_GRAFT_AQE"))
-      assert(m("spark.sql.adaptive.enabled") == "true")
-    if (!sys.env.contains("SPARK_GRAFT_PREFER_SMJ"))
-      assert(m("spark.sql.join.preferSortMergeJoin") == "false")
-    if (!sys.env.contains("SPARK_GRAFT_SHJ_LOCAL"))
-      assert(m("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == "64m")
+    // the fixed values OPTIMIZATION_r21.md §4 measured; no env overrides them
+    assert(m("spark.sql.adaptive.enabled") == "true")
+    assert(m("spark.sql.join.preferSortMergeJoin") == "false")
+    assert(m("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == "64m")
     assert(m("spark.sql.session.timeZone") == "UTC")
     assert(m("spark.ui.enabled") == "false")
     assert(m.size == 6, s"unexpected conf-key set: ${m.keys.toSeq.sorted}")

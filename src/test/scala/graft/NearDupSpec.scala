@@ -218,7 +218,6 @@ class NearDupSpec extends SparkSpec {
     val quant = q("q_sim_quantized").collect().map(_.getLong(0)).toSeq
     assert(quant.length == 10)
     // exact inner-product top-10 (same probe, same dot, no quantization)
-    graft.functions.VectorExprs.register(spark)
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val probeVec = emb.where(col("vec_id") === 0).head.getSeq[Float](1).toArray
     val exact = emb.where(col("vec_id") =!= 0)

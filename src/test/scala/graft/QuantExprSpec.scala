@@ -78,7 +78,6 @@ class QuantExprSpec extends SparkSpec {
   }
 
   private def absMaxBoth(): Map[Int, (Option[Long], Option[Long])] = {
-    graft.functions.QuantExprs.register(spark)
     val out = mkDf(absMaxRows, floatArrSchema).select(col("id"),
       expr("abs_max(a)").as("fast"),
       expr("array_max(transform(a, x -> abs(CAST(x AS DOUBLE))))").as("ref"))
@@ -150,7 +149,6 @@ class QuantExprSpec extends SparkSpec {
   }
 
   private def quantBoth(): Map[Int, (Option[Seq[Option[Long]]], Option[Seq[Option[Long]]])] = {
-    graft.functions.QuantExprs.register(spark)
     val out = mkDf(quantRows, quantSchema).select(col("id"),
       expr("sq8_quantize(a, amax)").as("fast"),
       expr("transform(a, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0D / amax + 0.5D) AS BIGINT))")
@@ -186,7 +184,6 @@ class QuantExprSpec extends SparkSpec {
   }
 
   test("sq8_quantize replays floor's SATURATING double→BIGINT conversion exactly") {
-    graft.functions.QuantExprs.register(spark)
     // Spark's floor(double) RETURNS BIGINT via the Java (long) cast —
     // saturating, never throwing, even under ANSI (measured r22: a
     // direct CAST(1e300D AS BIGINT) throws [CAST_OVERFLOW], but
@@ -209,7 +206,6 @@ class QuantExprSpec extends SparkSpec {
     // the one deliberate divergence from the HOF (Sq8Quantize's input
     // contract): q_sim_quantized guards amax > 0, but the function is
     // registered session-wide, so the corner is pinned here
-    graft.functions.QuantExprs.register(spark)
     val rows = Seq(
       Row(0, Seq[java.lang.Float](1f, null, -2f), null),
       Row(1, null, null))
@@ -262,7 +258,6 @@ class QuantExprSpec extends SparkSpec {
   }
 
   private def longBoth(): Map[Int, (Option[Long], Option[Long])] = {
-    graft.functions.QuantExprs.register(spark)
     val out = mkDf(longRows, longSchema).select(col("id"),
       expr("long_dot(a, b)").as("fast"),
       expr("aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v)").as("ref"))
@@ -291,7 +286,6 @@ class QuantExprSpec extends SparkSpec {
   }
 
   test("long_dot replays ANSI's LOUD integer overflow (throws iff the HOF throws)") {
-    graft.functions.QuantExprs.register(spark)
     def runs(rows: Seq[Row], e: String): Boolean =
       try { mkDf(rows, longSchema).select(expr(e)).collect(); true }
       catch { case _: Throwable => false }

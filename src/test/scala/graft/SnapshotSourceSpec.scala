@@ -40,7 +40,6 @@ class SnapshotSourceSpec extends SparkSpec {
     // element-exact equality, including vector order
     assert(v2.exceptAll(direct).count() == 0 && direct.exceptAll(v2).count() == 0)
     // arrays compose with the codegen'd vector expression
-    graft.functions.VectorExprs.register(spark)
     val n = v2.select(expr("float_dot(embedding, embedding)").as("d"))
       .where(col("d") >= 0).count()
     assert(n == direct.count())

@@ -4,12 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all specs: one local session per suite,
-  * harness-shaped config (UTC, small shuffle partitions, UI off).
+  * harness-shaped config (UTC, small shuffle partitions, UI off), with
+  * GraftExtensions loaded as GraftSession loads it.
   */
 trait SparkSpec extends AnyFunSuite {
   val sf: String = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = SparkSession.builder()
+    .withExtensions(new graft.plans.GraftExtensions)
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")

@@ -58,7 +58,6 @@ class VectorExprSpec extends SparkSpec {
 
   /** (id -> bits-or-null) for both forms under the current session conf. */
   private def bothForms(): Map[Int, (Option[Long], Option[Long])] = {
-    graft.functions.VectorExprs.register(spark)
     val df = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(fixtureRows).asJava),
       schema)
@@ -144,7 +143,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   private def bothMixedForms(): Map[Int, (Option[Long], Option[Long])] = {
-    graft.functions.VectorExprs.register(spark)
     val df = spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(mixedRows).asJava),
       mixedSchema)
@@ -190,7 +188,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("unrolled LSH signature == the nested-HOF fold it replaced, bit for bit") {
-    graft.functions.VectorExprs.register(spark)
     // the production planes, verbatim (SimilarityOps.simAnnLsh)
     val planes: Array[Array[Double]] = Array.tabulate(8, 64) { (j, d) =>
       val h = (2654435761L * (j * 64 + d + 1)) & 0xffffffffL

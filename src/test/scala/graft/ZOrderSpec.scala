@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{MortonInterleave, ZOrderExprs}
+import graft.functions.MortonInterleave
 
 /** Morton (Z-order) interleave: bit-exactness, codegen parity, and the
   * layout property that makes it worth having — sorting by the z-value
@@ -38,7 +38,6 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("codegen path agrees with eval, null in -> null out") {
-    ZOrderExprs.register(spark)
     val rows = Seq((3L, 5L), (0L, 0L), (0xFFFFFFFFL, 0xFFFFFFFFL), (123456789L, 987654321L))
     val got = rows.toDF("x", "y").select(expr("morton(x, y)")).as[Long].collect()
     assert(got.toSeq == rows.map { case (x, y) => MortonInterleave.interleave(x, y) })
