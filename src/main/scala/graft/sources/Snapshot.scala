@@ -358,32 +358,37 @@ object Snapshot {
     * UPDATE) would silently inherit the parent's stale files — wrong
     * data, not a degraded mode.
     *
-    * This returns each partition's (row count, hash sum) of `pinned`
-    * from ONE job with no shuffle: the table signature adds them up,
-    * and a partition's own signature (same format, its own rows and
-    * sum) is what [[export]] matches against the parent's files. The
-    * table string is byte-identical to the earlier
+    * This returns each partition's (row count, hash sum) of every
+    * table in `pinned`, from ONE job for all tables of an export, with
+    * no shuffle: the job runs over the union of the tables' hash RDDs,
+    * each task tagged with its table's index and its partition's. A
+    * table signature adds its partitions up, and a partition's own
+    * signature (same format, its own rows and sum) is what [[export]]
+    * matches against the parent's files. The table string is
+    * byte-identical to the earlier
     * `sum(xxhash64(struct(*)).cast("decimal(38,0)"))` form: each task
     * carries its sum as a 128-bit two's-complement pair, rebuilt
     * exactly on the driver, so no sum wraps.
     *
-    * Columns xxhash64 cannot consume (maps) fail analysis: None, and
-    * the caller degrades to a no-fingerprint signature that never
-    * matches — such tables are always rewritten (conservative, never
-    * wrong).
+    * Columns xxhash64 cannot consume (maps) fail analysis: that table's
+    * result is None, and the caller degrades to a no-fingerprint
+    * signature that never matches — such tables are always rewritten
+    * (conservative, never wrong).
     */
-  private def partitionSums(pinned: DataFrame): Option[Seq[(Long, java.math.BigInteger)]] = {
+  private def partitionSums(s: SparkSession, pinned: Seq[DataFrame])
+      : Seq[Option[Seq[(Long, java.math.BigInteger)]]] = {
     import org.apache.spark.sql.functions.{xxhash64, struct, col}
-    // backtick-quote each column name: bare col(name) RE-PARSES the
-    // name, so a column literally named "a.b" would resolve as
-    // struct-field access — fingerprinting the wrong data (silent
-    // stale inheritance) or failing analysis for no reason
-    val cols = pinned.columns.map(n => col(s"`${n.replace("`", "``")}`"))
-    val hashes =
-      try Some(pinned.select(xxhash64(struct(cols: _*))))
+    val hashes = pinned.map { p =>
+      // backtick-quote each column name: bare col(name) RE-PARSES the
+      // name, so a column literally named "a.b" would resolve as
+      // struct-field access — fingerprinting the wrong data (silent
+      // stale inheritance) or failing analysis for no reason
+      val cols = p.columns.map(n => col(s"`${n.replace("`", "``")}`"))
+      try Some(p.select(xxhash64(struct(cols: _*))).queryExecution.toRdd)
       catch { case _: org.apache.spark.sql.AnalysisException => None }
-    hashes.map { h =>
-      h.queryExecution.toRdd.mapPartitionsWithIndex { (i, it) =>
+    }
+    val tagged = hashes.zipWithIndex.collect { case (Some(rdd), t) =>
+      rdd.mapPartitionsWithIndex { (i, it) =>
         var rows, hi, lo = 0L
         while (it.hasNext) {
           val x = it.next().getLong(0)
@@ -393,10 +398,18 @@ object Snapshot {
           lo = sum
           rows += 1
         }
-        Iterator((i, rows, hi, lo))
-      }.collect().sortBy(_._1).toSeq.map { case (_, rows, hi, lo) =>
-        rows -> java.math.BigInteger.valueOf(hi).shiftLeft(64)
-          .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))
+        Iterator((t, i, rows, hi, lo))
+      }
+    }
+    val byTable =
+      if (tagged.isEmpty) Map.empty[Int, Array[(Int, Int, Long, Long, Long)]]
+      else s.sparkContext.union(tagged).collect().groupBy(_._1)
+    hashes.indices.map { t =>
+      hashes(t).map { _ =>
+        byTable.getOrElse(t, Array.empty).sortBy(_._2).toSeq.map { case (_, _, rows, hi, lo) =>
+          rows -> java.math.BigInteger.valueOf(hi).shiftLeft(64)
+            .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))
+        }
       }
     }
   }
@@ -434,9 +447,11 @@ object Snapshot {
     * signature is unchanged are linked to the parent's files instead
     * of rewritten (incremental transfer).
     *
-    * A flat table whose signature differs is inherited FILE by file.
-    * The DataFrame is planned once and its row RDD pinned, so the
-    * signature job and the write see the same rows in partition `i`.
+    * Every table's DataFrame is planned once and its row RDD pinned,
+    * then ONE signature job signs the partitions of all tables
+    * ([[partitionSums]]), and each table's write sees the same rows in
+    * partition `i` as that job. A flat table whose signature differs is
+    * inherited FILE by file.
     * A non-empty partition whose signature equals a parent file's links
     * to that file; each parent file stands for at most one partition, so
     * two identical partitions still get two files. The remaining
@@ -481,10 +496,19 @@ object Snapshot {
     parent.foreach(requireSafeSegment("snapshot parent tag", _))
     tables.keys.foreach(requireSafeSegment("snapshot table name", _))
     val parentManifest = parent.map(readManifest(s, root, _))
-    val entries = tables.map { case (name, df) =>
-      name -> exportTable(s, root, tag, name, df, partitionBy.getOrElse(name, Nil),
-        parentManifest.flatMap(_.tables.get(name)))
+    // pin the partitions: one planned RDD per table feeds the signature
+    // job and the write, so partition i holds the same rows in both
+    val named = tables.toSeq
+    val rdds = named.map(_._2.queryExecution.toRdd)
+    val pinned = named.zip(rdds).map { case ((_, df), rdd) =>
+      GraftShim.ofInternalRows(df.sparkSession, rdd, df.schema)
     }
+    val sums = partitionSums(s, pinned)
+    val entries = named.indices.map { i =>
+      val name = named(i)._1
+      name -> exportTable(s, root, tag, name, pinned(i), rdds(i), sums(i),
+        partitionBy.getOrElse(name, Nil), parentManifest.flatMap(_.tables.get(name)))
+    }.toMap
     exportRaceHook() // test seam: the pre-commit window a concurrent retain can land in
     // OCC commit: the generation read and the preconditioned swap sit in
     // one locked region (in-process writers serialize on the lock; a
@@ -545,19 +569,17 @@ object Snapshot {
     }
   }
 
-  /** One table of [[export]]: inherit the parent's entry whole, link
-    * unchanged partitions file by file, or write the whole table.
+  /** One table of [[export]], given its pinned DataFrame over `rdd` and
+    * its [[partitionSums]] result: inherit the parent's entry whole,
+    * link unchanged partitions file by file, or write the whole table.
     */
   private def exportTable(s: SparkSession, root: String, tag: String, name: String,
-                          df: DataFrame, partCols: Seq[String],
+                          pinned: DataFrame,
+                          rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                          sums: Option[Seq[(Long, java.math.BigInteger)]], partCols: Seq[String],
                           parentEntry: Option[TableEntry]): TableEntry = {
-    // pin the partitions: one planned RDD feeds the signature job and
-    // the write, so partition i holds the same rows in both
-    val rdd = df.queryExecution.toRdd
-    val pinned = GraftShim.ofInternalRows(df.sparkSession, rdd, df.schema)
-    val sums = partitionSums(pinned)
     val rows = sums.fold(rdd.count())(_.map(_._1).sum)
-    def sigOf(n: Long, content: String) = s"${signatureOf(df.schema, n)}:$content"
+    def sigOf(n: Long, content: String) = s"${signatureOf(pinned.schema, n)}:$content"
     val sig = sigOf(rows, sums match {
       case None => s"nohash-${java.util.UUID.randomUUID()}"
       case Some(_) if rows == 0 => "empty"
@@ -565,7 +587,7 @@ object Snapshot {
     })
     parentEntry.filter(_.signature == sig).getOrElse {
       def freshDir() = s"$root/$tag/$name/g-${java.util.UUID.randomUUID().toString.take(8)}"
-      val schemaJson = Some(df.schema.json)
+      val schemaJson = Some(pinned.schema.json)
       val granular =
         if (partCols.nonEmpty || rows == 0) None
         else sums.flatMap { ps =>
@@ -660,20 +682,30 @@ object Snapshot {
     */
   private def listParquetRecursive(s: SparkSession, f: FileSystem,
                                    dir: Path): Seq[(FileEntry, Option[Long])] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(FileEntry, Option[Long])]
     // one conf clone for the whole listing — newHadoopConf() copies the
     // entire Hadoop conf, so cloning per file is O(files) wasted work
     // at manifest-build time on many-file snapshots
     val conf = hadoopConf(s)
-    val it = f.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
-        val (stats, rows) = footerStats(st.getPath, conf)
-        out += FileEntry(st.getPath.toString, st.getLen, stats) -> rows
-      }
-    }
-    out.sortBy(_._1.path).toSeq
+    leafFiles(f, dir).filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+      val (stats, rows) = footerStats(st.getPath, conf)
+      FileEntry(st.getPath.toString, st.getLen, stats) -> rows
+    }.sortBy(_._1.path)
+  }
+
+  /** Every file under `dir`, found by a recursive `listStatus` walk —
+    * the shape of Spark's own leaf-file listing. Hadoop's recursive
+    * file iterator would wrap each entry in a `LocatedFileStatus`, whose
+    * constructor loads the file's permission, owner and group; without
+    * native Hadoop the local filesystem answers that with one forked
+    * shell command per file, and neither caller uses block locations.
+    * Paths, `.crc`
+    * filtering (ChecksumFileSystem's `listStatus`) and modification
+    * times are the filesystem's own. A missing `dir` throws
+    * FileNotFoundException.
+    */
+  private def leafFiles(f: FileSystem, dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val (dirs, files) = f.listStatus(dir).toSeq.partition(_.isDirectory)
+    files ++ dirs.flatMap(d => leafFiles(f, d.getPath))
   }
 
   /** Harvest per-file min/max for int32/int64 columns from the parquet
@@ -933,9 +965,20 @@ object Snapshot {
     * comparison come from the same clock and skew cancels. If the
     * probe cannot be created the driver clock is the fallback, and
     * graceMillis must then also cover worst-case skew.
+    *
+    * The sweep lists `root` with a fork-free recursive `listStatus`
+    * walk ([[leafFiles]]): no `LocatedFileStatus` is built, so no
+    * file's permission is loaded (on a local filesystem without native
+    * Hadoop that load forks a shell command per file). The trade-off is
+    * on object stores: S3A's recursive file iterator is one flat listing,
+    * while the walk makes one LIST call per directory — O(tags × tables)
+    * calls for this layout. A root that does not exist holds nothing to
+    * sweep: the result is empty, as [[listTags]] and [[retain]] return.
     */
   def vacuum(s: SparkSession, root: String, graceMillis: Long = 0L): Seq[String] = {
     val f = fs(s, root)
+    val rootPath = new Path(root)
+    if (!f.exists(rootPath)) return Seq.empty
     val referenced = listTags(s, root).flatMap { t =>
       readManifest(s, root, t).tables.values.flatMap(_.files)
         .map(fe => f.makeQualified(new Path(fe.path)).toString)
@@ -949,17 +992,23 @@ object Snapshot {
         finally f.delete(probe, false)
       } catch { case _: Exception => System.currentTimeMillis() }
     val cutoff = now - graceMillis
-    val doomed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = f.listFiles(new Path(root), true)
-    while (it.hasNext) {
-      val st = it.next()
-      val q = f.makeQualified(st.getPath).toString
-      if (st.getPath.getName.endsWith(".parquet") && !referenced.contains(q)
-          && st.getModificationTime <= cutoff)
-        doomed += q
-    }
+    val doomed = leafFiles(f, rootPath).filter(st =>
+        st.getPath.getName.endsWith(".parquet") && st.getModificationTime <= cutoff)
+      .map(st => f.makeQualified(st.getPath).toString).filterNot(referenced)
     doomed.foreach(p => f.delete(new Path(p), false))
-    doomed.sorted.toSeq
+    doomed.sorted
+  }
+
+  /** Owner tag of a data path = first path segment under root.
+    * Counting parent hops instead would mis-resolve hive-partitioned
+    * layouts (root/<tag>/<table>/<col>=<val>/<file> → "<table>"), so a
+    * kept child's inherited files would fail to protect their parent
+    * tag and retention could delete still-referenced data.
+    */
+  private def ownerTagOf(f: FileSystem, rootQ: Path)(p: Path): Option[String] = {
+    var cur = f.makeQualified(p)
+    while (cur.getParent != null && cur.getParent != rootQ) cur = cur.getParent
+    if (cur.getParent == rootQ) Some(cur.getName) else None
   }
 
   /** Retention: keep the `n` newest tags — newest under
@@ -999,18 +1048,6 @@ object Snapshot {
     * unchanged: a second JVM's exporter is protected by its own
     * commit-time owner-tag check, not by this lock.)
     */
-  /** Owner tag of a data path = first path segment under root.
-    * Counting parent hops instead would mis-resolve hive-partitioned
-    * layouts (root/<tag>/<table>/<col>=<val>/<file> → "<table>"), so a
-    * kept child's inherited files would fail to protect their parent
-    * tag and retention could delete still-referenced data.
-    */
-  private def ownerTagOf(f: FileSystem, rootQ: Path)(p: Path): Option[String] = {
-    var cur = f.makeQualified(p)
-    while (cur.getParent != null && cur.getParent != rootQ) cur = cur.getParent
-    if (cur.getParent == rootQ) Some(cur.getName) else None
-  }
-
   def retain(s: SparkSession, root: String, n: Int): Seq[String] =
    SnapshotBatchWrite.commitLock.synchronized {
     // Under the commit lock (r18): retention deletes whole TAG dirs, so

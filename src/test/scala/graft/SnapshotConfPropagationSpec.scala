@@ -18,8 +18,8 @@ class GraftTestFs extends org.apache.hadoop.fs.FileSystem {
   import org.apache.hadoop.fs.permission.FsPermission
   import org.apache.hadoop.util.Progressable
 
-  private val local = new RawLocalFileSystem
-  private def toLocal(p: Path): Path = new Path("file", null, p.toUri.getPath)
+  protected val local = new RawLocalFileSystem
+  protected def toLocal(p: Path): Path = new Path("file", null, p.toUri.getPath)
   /** Copy eagerly (getPermission forces the lazy permission load while
     * the path is still file://) then re-scheme the path. */
   private def fromLocal(st: FileStatus): FileStatus =

@@ -28,6 +28,16 @@ class SnapshotFileGranularSpec extends SparkSpec {
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
+  /** The table signature in the earlier
+    * `sum(xxhash64(struct(*)).cast("decimal(38,0)"))` form, with its hash sum. */
+  private def sumForm(df: DataFrame): (String, java.math.BigInteger) = {
+    val cols = df.columns.map(n => col(s"`$n`"))
+    val old = df.select(xxhash64(struct(cols: _*)).cast("decimal(38,0)").as("h"))
+      .agg(count(lit(1)), sum(col("h"))).head
+    val total = old.getDecimal(1).toBigInteger
+    (s"${old.getLong(0)}:${df.schema.catalogString.hashCode}:$total", total)
+  }
+
   test("an append writes only the new partition; the other paths point into the parent") {
     val root = Files.createTempDirectory("snap_fg_append").toString
     val m1 = Snapshot.export(spark, Map("t" -> base), root, "t1")
@@ -129,16 +139,66 @@ class SnapshotFileGranularSpec extends SparkSpec {
   test("the table signature equals the decimal(38,0) sum form when the hash sum overflows a long") {
     val root = Files.createTempDirectory("snap_fg_sig").toString
     val df = rows(0, 3000, 3)
-    val cols = df.columns.map(n => col(s"`$n`"))
-    val old = df.select(xxhash64(struct(cols: _*)).cast("decimal(38,0)").as("h"))
-      .agg(count(lit(1)), sum(col("h"))).head
-    val total = old.getDecimal(1).toBigInteger
+    val (expected, total) = sumForm(df)
     assert(total.bitLength > 63, s"precondition: the hash sum $total must overflow a long")
-    val expected = s"${old.getLong(0)}:${df.schema.catalogString.hashCode}:$total"
     val m = Snapshot.export(spark, Map("t" -> df), root, "t1")
     assert(m.tables("t").signature == expected)
     // a table-level match still inherits the whole entry and writes nothing
     val m2 = Snapshot.export(spark, Map("t" -> df.repartition(5)), root, "t2", Some("t1"))
     assert(m2.tables("t") == m.tables("t"))
+  }
+
+  /** `body`'s result and the jobs it ran, counted by a SparkListener. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one signature job signs every table of an export") {
+    val root = Files.createTempDirectory("snap_fg_onejob").toString
+    val tables = Map("a" -> base, "b" -> rows(0, 300, 1), "c" -> rows(100, 2000, 3),
+      "d" -> rows(7, 50, 2))
+    Snapshot.export(spark, tables, root, "t1")
+    val (m2, jobs) = withJobCount(Snapshot.export(spark, tables, root, "t2", Some("t1")))
+    // all four inherit their parent entry whole: the signature job is the only job
+    assert(jobs == 1)
+    assert(m2.tables == Snapshot.readManifest(spark, root, "t1").tables)
+  }
+
+  test("signing tables together gives each the signature it gets alone") {
+    val root = Files.createTempDirectory("snap_fg_together").toString
+    val tables = Map(
+      "plain1" -> rows(0, 3000, 3),
+      "plain2" -> rows(5000, 700, 2),
+      "maps" -> rows(0, 400, 2).withColumn("m", map(lit("k"), col("v"))),
+      "empty" -> rows(0, 0, 2))
+    val together = Snapshot.export(spark, tables, root, "all").tables
+    // a map column cannot be hashed: its signature carries a fresh nonce
+    def stable(sig: String) = sig.replaceAll(":nohash-.*", ":nohash")
+    tables.foreach { case (name, df) =>
+      val alone = Snapshot.export(spark, Map(name -> df), root, s"only_$name").tables(name)
+      assert(stable(together(name).signature) == stable(alone.signature), name)
+      assert(together(name).files.map(_.signature) == alone.files.map(_.signature), name)
+      assert(together(name).rows == alone.rows, name)
+    }
+    assert(together("maps").signature.contains(":nohash-") && together("maps").rows == 400)
+    assert(together("empty").signature.endsWith(":empty") && together("empty").rows == 0)
+    Seq("plain1", "plain2").foreach { name =>
+      val df = tables(name)
+      assert(together(name).signature == sumForm(df)._1, name)
+      assert(together(name).files.size == df.rdd.getNumPartitions &&
+        together(name).files.forall(_.signature.isDefined), name)
+    }
   }
 }
