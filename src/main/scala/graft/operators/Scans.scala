@@ -395,8 +395,9 @@ object Scans {
 
   /** §2.13 (round-4) array columns through the DSv2 snapshot source:
     * the embeddings table (array<float>, dim 64) exported once,
-    * re-read via SnapshotSource's 3-level-LIST decoder, then ranked by
-    * L2 norm through the codegen'd float_dot expression — proving the
+    * re-read through SnapshotSource (Spark's parquet reader decodes the
+    * 3-level LIST), then ranked by L2 norm through the codegen'd
+    * float_dot expression — proving the
     * custom source feeds vector operators without the Snapshot.read
     * fallback. The oracle computes the same norms over the fixture
     * table directly (the snapshot is an exact copy).

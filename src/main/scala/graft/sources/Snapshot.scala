@@ -904,8 +904,8 @@ object Snapshot {
                from: Option[String] = None): DataFrame =
     readEntry(s, resolveAsOf(s, root, asOf, from), table)
 
-  /** Batch-queryable face of a snapshot: manifest → file list →
-    * parquet scan. Filters/pruning push into the scan as usual.
+  /** Batch-queryable face of a snapshot: manifest → schema and file
+    * list → parquet scan. Filters/pruning push into the scan as usual.
     */
   def read(s: SparkSession, root: String, tag: String, table: String): DataFrame =
     readEntry(s, readManifest(s, root, tag), table)
@@ -913,6 +913,11 @@ object Snapshot {
   private def readEntry(s: SparkSession, m: Manifest, table: String): DataFrame = {
     val entry = m.tables.getOrElse(table,
       throw new IllegalArgumentException(s"table $table not in snapshot ${m.tag}"))
+    // the manifest's schema spares the parquet schema-inference job;
+    // entries that predate schemaJson still infer
+    val reader = entry.schemaJson.fold(s.read)(j =>
+      s.read.schema(org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]))
     entry.dir match {
       // partitioned: scan the MANIFEST's file list with the generation
       // dir as basePath, so partition values decode from the layout and
@@ -922,9 +927,9 @@ object Snapshot {
       // a committed snapshot's rows; the manifest is the unit of truth
       // for partitioned tables exactly as for unpartitioned ones)
       case Some(d) if entry.files.nonEmpty =>
-        s.read.option("basePath", d).parquet(entry.files.map(_.path): _*)
-      case Some(d) => s.read.parquet(d) // legacy empty-file-list entry
-      case None => s.read.parquet(entry.files.map(_.path): _*)
+        reader.option("basePath", d).parquet(entry.files.map(_.path): _*)
+      case Some(d) => reader.parquet(d) // legacy empty-file-list entry
+      case None => reader.parquet(entry.files.map(_.path): _*)
     }
   }
 

@@ -5,21 +5,23 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.parquet.schema.MessageType
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 face of the snapshot store — the "custom source" of
@@ -27,18 +29,14 @@ import org.apache.spark.util.SerializableConfiguration
   * .option("root", …).option("tag", …).option("table", …)`.
   *
   * The manifest supplies the schema (no footer sniffing on the
-  * driver); each manifest file entry becomes one InputPartition, so
-  * parallelism follows the snapshot's file layout; the reader applies
-  * COLUMN PRUNING by handing parquet a projected read schema
-  * (SupportsPushDownRequiredColumns → parquet only materializes the
-  * requested columns).
-  *
-  * Scope: primitive column types incl. timestamp/date (Spark 4 writes
-  * TIMESTAMP_MICROS as INT64, which is also Spark's internal form),
-  * plus arrays (standard 3-level parquet LIST — covers the embeddings
-  * table), structs and maps, recursively composed (array-of-struct,
-  * struct-of-array, map values of any supported type) — full coverage
-  * of Spark's parquet-writable complex types.
+  * driver) and plans the scan: each selected manifest file entry
+  * becomes one input partition, so parallelism follows the snapshot's
+  * file layout, and files whose manifest stats cannot match the
+  * predicates get none. The rows themselves come from Spark's own
+  * parquet reader (`ParquetPartitionReaderFactory`): column pruning,
+  * row-group filtering, vectorized decode and missing-file errors are
+  * Spark's, so the column types this source reads are exactly the ones
+  * Spark's parquet reader reads.
   */
 class SnapshotSource extends TableProvider {
 
@@ -233,7 +231,7 @@ class SnapshotSource extends TableProvider {
 }
 
 /** `owner` sits in a SECOND parameter list (same convention as the
-  * scans' `hconf`): case-class equality stays on the value fields, and
+  * scans): case-class equality stays on the value fields, and
   * the session is threaded — not re-resolved — because builder/commit/
   * abort callbacks run on Spark-internal threads where
   * `SparkSession.active` may name a different session than the one
@@ -334,33 +332,26 @@ class SnapshotScanBuilder(dataSchema: StructType, files: Seq[Snapshot.FileEntry]
       true
     } else false
   }
-  /** Push translatable comparison filters down to parquet (row-group
-    * statistics skipping + record-level filtering). ALL filters are
-    * also returned as residual so Spark re-evaluates them post-scan —
-    * same belt-and-braces contract as the built-in parquet source:
-    * pushdown is a pure I/O optimization, never a correctness
-    * dependency.
+  /** Every filter goes to the scan, and every filter is also returned
+    * as residual so Spark re-evaluates it after the scan: the manifest
+    * prunes files on the ones it can bound ([[SnapshotFilePruning]]),
+    * Spark's `ParquetFilters` turns the ones it can translate into
+    * row-group filters, and neither is ever a correctness dependency.
     */
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
       : Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters.filter(f => SnapshotFilters.translate(f, dataSchema).isDefined)
+    pushed = filters
     filters
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def build(): Scan = {
-    // capture the OWNING session's Hadoop conf DRIVER-side and ship it
-    // inside the scan: executor-side readers otherwise rebuild a bare
-    // `new Configuration()` and silently lose filesystem settings
-    // (S3 credentials/endpoints, HA nameservices, kerberos) — works on
-    // file:// test fixtures, breaks on any configured cluster fs. The
-    // threaded `owner`, not SparkSession.active: build() runs on a
-    // planning thread where a multi-session app's active session can
-    // differ from the one that loaded the table (advice r9).
-    val hconf = new SerializableConfiguration(
-      owner.sessionState.newHadoopConf())
-    if (pushedAggs.nonEmpty) SnapshotAggScan(files.map(_.path), pushedAggs)(hconf)
-    else SnapshotScan(dataSchema, required, files, pushed, totalBytes, rows)(hconf)
-  }
+  // the OWNING session, not SparkSession.active: build() runs on a
+  // planning thread where a multi-session app's active session can
+  // differ from the one that loaded the table (advice r9); the readers
+  // get its Hadoop conf, so filesystem settings (S3 credentials, HA
+  // nameservices, kerberos) reach the executors
+  override def build(): Scan =
+    if (pushedAggs.nonEmpty) SnapshotAggScan(files, pushedAggs)(owner)
+    else SnapshotScan(dataSchema, required, files, pushed.toSeq, totalBytes, rows)(owner)
 }
 
 /** One pushed aggregate: `count` (no column) or `min`/`max` of an
@@ -370,16 +361,15 @@ case class SnapshotAgg(fn: String, column: Option[String], resultType: DataType)
 
 /** Footer-statistics scan: each input file yields ONE row of partial
   * aggregate values read from parquet block metadata — no data pages.
-  */
-/** `hconf` sits in a SECOND parameter list: case-class equality then
+  *
+  * `owner` sits in a SECOND parameter list: case-class equality then
   * covers only the value fields, so two scans of the same snapshot
-  * still compare equal and Spark's scan/exchange reuse keeps working
-  * (SerializableConfiguration has reference equality only). Required,
-  * not defaulted — a caller forgetting it must not compile into a
-  * silent bare-Configuration fallback.
+  * still compare equal and Spark's scan/exchange reuse keeps working.
+  * Required, not defaulted — a caller forgetting it must not compile
+  * into a silent fallback to whichever session is active.
   */
-case class SnapshotAggScan(files: Seq[String], aggs: Seq[SnapshotAgg])(
-    val hconf: SerializableConfiguration)
+case class SnapshotAggScan(files: Seq[Snapshot.FileEntry], aggs: Seq[SnapshotAgg])(
+    val owner: SparkSession)
     extends Scan with Batch {
   override def readSchema(): StructType = StructType(aggs.map {
     case SnapshotAgg("count", _, _) => StructField("count(*)", LongType, nullable = false)
@@ -388,31 +378,34 @@ case class SnapshotAggScan(files: Seq[String], aggs: Seq[SnapshotAgg])(
   })
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
-    files.map(f => SnapshotInputPartition(f): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotAggReaderFactory(aggs, hconf)
+    SnapshotScan.partitions(files)
+  override def createReaderFactory(): PartitionReaderFactory = {
+    // the row-scan fallback reads only the aggregated columns
+    val cols = aggs.flatMap(a => a.column.map(c => StructField(c, a.resultType))).distinct
+    SnapshotAggReaderFactory(aggs,
+      SnapshotScan.readerFactory(owner, StructType(cols), StructType(cols), Nil))
+  }
   override def description(): String =
     s"GraftSnapshotAggScan(files=${files.size}, " +
       s"pushedAggregates=[${aggs.map(a => s"${a.fn}(${a.column.getOrElse("*")})").mkString(", ")}])"
 }
 
 case class SnapshotAggReaderFactory(aggs: Seq[SnapshotAgg],
-                                    hconf: SerializableConfiguration)
+                                    rowReader: ParquetPartitionReaderFactory)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new SnapshotFooterAggReader(
-      partition.asInstanceOf[SnapshotInputPartition].file, aggs, hconf.value)
+    new SnapshotFooterAggReader(partition.asInstanceOf[FilePartition], aggs, rowReader)
 }
 
 /** Reads ONLY the parquet footer and emits one partial-aggregate row.
   * If any needed column chunk lacks statistics (a foreign writer with
   * stats disabled — parquet-mr always writes exact int32/int64
-  * min-max), the reader falls back to scanning THIS file's rows, so
-  * pushdown stays a pure I/O optimization and never a correctness
-  * dependency.
+  * min-max), the reader falls back to scanning THIS file's rows through
+  * `rowReader`, Spark's parquet reader, so pushdown stays a pure I/O
+  * optimization and never a correctness dependency.
   */
-class SnapshotFooterAggReader(file: String, aggs: Seq[SnapshotAgg],
-                              conf: Configuration)
+class SnapshotFooterAggReader(partition: FilePartition, aggs: Seq[SnapshotAgg],
+                              rowReader: ParquetPartitionReaderFactory)
     extends PartitionReader[InternalRow] {
   private var done = false
   private var row: InternalRow = _
@@ -420,7 +413,7 @@ class SnapshotFooterAggReader(file: String, aggs: Seq[SnapshotAgg],
   override def next(): Boolean = {
     if (done) return false
     val inputFile = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file), conf)
+      .fromPath(partition.files.head.toPath, rowReader.broadcastedConf.value.value)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile)
     val fromFooter: Option[Array[Any]] =
       try {
@@ -490,11 +483,8 @@ class SnapshotFooterAggReader(file: String, aggs: Seq[SnapshotAgg],
     * partials — correct whenever the file is readable at all.
     */
   private def rowScanPartials(): Array[Any] = {
-    val cols = aggs.flatMap(_.column).distinct
-    val schema = StructType(cols.map(c =>
-      StructField(c, aggs.find(_.column.contains(c)).get.resultType)))
-    val idx = cols.zipWithIndex.toMap
-    val r = new SnapshotPartitionReader(file, schema, conf = conf)
+    val schema = rowReader.readDataSchema
+    val r = rowReader.createReader(partition)
     var n = 0L
     val mins = scala.collection.mutable.Map.empty[String, Long]
     val maxs = scala.collection.mutable.Map.empty[String, Long]
@@ -502,14 +492,14 @@ class SnapshotFooterAggReader(file: String, aggs: Seq[SnapshotAgg],
       while (r.next()) {
         val row = r.get()
         n += 1
-        cols.foreach { c =>
-          if (!row.isNullAt(idx(c))) {
-            val v = schema(idx(c)).dataType match {
-              case LongType => row.getLong(idx(c))
-              case _ => row.getInt(idx(c)).toLong
+        schema.fields.indices.foreach { i =>
+          if (!row.isNullAt(i)) {
+            val v = schema(i).dataType match {
+              case LongType => row.getLong(i)
+              case _ => row.getInt(i).toLong
             }
-            mins.updateWith(c)(o => Some(o.fold(v)(math.min(_, v))))
-            maxs.updateWith(c)(o => Some(o.fold(v)(math.max(_, v))))
+            mins.updateWith(schema(i).name)(o => Some(o.fold(v)(math.min(_, v))))
+            maxs.updateWith(schema(i).name)(o => Some(o.fold(v)(math.max(_, v))))
           }
         }
       }
@@ -531,104 +521,14 @@ class SnapshotFooterAggReader(file: String, aggs: Seq[SnapshotAgg],
   override def close(): Unit = ()
 }
 
-/** Spark source.Filter → parquet FilterPredicate translation for the
-  * primitive column types the reader supports. Timestamp/date columns
-  * are deliberately NOT translated (their Spark filter values are
-  * java.time objects whose micros/days conversion is easy to get
-  * subtly wrong) — untranslated filters simply aren't pushed, and
-  * Spark's residual evaluation keeps results correct.
-  */
-object SnapshotFilters {
-  import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-  import org.apache.parquet.io.api.Binary
-  import org.apache.spark.sql.sources._
-
-  private object Op extends Enumeration { val Eq, Gt, Ge, Lt, Le = Value }
-
-  def translate(f: Filter, schema: StructType): Option[FilterPredicate] = f match {
-    case And(l, r) =>
-      for { lp <- translate(l, schema); rp <- translate(r, schema) }
-        yield FilterApi.and(lp, rp)
-    case Or(l, r) =>
-      for { lp <- translate(l, schema); rp <- translate(r, schema) }
-        yield FilterApi.or(lp, rp)
-    case EqualTo(a, v)            => cmp(a, v, schema, Op.Eq)
-    case GreaterThan(a, v)        => cmp(a, v, schema, Op.Gt)
-    case GreaterThanOrEqual(a, v) => cmp(a, v, schema, Op.Ge)
-    case LessThan(a, v)           => cmp(a, v, schema, Op.Lt)
-    case LessThanOrEqual(a, v)    => cmp(a, v, schema, Op.Le)
-    case IsNull(a)                => nullCheck(a, schema, wantNull = true)
-    case IsNotNull(a)             => nullCheck(a, schema, wantNull = false)
-    case _ => None
-  }
-
-  private def cmp(attr: String, value: Any, schema: StructType,
-                  op: Op.Value): Option[FilterPredicate] = {
-    if (value == null) return None
-    schema.fields.find(_.name == attr).flatMap { field =>
-      (field.dataType, value) match {
-        case (LongType, v: Number) =>
-          val c = FilterApi.longColumn(attr); val x = java.lang.Long.valueOf(v.longValue())
-          Some(op match {
-            case Op.Eq => FilterApi.eq(c, x);   case Op.Gt => FilterApi.gt(c, x)
-            case Op.Ge => FilterApi.gtEq(c, x); case Op.Lt => FilterApi.lt(c, x)
-            case Op.Le => FilterApi.ltEq(c, x)
-          })
-        case (IntegerType, v: Number) =>
-          val c = FilterApi.intColumn(attr); val x = java.lang.Integer.valueOf(v.intValue())
-          Some(op match {
-            case Op.Eq => FilterApi.eq(c, x);   case Op.Gt => FilterApi.gt(c, x)
-            case Op.Ge => FilterApi.gtEq(c, x); case Op.Lt => FilterApi.lt(c, x)
-            case Op.Le => FilterApi.ltEq(c, x)
-          })
-        // double/float comparisons are deliberately NOT pushed: parquet
-        // filters use total-order comparators (Double.compare), which
-        // disagree with Spark's == on -0.0/NaN, and record-level
-        // filtering drops rows BEFORE the residual filter could restore
-        // them — a silent wrong-results path. Integer/string/boolean
-        // orderings agree exactly, so only those are pushed.
-        case (StringType, v: String) =>
-          val c = FilterApi.binaryColumn(attr); val x = Binary.fromString(v)
-          Some(op match {
-            case Op.Eq => FilterApi.eq(c, x);   case Op.Gt => FilterApi.gt(c, x)
-            case Op.Ge => FilterApi.gtEq(c, x); case Op.Lt => FilterApi.lt(c, x)
-            case Op.Le => FilterApi.ltEq(c, x)
-          })
-        case (BooleanType, v: java.lang.Boolean) if op == Op.Eq =>
-          Some(FilterApi.eq(FilterApi.booleanColumn(attr), v))
-        case _ => None
-      }
-    }
-  }
-
-  private def nullCheck(attr: String, schema: StructType,
-                        wantNull: Boolean): Option[FilterPredicate] =
-    schema.fields.find(_.name == attr).flatMap { field =>
-      field.dataType match {
-        case LongType =>
-          val c = FilterApi.longColumn(attr)
-          Some(if (wantNull) FilterApi.eq(c, null.asInstanceOf[java.lang.Long])
-               else FilterApi.notEq(c, null.asInstanceOf[java.lang.Long]))
-        case IntegerType =>
-          val c = FilterApi.intColumn(attr)
-          Some(if (wantNull) FilterApi.eq(c, null.asInstanceOf[java.lang.Integer])
-               else FilterApi.notEq(c, null.asInstanceOf[java.lang.Integer]))
-        case StringType =>
-          val c = FilterApi.binaryColumn(attr)
-          Some(if (wantNull) FilterApi.eq(c, null.asInstanceOf[Binary])
-               else FilterApi.notEq(c, null.asInstanceOf[Binary]))
-        case _ => None
-      }
-    }
-}
-
-/** `hconf` in a second parameter list for the same reuse-preserving
+/** The row scan: manifest-planned, read by Spark's parquet reader.
+  * `owner` in a second parameter list for the same reuse-preserving
   * reason as [[SnapshotAggScan]]. */
 case class SnapshotScan(dataSchema: StructType, required: StructType,
                         files: Seq[Snapshot.FileEntry],
                         filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
                         totalBytes: Long = 0L, rows: Long = 0L)(
-                        val hconf: SerializableConfiguration)
+                        val owner: SparkSession)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
   override def readSchema(): StructType = required
@@ -734,13 +634,65 @@ case class SnapshotScan(dataSchema: StructType, required: StructType,
     else staticSelected.filter(runtimePruner(runtimeFilters))
 
   override def planInputPartitions(): Array[InputPartition] =
-    selected.map(f => SnapshotInputPartition(f.path): InputPartition).toArray
+    SnapshotScan.partitions(selected)
   override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotReaderFactory(required.json, dataSchema.json, filters, hconf)
+    SnapshotScan.readerFactory(owner, dataSchema, required, filters)
   override def description(): String =
     s"GraftSnapshotScan(files=${files.size}, skippedByStats=${files.size - selected.size}, " +
       s"columns=${required.fieldNames.mkString(",")}, " +
       s"pushedFilters=[${filters.mkString(", ")}])"
+}
+
+object SnapshotScan {
+  /** One input partition per manifest file, each a single split over
+    * the whole file. `SparkPath.fromPath`, not `fromUrlString`:
+    * manifest paths are unescaped, so a space or a `%` in them is a
+    * literal character, never an escape.
+    */
+  def partitions(files: Seq[Snapshot.FileEntry]): Array[InputPartition] =
+    files.zipWithIndex.map { case (f, i) =>
+      FilePartition(i, Array(PartitionedFile(InternalRow.empty,
+        SparkPath.fromPath(new Path(f.path)), 0L, f.size, fileSize = f.size))): InputPartition
+    }.toArray
+
+  /** Spark's parquet reader for `required` of files holding
+    * `dataSchema`, over `owner`'s Hadoop conf prepared with the keys
+    * Spark's own `ParquetScan.createReaderFactory` sets. Spark applies
+    * the `filters` it can translate as row-group filters.
+    */
+  def readerFactory(owner: SparkSession, dataSchema: StructType, required: StructType,
+                    filters: Seq[org.apache.spark.sql.sources.Filter])
+      : ParquetPartitionReaderFactory = {
+    val sqlConf = owner.sessionState.conf
+    val conf = owner.sessionState.newHadoopConf()
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, required.json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, required.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    Seq(
+      SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> sqlConf.nestedSchemaPruningEnabled,
+      SQLConf.CASE_SENSITIVE -> sqlConf.caseSensitiveAnalysis,
+      SQLConf.PARQUET_BINARY_AS_STRING -> sqlConf.isParquetBinaryAsString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> sqlConf.isParquetINT96AsTimestamp,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> sqlConf.parquetInferTimestampNTZEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> sqlConf.legacyParquetNanosAsLong,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
+        sqlConf.parquetReaderRespectUnknownTypeAnnotation
+    ).foreach { case (entry, v) => conf.setBoolean(entry.key, v) }
+    ParquetPartitionReaderFactory(sqlConf,
+      owner.sparkContext.broadcast(new SerializableConfiguration(conf)),
+      dataSchema, required, new StructType(), filters.toArray, None,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+  }
+}
+
+/** Driver-side count of the runtime In-pruner's binary-search range
+  * probes: the O(F log V) claim is asserted as "one probe per file" on
+  * this counter instead of a load-sensitive wall-clock bound (r12
+  * advice). One LongAdder bump per probe; no production reads.
+  */
+object SnapshotScanProbe {
+  private[graft] val runtimeProbes = new java.util.concurrent.atomic.LongAdder
 }
 
 /** Driver-side may-match test of a source filter against per-file
@@ -778,163 +730,6 @@ object SnapshotFilePruning {
       case n: java.lang.Byte => Some((s, n.longValue()))
       case _ => None
     })
-}
-
-case class SnapshotInputPartition(file: String) extends InputPartition
-
-/** Test-observable count of per-file reader opens — how the
-  * runtime-filtering spec proves FEWER FILES were actually opened
-  * (local mode shares the JVM, so executor-side increments are
-  * visible). One atomic add per file open; no production reads.
-  */
-object SnapshotScanProbe {
-  private[graft] val opens = new java.util.concurrent.atomic.AtomicLong(0)
-  /** Driver-side binary-search range probes performed by the runtime
-    * In-pruner — the O(F log V) claim is asserted as "one probe per
-    * file" on this counter instead of a load-sensitive wall-clock
-    * bound (r12 advice). */
-  private[graft] val runtimeProbes = new java.util.concurrent.atomic.LongAdder
-}
-
-case class SnapshotReaderFactory(requiredJson: String, dataJson: String,
-                                 filters: Seq[org.apache.spark.sql.sources.Filter],
-                                 hconf: SerializableConfiguration)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    SnapshotScanProbe.opens.incrementAndGet()
-    val file = partition.asInstanceOf[SnapshotInputPartition].file
-    val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    val dataSchema = DataType.fromJson(dataJson).asInstanceOf[StructType]
-    new SnapshotPartitionReader(file, required, dataSchema, filters, hconf.value)
-  }
-}
-
-/** One-file reader over the parquet Group API with a projected read
-  * schema (real parquet-side column pruning) and pushed-down filter
-  * predicates (row-group statistics skipping + record-level filtering
-  * via parquet's FilterCompat; results are additionally re-filtered by
-  * Spark since every filter is reported residual).
-  */
-class SnapshotPartitionReader(file: String, required: StructType,
-                              dataSchema: StructType = new StructType(),
-                              filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
-                              conf: Configuration)
-    extends PartitionReader[InternalRow] {
-
-  private val reader: ParquetReader[Group] = {
-    val path = new org.apache.hadoop.fs.Path(file)
-    val inputFile = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
-    val footerReader = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile)
-    val fullSchema = try footerReader.getFooter.getFileMetaData.getSchema
-    finally footerReader.close()
-    val fields: Seq[org.apache.parquet.schema.Type] =
-      required.fieldNames.toSeq.map(n => fullSchema.getType(Seq(n): _*))
-    val projected = new MessageType(fullSchema.getName, fields: _*)
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projected.toString)
-    val schemaForFilters = if (dataSchema.isEmpty) required else dataSchema
-    val predicate = filters.flatMap(SnapshotFilters.translate(_, schemaForFilters))
-      .reduceOption(org.apache.parquet.filter2.predicate.FilterApi.and)
-    val builder = ParquetReader.builder(new GroupReadSupport(), path).withConf(conf)
-    predicate.fold(builder)(p =>
-      builder.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(p))).build()
-  }
-
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-
-  /** Decode field `fieldIdx` of `g` into Spark's internal value form.
-    * Recursion handles nesting uniformly: arrays are standard 3-level
-    * parquet LIST (`optional group x (LIST) { repeated group list {
-    * <element> } }` — what Spark writes), structs are plain groups
-    * whose parquet field order matches the Spark StructType (both come
-    * from the same schema at export time). An absent value (repetition
-    * count 0) is NULL at every level.
-    */
-  private def decode(g: Group, fieldIdx: Int, dt: DataType): Any = dt match {
-    case LongType => g.getLong(fieldIdx, 0)
-    case IntegerType => g.getInteger(fieldIdx, 0)
-    case DoubleType => g.getDouble(fieldIdx, 0)
-    case FloatType => g.getFloat(fieldIdx, 0)
-    case BooleanType => g.getBoolean(fieldIdx, 0)
-    case StringType => UTF8String.fromBytes(g.getBinary(fieldIdx, 0).getBytes)
-    case BinaryType => g.getBinary(fieldIdx, 0).getBytes
-    // Spark 4 writes TIMESTAMP_MICROS as INT64 — the raw long IS
-    // Spark's internal representation (fixtures are NTZ: parquet
-    // isAdjustedToUTC=false reads as TimestampNTZType)
-    case TimestampType | TimestampNTZType => g.getLong(fieldIdx, 0)
-    case DateType => g.getInteger(fieldIdx, 0)
-    // decimals follow Spark's parquet convention: INT32 unscaled for
-    // precision <= 9, INT64 for <= 18 (wider would be FIXED_LEN_BYTE_ARRAY
-    // — out of scope, raised honestly below)
-    case dt: DecimalType if dt.precision <= 9 =>
-      org.apache.spark.sql.types.Decimal.createUnsafe(
-        g.getInteger(fieldIdx, 0).toLong, dt.precision, dt.scale)
-    case dt: DecimalType if dt.precision <= 18 =>
-      org.apache.spark.sql.types.Decimal.createUnsafe(
-        g.getLong(fieldIdx, 0), dt.precision, dt.scale)
-    case ArrayType(et, _) =>
-      val wrapper = g.getGroup(fieldIdx, 0)
-      val n = wrapper.getFieldRepetitionCount(0)
-      val out = new Array[Any](n)
-      var j = 0
-      while (j < n) {
-        val entry = wrapper.getGroup(0, j)
-        out(j) = if (entry.getFieldRepetitionCount(0) == 0) null
-        else decode(entry, 0, et)
-        j += 1
-      }
-      new GenericArrayData(out)
-    case StructType(fields) =>
-      val nested = g.getGroup(fieldIdx, 0)
-      val out = new Array[Any](fields.length)
-      var j = 0
-      while (j < fields.length) {
-        out(j) = if (nested.getFieldRepetitionCount(j) == 0) null
-        else decode(nested, j, fields(j).dataType)
-        j += 1
-      }
-      new GenericInternalRow(out)
-    // standard parquet MAP: optional group m (MAP) { repeated group
-    // key_value { required key; optional value } }
-    case MapType(kt, vt, _) =>
-      val wrapper = g.getGroup(fieldIdx, 0)
-      val n = wrapper.getFieldRepetitionCount(0)
-      val keys = new Array[Any](n)
-      val values = new Array[Any](n)
-      var j = 0
-      while (j < n) {
-        val entry = wrapper.getGroup(0, j)
-        keys(j) = decode(entry, 0, kt)
-        values(j) = if (entry.getFieldRepetitionCount(1) == 0) null
-        else decode(entry, 1, vt)
-        j += 1
-      }
-      new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-        new GenericArrayData(keys), new GenericArrayData(values))
-    case other => throw new UnsupportedOperationException(
-      s"SnapshotSource supports primitive, array, struct and map columns; got $other " +
-        "— use graft.sources.Snapshot.read for this table")
-  }
-
-  override def get(): InternalRow = {
-    val values = new Array[Any](required.length)
-    var i = 0
-    while (i < required.length) {
-      // projected read schema was built from required.fieldNames in
-      // order, so the group field index equals the required index
-      values(i) =
-        if (current.getFieldRepetitionCount(i) == 0) null
-        else decode(current, i, required.fields(i).dataType)
-      i += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  override def close(): Unit = reader.close()
 }
 
 // ---------------------------------------------------------------------------
@@ -1207,13 +1002,12 @@ case class SnapshotWriterFactory(dir: String, schemaJson: String,
       DataType.fromJson(schemaJson).asInstanceOf[StructType], hconf.value)
 }
 
-/** One-task parquet writer over the Group API — the mirror of
-  * SnapshotPartitionReader. Scope matches the reader exactly:
-  * primitives incl. timestamp/date and INT32/INT64-backed decimals,
-  * plus arrays (3-level parquet LIST), structs and maps (standard
-  * key_value MAP), recursively composed — so anything the source can
-  * read (the embeddings table included) round-trips value-exact
-  * through the sink.
+/** One-task parquet writer over the Group API. Scope: primitives
+  * incl. timestamp/date and INT32/INT64-backed decimals, plus arrays
+  * (3-level parquet LIST), structs and maps (standard key_value MAP),
+  * recursively composed, in the layouts Spark's own parquet writer
+  * uses — so what the sink writes (the embeddings table included)
+  * reads back value-exact through Spark's parquet reader.
   */
 class SnapshotDataWriter(dir: String, partitionId: Int, taskId: Long, schema: StructType,
                          conf: Configuration)
@@ -1230,11 +1024,11 @@ class SnapshotDataWriter(dir: String, partitionId: Int, taskId: Long, schema: St
     f"$dir/part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.parquet")
 
   private val parquetSchema: MessageType = {
-    // Complex shapes mirror what the reader decodes (and what Spark
-    // itself writes): LIST = optional group (LIST) { repeated group
-    // list { optional element } }, MAP = optional group (MAP) {
-    // repeated group key_value { required key; optional value } },
-    // structs are plain groups in StructType field order.
+    // Complex shapes mirror what Spark itself writes: LIST = optional
+    // group (LIST) { repeated group list { optional element } }, MAP =
+    // optional group (MAP) { repeated group key_value { required key;
+    // optional value } }, structs are plain groups in StructType field
+    // order.
     def field(name: String, dt: DataType,
               rep: PType.Repetition = PType.Repetition.OPTIONAL): PType = dt match {
       case LongType    => Types.primitive(INT64, rep).named(name)
@@ -1303,8 +1097,8 @@ class SnapshotDataWriter(dir: String, partitionId: Int, taskId: Long, schema: St
   private val statMax = scala.collection.mutable.Map.empty[Int, Long]
 
   /** Encode value `ord` of `src` (a row or an array — both are
-    * SpecializedGetters) into group field `i` — the exact inverse of
-    * SnapshotPartitionReader.decode, recursive over the same shapes.
+    * SpecializedGetters) into group field `i`, recursive over the
+    * shapes of `parquetSchema`.
     * Callers only invoke this on non-null values; nested nulls are
     * handled here (an absent group field IS parquet's null).
     */

@@ -8,22 +8,23 @@ import graft.sources.{Snapshot, SnapshotScan, Tables}
 
 /** Columns whose NAME literally contains a dot — parquet's column-path
   * delimiter — are the classic silent-wrong-results trap in filter and
-  * aggregate pushdown (Spark's own parquet source refuses to push
-  * dotted names for this reason: parquet would resolve `a.b` as nested
-  * path a→b, treat it as a missing column = all-null, and record-level
-  * filtering would drop matching rows BEFORE the residual filter could
-  * restore them).
+  * aggregate pushdown (a translation that splits `a.b` on the dot
+  * resolves it as nested path a→b, a missing column = all-null or the
+  * wrong column's values, and row-group or record-level filtering then
+  * drops matching rows BEFORE the residual filter could restore them).
   *
   * This spec pins the two safety properties the snapshot DSv2 source
   * relies on:
   *
-  *  1. FILTERS: Spark backtick-quotes a flat dotted name in translated
-  *     source filters, so SnapshotFilters' plain-name schema lookup
-  *     misses and the filter is NOT pushed — correctness then rides on
-  *     Spark's residual evaluation, which this spec proves returns the
-  *     exact row set. (If a Spark upgrade ever stopped quoting, the
-  *     pushed-filter assertion below fails loudly and the name guard
-  *     must move into SnapshotFilters itself.)
+  *  1. FILTERS: every filter reaches the scan, and Spark backtick-
+  *     quotes a flat dotted name in translated source filters. Spark's
+  *     own `ParquetFilters` keys its column map on those quoted names,
+  *     so the quoted `a.b` resolves to the flat column's one-element
+  *     path, never to the nested chunk a→b; the manifest pruner finds
+  *     no stats under the quoted name and skips nothing. This spec
+  *     proves the exact row set comes back and that the filters arrive
+  *     quoted, and that an out-of-range value on the flat column
+  *     skips the row group where the decoy's range would not.
   *
   *  2. AGGREGATES: min/max pushdown IS taken for a flat dotted column
   *     (the connector reference arrives unparsed as one field name).
@@ -66,7 +67,7 @@ class DottedColumnProbeSpec extends SparkSpec {
     }.collectFirst { case s: SnapshotScan => s }.getOrElse(
       fail("expected a GraftSnapshotScan in the plan"))
 
-  test("flat column named 'a.b' round-trips and filters correctly — filter NOT pushed") {
+  test("flat column named 'a.b' round-trips and filters correctly — quoted filter reaches the scan") {
     val back = readBack
     assert(back.schema.fieldNames.toSeq == Seq("id", "a", "a.b"))
     val got = back.where(col("`a.b`") === 2)
@@ -75,11 +76,21 @@ class DottedColumnProbeSpec extends SparkSpec {
     assert(got.count() == expect.count(),
       "a filter on a dotted flat column must not lose rows")
     assert(got.exceptAll(expect).count() == 0 && expect.exceptAll(got).count() == 0)
-    // the quoted name `a.b` can never match a parquet column — the scan
-    // must carry ZERO pushed filters (both the EqualTo and the implicit
-    // IsNotNull arrive quoted)
-    assert(snapshotScan(got).filters.isEmpty,
-      s"dotted-name filters must not be pushed, got ${snapshotScan(got).filters.toSeq}")
+    // the scan carries the filters under the QUOTED name (both the
+    // EqualTo and the implicit IsNotNull), never the bare path a.b
+    import org.apache.spark.sql.sources.{EqualTo, IsNotNull}
+    val pushed = snapshotScan(got).filters.toSet
+    assert(pushed == Set(EqualTo("`a.b`", 2), IsNotNull("`a.b`")),
+      s"dotted-name filters must arrive quoted, got ${pushed.toSeq}")
+    // Spark's ParquetFilters resolves the quoted name to the FLAT chunk:
+    // 102 lies outside its 0..4 but inside the struct decoy's 100..104,
+    // so only the flat chunk's row-group stats drop every row
+    val miss = back.where(col("`a.b`") === 102)
+    assert(miss.collect().isEmpty)
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(miss.queryExecution.executedPlan) { case b: BatchScanExec => b }
+    assert(scans.map(_.metrics("numOutputRows").value) == Seq(0L),
+      "the flat column's row-group stats must skip the file's rows")
   }
 
   test("positive control: the same filter shape on an undotted column IS pushed") {

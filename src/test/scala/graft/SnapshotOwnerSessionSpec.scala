@@ -46,12 +46,18 @@ class SnapshotOwnerSessionSpec extends SparkSpec
     try body finally SparkSession.setActiveSession(spark)
   }
 
+  /** The Hadoop conf the scan's readers receive. */
+  private def readerConf(scan: org.apache.spark.sql.connector.read.Scan) =
+    scan.toBatch.createReaderFactory()
+      .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory]
+      .broadcastedConf.value.value
+
   test("scan built under a different active session carries the OWNER's conf") {
     spark.conf.set("graft.owner.probe", "A")
     val table = loadTable() // active session here: A (the owner)
     val probe = withActiveB {
       val scan = table.newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-      scan.asInstanceOf[graft.sources.SnapshotScan].hconf.value.get("graft.owner.probe")
+      readerConf(scan).get("graft.owner.probe")
     }
     assert(probe == "A", s"scan captured the wrong session's conf: $probe")
   }
@@ -67,7 +73,7 @@ class SnapshotOwnerSessionSpec extends SparkSpec
       .asInstanceOf[graft.sources.SnapshotTable]
     val probe = withActiveB {
       val scan = table.newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-      scan.asInstanceOf[graft.sources.SnapshotScan].hconf.value.get("graft.owner.probe")
+      readerConf(scan).get("graft.owner.probe")
     }
     assert(table.owner eq spark)
     assert(probe == "A", s"catalog-loaded table captured the wrong session's conf: $probe")

@@ -1,0 +1,69 @@
+package graft
+
+import java.nio.file.Files
+
+import graft.sources.{Snapshot, Tables}
+
+/** `Snapshot.read` takes the table's schema from the manifest, so
+  * building the DataFrame runs no Spark job: parquet schema inference
+  * over the files is one job per read. Entries that predate the
+  * manifest's `schemaJson` still infer.
+  */
+class SnapshotReadSchemaSpec extends SparkSpec {
+
+  /** `body`'s result and the Spark jobs it ran, counted by a SparkListener. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("constructing Snapshot.read and readAsOf runs no Spark job") {
+    val root = Files.createTempDirectory("snap_read_jobs").toString
+    val nation = Tables.nation(spark, sf)
+    Snapshot.export(spark, Map("nation" -> nation), root, "2024-01-01T00:00:00Z")
+    val (df, jobs) = withJobCount(Snapshot.read(spark, root, "2024-01-01T00:00:00Z", "nation"))
+    assert(jobs == 0)
+    assert(df.schema == nation.schema)
+    assert(withJobCount(Snapshot.readAsOf(spark, root, "2024-06-01T00:00:00Z", "nation"))._2 == 0)
+    assert(df.count() == nation.count())
+  }
+
+  test("a partitioned entry reads with its manifest schema in the inferred column order") {
+    val root = Files.createTempDirectory("snap_read_part").toString
+    val nation = Tables.nation(spark, sf)
+    val m = Snapshot.export(spark, Map("nation" -> nation), root, "pt",
+      partitionBy = Map("nation" -> Seq("n_regionkey")))
+    val entry = m.tables("nation")
+    val (df, jobs) = withJobCount(Snapshot.read(spark, root, "pt", "nation"))
+    assert(jobs == 0)
+    val inferred = spark.read.option("basePath", entry.dir.get)
+      .parquet(entry.files.map(_.path): _*)
+    assert(df.schema.fieldNames.toSeq == inferred.schema.fieldNames.toSeq)
+    // the partition column keeps its exported type instead of an inferred one
+    assert(df.schema("n_regionkey").dataType == nation.schema("n_regionkey").dataType)
+    assert(df.exceptAll(nation.select(df.columns.map(org.apache.spark.sql.functions.col): _*))
+      .isEmpty)
+  }
+
+  test("an entry without schemaJson still reads, by inference") {
+    val root = Files.createTempDirectory("snap_read_legacy").toString
+    val nation = Tables.nation(spark, sf)
+    val m = Snapshot.export(spark, Map("nation" -> nation), root, "v1")
+    Snapshot.writeManifest(spark, root, m.copy(tag = "legacy", parent = None, generation = 0L,
+      tables = m.tables.map { case (k, e) => k -> e.copy(schemaJson = None) }))
+    val df = Snapshot.read(spark, root, "legacy", "nation")
+    assert(df.schema.fieldNames.toSeq == nation.schema.fieldNames.toSeq)
+    assert(df.count() == nation.count())
+  }
+}

@@ -2,15 +2,15 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.{Snapshot, SnapshotScanProbe}
+import graft.sources.Snapshot
 
 /** DSv2 runtime filtering on the snapshot scan (VERDICT r10 item 3):
   * manifest min/max pruning previously reacted only to STATIC
   * predicates; with SupportsRuntimeFiltering a selective broadcast-join
   * dimension now prunes snapshot files at execution time — the
   * snapshot-source twin of what q_scan_dpp proves for the native
-  * parquet path. Fewer files must be OPENED (probe counter), results
-  * must be identical with the feature off.
+  * parquet path. Fewer files must be READ (tasks of the fact-scan
+  * stage, one per file), results must be identical with the feature off.
   */
 class SnapshotRuntimeFilterSpec extends SparkSpec {
 
@@ -33,6 +33,27 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
 
   private var rootDir: String = _
 
+  /** `body`'s result and the tasks it ran in stages that read the
+    * snapshot: the scan's input RDD is a `DataSourceRDD` with one
+    * partition per planned file.
+    */
+  private def withScanTasks[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "DataSourceRDD"))
+          tasks.addAndGet(e.stageInfo.numTasks)
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.TestListenerBus.drain(sc)
+      (out, tasks.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("a selective broadcast dim join prunes snapshot files at execution; results identical with the feature off") {
     rootDir = Files.createTempDirectory("snap_rf").toString
     exportRangedFact(rootDir)
@@ -54,19 +75,15 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
     assert(planStr.toLowerCase.contains("dynamicpruning"),
       s"snapshot fact scan must carry a runtime pruning subquery, got:\n$planStr")
 
-    SnapshotScanProbe.opens.set(0)
-    val on = q1.collect()
-    val opensOn = SnapshotScanProbe.opens.get()
+    val (on, opensOn) = withScanTasks(q1.collect())
     assert(opensOn < 8,
-      s"runtime filter must prune file opens below the 8-file total, opened $opensOn")
+      s"runtime filter must prune file reads below the 8-file total, read $opensOn")
 
     val saved = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
     try {
       spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
-      SnapshotScanProbe.opens.set(0)
-      val off = query.collect()
-      val opensOff = SnapshotScanProbe.opens.get()
-      assert(opensOff == 8, s"with the feature off every file scans, opened $opensOff")
+      val (off, opensOff) = withScanTasks(query.collect())
+      assert(opensOff == 8, s"with the feature off every file scans, read $opensOff")
       assert(on.toSeq == off.toSeq,
         s"pruning must not change results: on=${on.toSeq} off=${off.toSeq}")
     } finally spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", saved)
@@ -77,9 +94,7 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
     exportRangedFact(rootDir)
     val entry = Snapshot.readManifest(spark, rootDir, "g1").tables("fact")
     val scan = graft.sources.SnapshotScan(
-      snap.schema, snap.schema, entry.files)(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
+      snap.schema, snap.schema, entry.files)(spark)
     val attrs = scan.filterAttributes().map(_.describe()).toSet
     assert(attrs.contains("k") && attrs.contains("v"),
       s"int64 columns with footer stats must be advertised, got $attrs")
@@ -96,9 +111,7 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
         Map("k" -> Snapshot.ColumnStats(i * 10L, i * 10L + 9L)))
     }
     val schema = StructType(Seq(StructField("k", LongType)))
-    val scan = graft.sources.SnapshotScan(schema, schema, files)(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
+    val scan = graft.sources.SnapshotScan(schema, schema, files)(spark)
     val keys: Array[Any] =
       Array.tabulate(10000)(j => java.lang.Long.valueOf(j * 100L))
     val probes0 = graft.sources.SnapshotScanProbe.runtimeProbes.sum()
@@ -122,9 +135,7 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
     exportRangedFact(rootDir)
     val entry = Snapshot.readManifest(spark, rootDir, "g1").tables("fact")
     val scan = graft.sources.SnapshotScan(
-      snap.schema, snap.schema, entry.files)(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
+      snap.schema, snap.schema, entry.files)(spark)
     // keys chosen inside exactly two distinct file ranges
     val mins = entry.files.map(_.stats("k").min).sorted
     val keys: Array[Any] = Array(java.lang.Long.valueOf(mins(2)), java.lang.Long.valueOf(mins(5)))
