@@ -320,13 +320,12 @@ object Snapshot {
 
   /** The DSv2 path serves FLAT entries only: a hive-partitioned
     * entry's partition values are directory-encoded, absent from the
-    * parquet files themselves, so the DSv2 row reader fails mid-scan
-    * on the partition column (executor-side InvalidRecordException) —
-    * and a column-pruned read that skips it would silently serve a
-    * partial view, while a DSv2 append would link flat files into the
-    * partitioned layout and corrupt it. Fail at LOAD time with the
-    * correct path instead: [[read]] decodes partition dirs and prunes
-    * partitions; [[export]] writes them.
+    * parquet files themselves, and Spark's parquet reader fills a
+    * column the file lacks with NULL — so a DSv2 read would SILENTLY
+    * serve every partition value as NULL, while a DSv2 append would
+    * link flat files into the partitioned layout and corrupt it. Fail
+    * at LOAD time with the correct path instead: [[read]] decodes
+    * partition dirs and prunes partitions; [[export]] writes them.
     */
   private[sources] def requireUnpartitioned(table: String, entry: TableEntry): Unit =
     if (entry.partitionBy.nonEmpty)
@@ -709,14 +708,15 @@ object Snapshot {
   }
 
   /** Harvest per-file min/max for int32/int64 columns from the parquet
-    * footer (one metadata read per file, done once at manifest-build
-    * time). A column appears only if EVERY row group has trustworthy
+    * footer (one metadata read per file, done once when the file enters
+    * a manifest: at export's listing, and by the DSv2 write task that
+    * wrote it). A column appears only if EVERY row group has trustworthy
     * statistics; integer stats are exact in parquet-mr, so presence ⇒
     * correctness. Errors degrade to "no stats" — pruning is always
     * advisory — and to no row count. The row count (the sum over row
     * groups) comes from the same footer read.
     */
-  private def footerStats(p: Path, conf: org.apache.hadoop.conf.Configuration)
+  private[sources] def footerStats(p: Path, conf: org.apache.hadoop.conf.Configuration)
       : (Map[String, ColumnStats], Option[Long]) =
     try {
       // the SESSION's Hadoop conf, not a bare `new Configuration()` —

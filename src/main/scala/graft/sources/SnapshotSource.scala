@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetInputFormat
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -16,8 +16,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -36,7 +36,9 @@ import org.apache.spark.util.SerializableConfiguration
   * parquet reader (`ParquetPartitionReaderFactory`): column pruning,
   * row-group filtering, vectorized decode and missing-file errors are
   * Spark's, so the column types this source reads are exactly the ones
-  * Spark's parquet reader reads.
+  * Spark's parquet reader reads. Writes go through Spark's own parquet
+  * writer the same way (see [[SnapshotDataWriter]]), so a DSv2-appended
+  * file is encoded exactly as an exported one.
   */
 class SnapshotSource extends TableProvider {
 
@@ -257,8 +259,9 @@ case class SnapshotTable(tableName: String, tableSchema: StructType,
     // The provider serves external metadata (writes need that channel),
     // so a user's `.schema(...)` on a READ flows straight through to
     // this table — a drifted one would read the entry's files under the
-    // wrong shape (mid-scan InvalidRecordException on a phantom column,
-    // or silently re-typed values). The snapshot's committed schema is
+    // wrong shape (a phantom column silently all-NULL, as Spark's
+    // parquet reader fills a column the files lack, or values re-typed
+    // or refused mid-scan). The snapshot's committed schema is
     // authoritative on reads; reject overrides HERE, the read-only
     // choke point, so overwrite-based schema evolution (which goes
     // through newWriteBuilder + the commit-time append check) is
@@ -811,21 +814,34 @@ class SnapshotWriteBuilder(root: String, tag: String, table: String,
       v
     }
 
+  /** Column types Spark's parquet writer cannot store (intervals, for
+    * one) fail the query HERE, on the driver, before any task runs —
+    * not once per executor task after the job has started.
+    */
+  info.schema().fields.find(f => !new ParquetFileFormat().supportDataType(f.dataType))
+    .foreach(f => throw new IllegalArgumentException(
+      s"snapshot table '$table': column '${f.name}' has type ${f.dataType.catalogString}, " +
+        "which Spark's parquet writer cannot store"))
+
   override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
     truncateFirst = true; this
   }
   override def build(): org.apache.spark.sql.connector.write.Write =
     new org.apache.spark.sql.connector.write.Write {
-      override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-        // owning session's Hadoop conf captured driver-side for the
-        // executors' parquet writers (same reason as the scan side);
-        // the session itself rides along for commit()'s manifest
+      override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = {
+        // Spark's parquet writer, prepared once on the driver from the
+        // OWNING session's SQL and Hadoop conf (codec, timestamp type,
+        // filesystem settings) — the route Spark's own DSv2 ParquetWrite
+        // takes. The session itself rides along for commit()'s manifest
         // read-modify-write, which runs on a Spark-internal thread
         // where SparkSession.active is not trustworthy (advice r9)
+        val sqlConf = owner.sessionState.conf
+        val job = Job.getInstance(owner.sessionState.newHadoopConf())
+        val writerFactory = ParquetUtils.prepareWrite(sqlConf, job, info.schema(),
+          new ParquetOptions(Map.empty[String, String], sqlConf))
         SnapshotBatchWrite(root, tag, table, info.schema().json, truncateFirst, txn,
-          txnRetentionMs)(
-          owner, new SerializableConfiguration(
-            owner.sessionState.newHadoopConf()))
+          txnRetentionMs)(owner, writerFactory, new SerializableConfiguration(job.getConfiguration))
+      }
     }
 }
 
@@ -834,12 +850,13 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String,
                               txn: Option[(String, Long)] = None,
                               txnRetentionMs: Option[Long] = None)(
                               val owner: SparkSession,
+                              val writerFactory: OutputWriterFactory,
                               val hconf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write._
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    SnapshotWriterFactory(s"$root/$tag/$table", schemaJson, hconf)
+    SnapshotWriterFactory(s"$root/$tag/$table", schemaJson, writerFactory, hconf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = SnapshotBatchWrite.commitLock.synchronized {
     val s = owner
@@ -901,9 +918,9 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String,
     // hands the QUERY's schema through to this write without validating
     // it against the entry — an unchecked wider append would stamp the
     // new schema over a file set whose older files lack the new
-    // columns, committing a table that reads fine under pruning and
-    // fails mid-scan (executor InvalidRecordException) the first time
-    // the new column is touched. Checked HERE, under the commit lock,
+    // columns, committing a table whose older rows SILENTLY read the
+    // new column as NULL (Spark's parquet reader fills a column a file
+    // lacks) instead of failing. Checked HERE, under the commit lock,
     // where the prior entry is authoritative; overwrite (truncate)
     // replaces the file set wholesale, so a schema change there is
     // legitimate evolution.
@@ -994,177 +1011,43 @@ case class SnapshotCommitMessage(path: String, size: Long, rows: Long,
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 case class SnapshotWriterFactory(dir: String, schemaJson: String,
+                                 writerFactory: OutputWriterFactory,
                                  hconf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
     new SnapshotDataWriter(dir, partitionId, taskId,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType], hconf.value)
+      DataType.fromJson(schemaJson).asInstanceOf[StructType], writerFactory, hconf.value)
 }
 
-/** One-task parquet writer over the Group API. Scope: primitives
-  * incl. timestamp/date and INT32/INT64-backed decimals, plus arrays
-  * (3-level parquet LIST), structs and maps (standard key_value MAP),
-  * recursively composed, in the layouts Spark's own parquet writer
-  * uses — so what the sink writes (the embeddings table included)
-  * reads back value-exact through Spark's parquet reader.
+/** One write task's part file, encoded by Spark's own parquet writer
+  * (`writerFactory`, from `ParquetUtils.prepareWrite`): same parquet
+  * schema, codec and timestamp encoding as [[Snapshot.export]]'s files,
+  * and every column type Spark's parquet writer stores. The file's
+  * manifest stats come from its footer, through the same
+  * [[Snapshot.footerStats]] export's listing uses.
   */
 class SnapshotDataWriter(dir: String, partitionId: Int, taskId: Long, schema: StructType,
-                         conf: Configuration)
+                         writerFactory: OutputWriterFactory, conf: Configuration)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type => PType, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-  import org.apache.parquet.io.api.Binary
-  import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 
   // partitionId+taskId dedup retries within one application; the UUID
   // makes names collision-free across applications appending to the
   // same table from fresh JVMs (where taskIds restart at 0)
-  private val path = new org.apache.hadoop.fs.Path(
+  private val path = new Path(
     f"$dir/part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.parquet")
-
-  private val parquetSchema: MessageType = {
-    // Complex shapes mirror what Spark itself writes: LIST = optional
-    // group (LIST) { repeated group list { optional element } }, MAP =
-    // optional group (MAP) { repeated group key_value { required key;
-    // optional value } }, structs are plain groups in StructType field
-    // order.
-    def field(name: String, dt: DataType,
-              rep: PType.Repetition = PType.Repetition.OPTIONAL): PType = dt match {
-      case LongType    => Types.primitive(INT64, rep).named(name)
-      case IntegerType => Types.primitive(INT32, rep).named(name)
-      case DoubleType  => Types.primitive(DOUBLE, rep).named(name)
-      case FloatType   => Types.primitive(FLOAT, rep).named(name)
-      case BooleanType => Types.primitive(BOOLEAN, rep).named(name)
-      case StringType  => Types.primitive(BINARY, rep)
-        .as(LogicalTypeAnnotation.stringType()).named(name)
-      case BinaryType  => Types.primitive(BINARY, rep).named(name)
-      case TimestampType => Types.primitive(INT64, rep)
-        .as(LogicalTypeAnnotation.timestampType(true,
-          LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-      case TimestampNTZType => Types.primitive(INT64, rep)
-        .as(LogicalTypeAnnotation.timestampType(false,
-          LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-      case DateType => Types.primitive(INT32, rep)
-        .as(LogicalTypeAnnotation.dateType()).named(name)
-      case d: DecimalType if d.precision <= 9 => Types.primitive(INT32, rep)
-        .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision)).named(name)
-      case d: DecimalType if d.precision <= 18 => Types.primitive(INT64, rep)
-        .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision)).named(name)
-      case ArrayType(et, _) =>
-        Types.buildGroup(rep).as(LogicalTypeAnnotation.listType())
-          .addField(Types.repeatedGroup()
-            .addField(field("element", et)).named("list"))
-          .named(name)
-      case StructType(fields) =>
-        val b = Types.buildGroup(rep)
-        fields.foreach(f => b.addField(field(f.name, f.dataType)))
-        b.named(name)
-      case MapType(kt, vt, _) =>
-        Types.buildGroup(rep).as(LogicalTypeAnnotation.mapType())
-          .addField(Types.repeatedGroup()
-            .addField(field("key", kt, PType.Repetition.REQUIRED))
-            .addField(field("value", vt)).named("key_value"))
-          .named(name)
-      case other => throw new UnsupportedOperationException(
-        s"SnapshotSource write supports primitive, array, struct and map columns; " +
-          s"got $name: $other")
-    }
-    val b = Types.buildMessage()
-    schema.fields.foreach(f => b.addField(field(f.name, f.dataType)))
-    b.named("spark_schema")
-  }
 
   // opened on the first row: an empty partition must leave NO file
   // behind (its commit message is dropped by BatchWrite.commit)
   private lazy val writer = {
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(parquetSchema, conf)
-    org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(path, conf))
-      .withConf(conf)
-      .build()
+    val attempt = new TaskAttemptID(
+      new TaskID(new JobID("snapshot", 0), TaskType.MAP, partitionId), (taskId & Int.MaxValue).toInt)
+    writerFactory.newInstance(path.toString, schema, new TaskAttemptContextImpl(conf, attempt))
   }
-  private val factory = new org.apache.parquet.example.data.simple.SimpleGroupFactory(parquetSchema)
   private var rows = 0L
-  // running min/max for int32/int64-backed columns → manifest file
-  // stats, so DSv2-written files are prunable without a footer read
-  private val statIdx: Seq[Int] = schema.fields.indices.filter(i =>
-    schema.fields(i).dataType match {
-      case LongType | IntegerType | DateType => true
-      case _ => false
-    })
-  private val statMin = scala.collection.mutable.Map.empty[Int, Long]
-  private val statMax = scala.collection.mutable.Map.empty[Int, Long]
-
-  /** Encode value `ord` of `src` (a row or an array — both are
-    * SpecializedGetters) into group field `i`, recursive over the
-    * shapes of `parquetSchema`.
-    * Callers only invoke this on non-null values; nested nulls are
-    * handled here (an absent group field IS parquet's null).
-    */
-  private def addTo(g: Group, i: Int, dt: DataType,
-                    src: SpecializedGetters, ord: Int): Unit = dt match {
-    case LongType | TimestampType | TimestampNTZType => g.add(i, src.getLong(ord))
-    case IntegerType | DateType => g.add(i, src.getInt(ord))
-    case DoubleType  => g.add(i, src.getDouble(ord))
-    case FloatType   => g.add(i, src.getFloat(ord))
-    case BooleanType => g.add(i, src.getBoolean(ord))
-    case StringType  =>
-      g.add(i, Binary.fromConstantByteArray(src.getUTF8String(ord).getBytes))
-    case BinaryType  => g.add(i, Binary.fromConstantByteArray(src.getBinary(ord)))
-    case d: DecimalType if d.precision <= 9 =>
-      g.add(i, src.getDecimal(ord, d.precision, d.scale).toUnscaledLong.toInt)
-    case d: DecimalType if d.precision <= 18 =>
-      g.add(i, src.getDecimal(ord, d.precision, d.scale).toUnscaledLong)
-    case ArrayType(et, _) =>
-      val arr = src.getArray(ord)
-      val wrapper = g.addGroup(i) // the LIST annotation group
-      var j = 0
-      while (j < arr.numElements()) {
-        val entry = wrapper.addGroup(0) // one repeated `list` group per element
-        if (!arr.isNullAt(j)) addTo(entry, 0, et, arr, j)
-        j += 1
-      }
-    case StructType(fields) =>
-      val st = src.getStruct(ord, fields.length)
-      val nested = g.addGroup(i)
-      var j = 0
-      while (j < fields.length) {
-        if (!st.isNullAt(j)) addTo(nested, j, fields(j).dataType, st, j)
-        j += 1
-      }
-    case MapType(kt, vt, _) =>
-      val m = src.getMap(ord)
-      val keys = m.keyArray(); val values = m.valueArray()
-      val wrapper = g.addGroup(i) // the MAP annotation group
-      var j = 0
-      while (j < m.numElements()) {
-        val kv = wrapper.addGroup(0) // one repeated `key_value` group per entry
-        addTo(kv, 0, kt, keys, j) // map keys are never null in Spark
-        if (!values.isNullAt(j)) addTo(kv, 1, vt, values, j)
-        j += 1
-      }
-    case other => throw new IllegalStateException(s"unreachable: $other")
-  }
 
   override def write(row: InternalRow): Unit = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) addTo(g, i, schema.fields(i).dataType, row, i)
-      i += 1
-    }
-    writer.write(g)
-    statIdx.foreach { i =>
-      if (!row.isNullAt(i)) {
-        val v = schema.fields(i).dataType match {
-          case LongType => row.getLong(i)
-          case _ => row.getInt(i).toLong
-        }
-        statMin.updateWith(i)(o => Some(o.fold(v)(math.min(_, v))))
-        statMax.updateWith(i)(o => Some(o.fold(v)(math.max(_, v))))
-      }
-    }
+    writer.write(row)
     rows += 1L
   }
 
@@ -1172,9 +1055,8 @@ class SnapshotDataWriter(dir: String, partitionId: Int, taskId: Long, schema: St
     if (rows == 0) return SnapshotCommitMessage(path.toString, 0L, 0L)
     writer.close()
     val fs = path.getFileSystem(conf)
-    val stats = statMin.keys.map(i => schema.fields(i).name ->
-      Snapshot.ColumnStats(statMin(i), statMax(i))).toMap
-    SnapshotCommitMessage(path.toString, fs.getFileStatus(path).getLen, rows, stats)
+    SnapshotCommitMessage(path.toString, fs.getFileStatus(path).getLen, rows,
+      Snapshot.footerStats(path, conf)._1)
   }
 
   override def abort(): Unit = if (rows > 0) {

@@ -147,11 +147,31 @@ class SnapshotConfPropagationSpec extends SparkSpec
   test("DSv2 write (executor parquet writers) carries the session conf") {
     val nation = Tables.nation(spark, sf)
     Snapshot.export(spark, Map("nation" -> nation), root, "v3")
-    nation.limit(3).write.format("graft.sources.SnapshotSource")
+    val exported = Snapshot.readManifest(spark, root, "v3").tables("nation").files.map(_.path).toSet
+    // the session's parquet settings reach the sink's writers too
+    spark.conf.set("spark.sql.parquet.compression.codec", "gzip")
+    try nation.limit(3).write.format("graft.sources.SnapshotSource")
       .option("root", root).option("tag", "v3").option("table", "nation")
       .mode("append").save()
+    finally spark.conf.unset("spark.sql.parquet.compression.codec")
     val back = spark.read.format("graft.sources.SnapshotSource")
       .option("root", root).option("tag", "v3").option("table", "nation").load()
     assert(back.count() == nation.count() + 3)
+    val appended = Snapshot.readManifest(spark, root, "v3").tables("nation").files
+      .filterNot(f => exported(f.path))
+    assert(appended.nonEmpty)
+    // the writer's footer read-back resolved graftfs:// too: a failed
+    // read would leave the file without stats
+    assert(appended.forall(_.stats.contains("n_nationkey")), appended)
+    val conf = spark.sessionState.newHadoopConf()
+    appended.foreach { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.path), conf))
+      val codecs = try {
+        import scala.jdk.CollectionConverters._
+        r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet
+      } finally r.close()
+      assert(codecs == Set("GZIP"), s"${f.path}: $codecs")
+    }
   }
 }

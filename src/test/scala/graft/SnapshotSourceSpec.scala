@@ -269,18 +269,54 @@ class SnapshotSourceSpec extends SparkSpec {
   }
 
   test("DSv2 write rejects unsupported column types honestly") {
+    // parquet has no interval type, and Spark's parquet writer refuses
+    // it: the rejection must come on the driver, named, before any task
     val bad = Tables.nation(spark, sf)
-      .select(col("n_nationkey"), col("n_regionkey").cast("short").as("s"))
-    val e = intercept[Exception] {
-      bad.write.format("graft.sources.SnapshotSource")
-        .option("root", Files.createTempDirectory("snap_bad").toString)
-        .option("tag", "g1").option("table", "bad")
-        .option("schema", bad.schema.json)
-        .mode("append").save()
+      .select(col("n_nationkey"), expr("make_interval(0, 0, 0, n_regionkey)").as("iv"))
+    val root = Files.createTempDirectory("snap_bad").toString
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
-    val chain = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-      .map(t => Option(t.getMessage).getOrElse("")).mkString("|")
-    assert(chain.contains("SnapshotSource write supports"), chain)
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val (viaWriter, viaBuilder) = try {
+      // through DataFrameWriter, Spark's analyzer refuses the interval
+      // column before the sink is asked for a writer
+      val w = intercept[org.apache.spark.sql.AnalysisException] {
+        bad.write.format("graft.sources.SnapshotSource")
+          .option("root", root).option("tag", "g1").option("table", "bad")
+          .option("schema", bad.schema.json)
+          .mode("append").save()
+      }
+      // a caller that asks the table for a writer directly meets the
+      // sink's own check
+      import scala.jdk.CollectionConverters._
+      val opts = Map("root" -> root, "tag" -> "g1", "table" -> "bad", "schema" -> bad.schema.json)
+      val provider = new graft.sources.SnapshotSource
+      val table = provider.getTable(
+        provider.inferSchema(new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts.asJava)),
+        Array.empty, opts.asJava)
+      val info = new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+        override def queryId(): String = "honest-rejection"
+        override def schema(): org.apache.spark.sql.types.StructType = bad.schema
+        override def options() = org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()
+      }
+      val b = intercept[IllegalArgumentException] {
+        table.asInstanceOf[graft.sources.SnapshotTable].newWriteBuilder(info)
+      }
+      (w, b)
+    } finally {
+      org.apache.spark.TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(viaWriter.getMessage.contains("INTERVAL"), viaWriter.getMessage)
+    assert(viaBuilder.getMessage.contains("snapshot table 'bad': column 'iv' has type interval") &&
+      viaBuilder.getMessage.contains("parquet writer cannot store"), viaBuilder.getMessage)
+    assert(jobs.get == 0, s"the rejection must come before any Spark job; ${jobs.get} ran")
+    assert(!new java.io.File(s"$root/g1").exists(), "a rejected write must leave no files")
   }
 
   test("asOf option time-travels reads through the manifest chain") {
@@ -392,6 +428,11 @@ class SnapshotSourceSpec extends SparkSpec {
     val entry = Snapshot.readManifest(spark, r, "g1").tables("n")
     assert(entry.files.nonEmpty)
     assert(entry.files.forall(_.stats.contains("n_nationkey")))
+    // the same rows exported: both paths take a file's stats from its
+    // footer, so the per-file n_nationkey ranges agree as a multiset
+    Snapshot.export(spark, Map("n" -> src), r, "e1")
+    def keyStats(e: Snapshot.TableEntry) = e.files.map(_.stats("n_nationkey")).sortBy(s => (s.min, s.max))
+    assert(keyStats(entry) == keyStats(Snapshot.readManifest(spark, r, "e1").tables("n")))
     val hit = spark.read.format("graft.sources.SnapshotSource")
       .option("root", r).option("tag", "g1").option("table", "n").load()
       .where(col("n_nationkey") === 7)

@@ -73,4 +73,32 @@ class SnapshotTypeRoundTripSpec extends SparkSpec {
     assert(v2.where(col("s") < 0).select("id", "d38").collect().toSeq ==
       Seq(Row(2, dec("-9999999999999999999999999999.9999999999"))))
   }
+
+  test("every exported column type appends through the DSv2 sink, encoded as export encodes it") {
+    val root = Files.createTempDirectory("snap_types_append").resolve("snap root 100%").toString
+    val src = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    Snapshot.export(spark, Map("t" -> src), root, "v1")
+    val exported = Snapshot.readManifest(spark, root, "v1").tables("t").files.map(_.path).toSet
+    src.write.format("graft.sources.SnapshotSource")
+      .option("root", root).option("tag", "v1").option("table", "t").mode("append").save()
+    val files = Snapshot.readManifest(spark, root, "v1").tables("t").files.map(_.path)
+    val appended = files.filterNot(exported)
+    assert(appended.nonEmpty, "the append must add files to the entry")
+    val twice = src.union(src)
+    val v2 = spark.read.format("graft.sources.SnapshotSource")
+      .option("root", root).option("tag", "v1").option("table", "t").load()
+    val v1 = Snapshot.read(spark, root, "v1", "t")
+    assert(v2.count() == 2 * rows.size && v1.count() == 2 * rows.size)
+    assert(sameRows(v2, twice), "the DSv2 read of export + append differs from the rows twice")
+    assert(sameRows(v1, twice), "Snapshot.read of export + append differs from the rows twice")
+    // the sink's parquet schema is the one export writes
+    def footerSchema(p: String) = {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p), spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    }
+    val want = footerSchema(exported.head)
+    appended.foreach(p => assert(footerSchema(p) == want, s"$p: ${footerSchema(p)} vs $want"))
+  }
 }
