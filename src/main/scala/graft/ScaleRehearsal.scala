@@ -117,10 +117,11 @@ object ScaleRehearsal {
 
     // round-4 shapes. Orders re-keyed with the SAME formula as lineitem
     // so fact-fact join keys still align at ×K.
-    val ordersK = orders
+    def inflate(o: DataFrame) = o
       .withColumn("rep", explode(expr(s"sequence(1, $k)")))
       .withColumn("o_orderkey", col("o_orderkey") * k + col("rep"))
       .drop("rep")
+    val ordersK = inflate(orders)
 
     // TPC-H Q5 shape at ×K: the full fact chain (lineitem⋈orders⋈
     // customer⋈supplier) with broadcast nation/region — proves the
@@ -393,10 +394,16 @@ object ScaleRehearsal {
     // scan's ReadSchema collapses to struct<>). The isNotNull filter
     // references the sum, so the count must evaluate it and the scan
     // must read o_totalprice — a real row scan through the DSv2 reader.
+    // The sink is fed one partition per core, so the leg times parallel
+    // write tasks (the writer Snapshot.export uses too) and commits a
+    // multi-file manifest; the single-file orders scan alone would hand
+    // it one task writing one file. The ×1 orders are spread before the
+    // inflation, so the shuffle moves 1/K of the rows the sink writes.
+    val ordersSpread = inflate(orders.repartition(spark.sparkContext.defaultParallelism))
     val sinkRoot = java.nio.file.Files.createTempDirectory("rehearse_sink")
     try {
       time("snapshot_sink_inflated") {
-        ordersK.write.format("graft.sources.SnapshotSource")
+        ordersSpread.write.format("graft.sources.SnapshotSource")
           .option("root", sinkRoot.toString).option("tag", "gK").option("table", "orders")
           .option("schema", ordersK.schema.json).mode("append").save()
         spark.read.format("graft.sources.SnapshotSource")

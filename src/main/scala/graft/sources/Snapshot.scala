@@ -1,7 +1,13 @@
 package graft.sources
 
+import java.math.BigInteger
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, XxHash64}
+import org.apache.spark.sql.types.StructType
 
 /** Snapshot export/read/retention pipeline — the reference tool's own
   * capability re-expressed for a Spark+parquet world (SURVEY §0.1,
@@ -42,11 +48,12 @@ object Snapshot {
     */
   case class ColumnStats(min: Long, max: Long)
   /** `signature` is the file's own content signature, in the table
-    * signature's format (see [[partitionSums]]), recorded by [[export]]
-    * only when the file provably holds exactly one partition's rows. A
-    * later export links a partition with the same signature to this
-    * file instead of rewriting it. Absent for files of legacy
-    * manifests, DSv2 appends and whole-table fallback writes; such
+    * signature's format (see [[signatureOf]]). [[export]] records it
+    * when the file provably holds exactly one signed partition's rows,
+    * and the DSv2 sink for every file it writes of a schema the row hash
+    * can hash. A later export links a partition with the same signature
+    * to this file instead of rewriting it. Absent for files of legacy
+    * manifests, whole-table fallback writes and map-column appends; such
     * files never match.
     */
   case class FileEntry(path: String, size: Long,
@@ -348,80 +355,104 @@ object Snapshot {
     finally in.close()
   }
 
-  /** Content signature used for incremental skip: row count + schema
-    * hash + an order-independent CONTENT fingerprint (the exact integer
-    * sum of per-row xxhash64 over every column — commutative, so
-    * partition order and parallelism cannot change it, and exact so
-    * both the sum and the comparison are deterministic). Without the
-    * content term, a change that preserves row count and schema (an
-    * UPDATE) would silently inherit the parent's stale files — wrong
-    * data, not a degraded mode.
-    *
-    * This returns each partition's (row count, hash sum) of every
-    * table in `pinned`, from ONE job for all tables of an export, with
-    * no shuffle: the job runs over the union of the tables' hash RDDs,
-    * each task tagged with its table's index and its partition's. A
-    * table signature adds its partitions up, and a partition's own
-    * signature (same format, its own rows and sum) is what [[export]]
-    * matches against the parent's files. The table string is
-    * byte-identical to the earlier
-    * `sum(xxhash64(struct(*)).cast("decimal(38,0)"))` form: each task
-    * carries its sum as a 128-bit two's-complement pair, rebuilt
-    * exactly on the driver, so no sum wraps.
-    *
-    * Columns xxhash64 cannot consume (maps) fail analysis: that table's
-    * result is None, and the caller degrades to a no-fingerprint
-    * signature that never matches — such tables are always rewritten
-    * (conservative, never wrong).
+  /** The per-row term of every content signature: xxhash64, seed 42,
+    * over the row's columns in order. Each column is bound by ordinal,
+    * so a name is never re-parsed (a column literally named "a.b" is
+    * hashed as itself), and the value equals the hash of the whole row
+    * taken as one struct. None, decided on the driver, for a schema the
+    * hash cannot consume: map columns (Spark's `checkInputDataTypes`
+    * refuses them) or no columns at all.
     */
-  private def partitionSums(s: SparkSession, pinned: Seq[DataFrame])
-      : Seq[Option[Seq[(Long, java.math.BigInteger)]]] = {
-    import org.apache.spark.sql.functions.{xxhash64, struct, col}
-    val hashes = pinned.map { p =>
-      // backtick-quote each column name: bare col(name) RE-PARSES the
-      // name, so a column literally named "a.b" would resolve as
-      // struct-field access — fingerprinting the wrong data (silent
-      // stale inheritance) or failing analysis for no reason
-      val cols = p.columns.map(n => col(s"`${n.replace("`", "``")}`"))
-      try Some(p.select(xxhash64(struct(cols: _*))).queryExecution.toRdd)
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+  private[sources] def rowHash(schema: StructType): Option[Expression] =
+    if (schema.isEmpty) None
+    else Some(XxHash64(schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, nullable = true)
+    }, 42L)).filter(_.checkInputDataTypes().isSuccess)
+
+  /** The exact sum of [[rowHash]] over the rows a task adds, kept as a
+    * 128-bit two's-complement pair so no sum wraps. The projection is
+    * compiled in the task that creates this.
+    */
+  private[sources] final class HashSum(hash: Expression) {
+    private val proj = UnsafeProjection.create(Seq(hash))
+    private var hi, lo = 0L
+    def add(row: InternalRow): Unit = {
+      val x = proj(row).getLong(0)
+      val sum = lo + x
+      // sign extension of x, plus the carry out of the unsigned low word
+      hi += (x >> 63) + (if (java.lang.Long.compareUnsigned(sum, lo) < 0) 1L else 0L)
+      lo = sum
     }
-    val tagged = hashes.zipWithIndex.collect { case (Some(rdd), t) =>
-      rdd.mapPartitionsWithIndex { (i, it) =>
-        var rows, hi, lo = 0L
+    def value: BigInteger =
+      BigInteger.valueOf(hi).shiftLeft(64).add(new BigInteger(java.lang.Long.toUnsignedString(lo)))
+  }
+
+  /** Each partition's (row count, [[rowHash]] sum) of every table, from
+    * ONE job for all tables of an export, with no shuffle: the job runs
+    * over the union of the tables' pinned RDDs, each task tagged with
+    * its table's index and its partition's, and hashes the rows
+    * directly, with no per-table query plan. A table signature adds its
+    * partitions up; a partition's own signature (same format, its own
+    * rows and sum) is what [[export]] matches against the parent's
+    * files. The sum is commutative and exact, so partition order and
+    * parallelism cannot change it.
+    *
+    * A table [[rowHash]] cannot hash (maps) gets None, and the caller
+    * degrades to a no-fingerprint signature that never matches — such
+    * tables are always rewritten (conservative, never wrong).
+    */
+  private def partitionSums(s: SparkSession, rdds: Seq[RDD[InternalRow]],
+                            schemas: Seq[StructType]): Seq[Option[Seq[(Long, BigInteger)]]] = {
+    val hashes = schemas.map(rowHash)
+    val tagged = rdds.indices.flatMap(t => hashes(t).map { hash =>
+      rdds(t).mapPartitionsWithIndex { (i, it) =>
+        val sum = new HashSum(hash)
+        var rows = 0L
         while (it.hasNext) {
-          val x = it.next().getLong(0)
-          val sum = lo + x
-          // sign extension of x, plus the carry out of the unsigned low word
-          hi += (x >> 63) + (if (java.lang.Long.compareUnsigned(sum, lo) < 0) 1L else 0L)
-          lo = sum
+          sum.add(it.next())
           rows += 1
         }
-        Iterator((t, i, rows, hi, lo))
+        Iterator((t, i, rows, sum.value))
       }
-    }
+    })
     val byTable =
-      if (tagged.isEmpty) Map.empty[Int, Array[(Int, Int, Long, Long, Long)]]
+      if (tagged.isEmpty) Map.empty[Int, Array[(Int, Int, Long, BigInteger)]]
       else s.sparkContext.union(tagged).collect().groupBy(_._1)
-    hashes.indices.map { t =>
+    rdds.indices.map { t =>
       hashes(t).map { _ =>
-        byTable.getOrElse(t, Array.empty).sortBy(_._2).toSeq.map { case (_, _, rows, hi, lo) =>
-          rows -> java.math.BigInteger.valueOf(hi).shiftLeft(64)
-            .add(new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))
-        }
+        byTable.getOrElse(t, Array.empty).sortBy(_._2).toSeq.map { case (_, _, n, h) => n -> h }
       }
     }
   }
 
-  /** Schema+rows signature for writers that have a schema but no
-    * DataFrame (the DSv2 write path's manifest commit). Deliberately a
-    * PREFIX of [[signature]]'s format with no content term: an export
-    * over a DSv2-committed entry never equals it, so incremental skip
-    * stays conservative across the two writers.
+  /** A table's or a file's content signature: row count, schema hash,
+    * and — when every row was hashed — the content term, the exact sum
+    * of [[rowHash]] over the rows (`empty` for none). The sum is
+    * commutative, so two writers that hold the same rows in any files
+    * sign alike: [[export]] signs partitions, and the DSv2 sink signs
+    * the files it writes and adds them to the entry's prior sum. Without
+    * the content term, a change that preserves row count and schema (an
+    * UPDATE) would silently inherit the parent's stale files — wrong
+    * data, not a degraded mode — so a signature without one (a legacy
+    * entry, map columns) never equals any export's.
     */
-  private[sources] def signatureOf(schema: org.apache.spark.sql.types.StructType,
-                                   rows: Long): String =
-    s"$rows:${schema.catalogString.hashCode}"
+  private[sources] def signatureOf(schema: StructType, rows: Long,
+                                   content: Option[BigInteger] = None): String = {
+    val prefix = s"$rows:${schema.catalogString.hashCode}"
+    content.fold(prefix)(c => s"$prefix:${if (rows == 0) "empty" else c}")
+  }
+
+  /** The content sum `entry`'s signature carries for `schema`: its
+    * number, zero for `empty`, None when it has no content term.
+    */
+  private[sources] def contentOf(entry: TableEntry, schema: StructType): Option[BigInteger] = {
+    val prefix = s"${signatureOf(schema, entry.rows)}:"
+    if (!entry.signature.startsWith(prefix)) None
+    else entry.signature.substring(prefix.length) match {
+      case "empty" => Some(BigInteger.ZERO)
+      case n => scala.util.Try(new BigInteger(n)).toOption
+    }
+  }
 
   /** Tags and table names become filesystem path segments under
     * `root`. A slashed tag (`x/y`) commits `root/x/y/manifest.json` —
@@ -446,27 +477,37 @@ object Snapshot {
     * signature is unchanged are linked to the parent's files instead
     * of rewritten (incremental transfer).
     *
-    * Every table's DataFrame is planned once and its row RDD pinned,
-    * then ONE signature job signs the partitions of all tables
-    * ([[partitionSums]]), and each table's write sees the same rows in
-    * partition `i` as that job. A flat table whose signature differs is
-    * inherited FILE by file.
-    * A non-empty partition whose signature equals a parent file's links
-    * to that file; each parent file stands for at most one partition, so
-    * two identical partitions still get two files. The remaining
-    * partitions are written through a PartitionPruningRDD, so linked
-    * partitions are never recomputed. Matching is scoped to a parent
-    * entry with the same schema JSON: xxhash64 ignores column names, so
-    * a rename with identical values must not inherit. A written file
-    * records its signature only when that is provable — every write task
-    * produced exactly one file, and its footer row count equals its
-    * partition's. Anything else (several files per task under
-    * `maxRecordsPerFile`, a footer that disagrees) falls back to the
-    * whole-table write, with no per-file signatures. The whole-table
-    * write also serves hive-partitioned tables, columns xxhash64 cannot
-    * hash (maps) and an empty table. Parent files without a signature
-    * (legacy manifests, DSv2 appends) never match, and empty partitions
+    * An export runs TWO Spark jobs, whatever the number of tables:
+    *  - every table's DataFrame is planned once and its row RDD pinned,
+    *    and ONE job signs the partitions of all tables
+    *    ([[partitionSums]]);
+    *  - the driver then decides every table: inherit the parent's entry
+    *    whole (equal signature), link it file by file, or write it
+    *    whole; and ONE job writes every changed partition of every
+    *    file-granular table, each to one file in its table's fresh
+    *    generation dir, through the DSv2 sink's [[SnapshotDataWriter]].
+    *    Its tasks see the same rows in partition `i` as the signature
+    *    job, and linked partitions are pruned from it, never recomputed.
+    *
+    * File by file: a non-empty partition whose signature equals a parent
+    * file's links to that file; each parent file stands for at most one
+    * partition, so two identical partitions still get two files.
+    * Matching is scoped to a parent entry with the same schema JSON: the
+    * row hash ignores column names, so a rename with identical values
+    * must not inherit. A written file records its signature only when it
+    * is proven: the rows and hash sum its writer counted equal the
+    * signed partition's. Parent files without a signature (legacy
+    * manifests, whole-table writes) never match, and empty partitions
     * write nothing.
+    *
+    * The whole-table write (Spark's `DataFrameWriter`, its own job per
+    * table, no per-file signatures) serves what the granular write
+    * cannot: hive-partitioned tables, columns the row hash cannot hash
+    * (maps) or Spark's parquet writer cannot store, empty tables, a
+    * changed partition holding more rows than
+    * `spark.sql.files.maxRecordsPerFile` (decided before any write), and
+    * a written file that fails its proof. If the write job fails, the
+    * fresh generation dirs it wrote into are deleted.
     *
     * Each write lands in a FRESH generation directory
     * `root/<tag>/<table>/g-<uuid>` — never `mode("overwrite")` into a
@@ -499,14 +540,20 @@ object Snapshot {
     // job and the write, so partition i holds the same rows in both
     val named = tables.toSeq
     val rdds = named.map(_._2.queryExecution.toRdd)
-    val pinned = named.zip(rdds).map { case ((_, df), rdd) =>
-      GraftShim.ofInternalRows(df.sparkSession, rdd, df.schema)
-    }
-    val sums = partitionSums(s, pinned)
-    val entries = named.indices.map { i =>
-      val name = named(i)._1
-      name -> exportTable(s, root, tag, name, pinned(i), rdds(i), sums(i),
+    val sums = partitionSums(s, rdds, named.map(_._2.schema))
+    // generation dirs are qualified, as the whole-table listing's paths are
+    val tagDir = s"${fs(s, root).makeQualified(new Path(root))}/$tag"
+    val plans = named.indices.map { t =>
+      val (name, df) = named(t)
+      planTable(s, tagDir, name, df.schema, rdds(t), sums(t),
         partitionBy.getOrElse(name, Nil), parentManifest.flatMap(_.tables.get(name)))
+    }
+    val written = writeParts(s, plans.zip(rdds))
+    val entries = plans.indices.map { t =>
+      val p = plans(t)
+      p.name -> p.inherited.orElse(p.parts.flatMap(linkedOrWritten(s, p, written, t)))
+        .getOrElse(writeWhole(s, tagDir, p, named(t)._2.sparkSession, rdds(t),
+          partitionBy.getOrElse(p.name, Nil)))
     }.toMap
     exportRaceHook() // test seam: the pre-commit window a concurrent retain can land in
     // OCC commit: the generation read and the preconditioned swap sit in
@@ -568,100 +615,124 @@ object Snapshot {
     }
   }
 
-  /** One table of [[export]], given its pinned DataFrame over `rdd` and
-    * its [[partitionSums]] result: inherit the parent's entry whole,
-    * link unchanged partitions file by file, or write the whole table.
+  /** A non-empty partition `index` of a file-granular table, with its
+    * signed row count and hash sum: it links the `parent` file, or is
+    * written when that is None.
     */
-  private def exportTable(s: SparkSession, root: String, tag: String, name: String,
-                          pinned: DataFrame,
-                          rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                          sums: Option[Seq[(Long, java.math.BigInteger)]], partCols: Seq[String],
-                          parentEntry: Option[TableEntry]): TableEntry = {
+  private case class Part(index: Int, rows: Long, sum: BigInteger, parent: Option[FileEntry])
+
+  /** [[export]]'s driver-side decision for one signed table: the
+    * parent's entry when it is `inherited` whole, else its `parts` when
+    * it is linked and written file by file into `dir`, else (both None)
+    * the whole-table write.
+    */
+  private case class TablePlan(name: String, rows: Long, signature: String, schema: StructType,
+                               inherited: Option[TableEntry], parts: Option[Seq[Part]],
+                               dir: String)
+
+  private def freshDir(tagDir: String, name: String) =
+    s"$tagDir/$name/g-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** One table of [[export]], decided from its [[partitionSums]] result
+    * before any data moves.
+    */
+  private def planTable(s: SparkSession, tagDir: String, name: String,
+                        schema: StructType, rdd: RDD[InternalRow],
+                        sums: Option[Seq[(Long, BigInteger)]], partCols: Seq[String],
+                        parentEntry: Option[TableEntry]): TablePlan = {
     val rows = sums.fold(rdd.count())(_.map(_._1).sum)
-    def sigOf(n: Long, content: String) = s"${signatureOf(pinned.schema, n)}:$content"
-    val sig = sigOf(rows, sums match {
-      case None => s"nohash-${java.util.UUID.randomUUID()}"
-      case Some(_) if rows == 0 => "empty"
-      case Some(ps) => ps.map(_._2).reduce(_ add _).toString
-    })
-    parentEntry.filter(_.signature == sig).getOrElse {
-      def freshDir() = s"$root/$tag/$name/g-${java.util.UUID.randomUUID().toString.take(8)}"
-      val schemaJson = Some(pinned.schema.json)
-      val granular =
-        if (partCols.nonEmpty || rows == 0) None
-        else sums.flatMap { ps =>
-          val parentFiles = parentEntry.filter(_.schemaJson == schemaJson).toSeq.flatMap(_.files)
-          writeChanged(s, root, pinned, rdd, ps.map { case (n, h) => n -> sigOf(n, h.toString) },
-            parentFiles, freshDir())
+    val sig = sums match {
+      case None => s"${signatureOf(schema, rows)}:nohash-${java.util.UUID.randomUUID()}"
+      case Some(ps) => signatureOf(schema, rows, Some(ps.map(_._2).foldLeft(BigInteger.ZERO)(_ add _)))
+    }
+    val inherited = parentEntry.filter(_.signature == sig)
+    val maxRecords = s.sessionState.conf.maxRecordsPerFile
+    val parquet = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val parts =
+      if (inherited.isDefined || partCols.nonEmpty || rows == 0 ||
+          !schema.forall(f => parquet.supportDataType(f.dataType))) None
+      else sums.map { ps =>
+        val parentFiles = parentEntry.filter(_.schemaJson.contains(schema.json)).toSeq.flatMap(_.files)
+        val pool = scala.collection.mutable.Map(
+          parentFiles.filter(_.signature.isDefined).groupBy(_.signature.get).toSeq: _*)
+        ps.indices.filter(ps(_)._1 > 0).map { i =>
+          val (n, h) = ps(i)
+          val fileSig = signatureOf(schema, n, Some(h))
+          Part(i, n, h, pool.get(fileSig) match {
+            case Some(file +: rest) => pool(fileSig) = rest; Some(file)
+            case _ => None
+          })
         }
-      granular match {
-        case Some(files) => TableEntry(files, rows, sig, schemaJson = schemaJson)
-        case None =>
-          val dir = freshDir()
-          val writer = pinned.write.mode("error") // the generation dir is fresh by construction
-          (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer).parquet(dir)
-          val files = listParquetRecursive(s, fs(s, root), new Path(dir)).map(_._1)
-          TableEntry(files, rows, sig,
-            dir = if (partCols.nonEmpty) Some(dir) else None, partitionBy = partCols,
-            schemaJson = schemaJson)
+      }.filter(_.forall(p => p.parent.isDefined || maxRecords <= 0 || p.rows <= maxRecords))
+    TablePlan(name, rows, sig, schema, inherited, parts, freshDir(tagDir, name))
+  }
+
+  /** ONE job writing every unlinked part of every file-granular plan:
+    * a task per part writes its partition of the pinned RDD to one file
+    * in its table's dir through a [[SnapshotDataWriter]] prepared like
+    * the DSv2 sink's. Returns each task's commit message by (plan
+    * index, partition index). If the job fails, the dirs it wrote into
+    * are deleted.
+    */
+  private def writeParts(s: SparkSession, plans: Seq[(TablePlan, RDD[InternalRow])])
+      : Map[(Int, Int), SnapshotCommitMessage] = {
+    val writes = plans.zipWithIndex.flatMap { case ((p, rdd), t) =>
+      // ascending, as PartitionPruningRDD keeps them: task j holds ids(j)
+      val ids = p.parts.toSeq.flatten.filter(_.parent.isEmpty).map(_.index).toArray
+      if (ids.isEmpty) None
+      else {
+        val writers = SnapshotWriterFactory(s, p.dir, p.schema)
+        Some(p.dir -> PartitionPruningRDD.create(rdd, ids.contains).mapPartitionsWithIndex {
+          (j, it) => Iterator((t, ids(j), writers.writeAll(ids(j), it)))
+        })
       }
+    }
+    if (writes.isEmpty) Map.empty
+    else try s.sparkContext.union(writes.map(_._2)).collect().map { case (t, i, m) => (t, i) -> m }.toMap
+    catch {
+      case e: Throwable =>
+        writes.foreach { case (dir, _) =>
+          try fs(s, dir).delete(new Path(dir), true) catch { case _: Exception => () }
+        }
+        throw e
     }
   }
 
-  /** Spark's data file name: `part-<task partition id>-<job uuid>-c<n>...`. */
-  private val partFileName = """part-(\d+)-.*""".r
-
-  /** The file-granular write of a flat table, given each partition of
-    * `pinned` (the DataFrame over `rdd`) as (row count, signature):
-    * match non-empty partitions to `parentFiles` by signature (multiset)
-    * and write the rest into `dir`. Returns the entry's files in
-    * partition order, or None — with `dir` deleted — when a written file
-    * is not provably one partition's rows.
+  /** A file-granular plan's entry, its files in partition order. A
+    * written file is signed only when proven: the rows and hash sum its
+    * writer counted equal the signed partition's. None, with the plan's
+    * dir deleted, when a written file is unproven.
     */
-  private def writeChanged(s: SparkSession, root: String, pinned: DataFrame,
-                           rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                           parts: Seq[(Long, String)], parentFiles: Seq[FileEntry],
-                           dir: String): Option[Seq[FileEntry]] = {
-    val pool = scala.collection.mutable.Map(
-      parentFiles.filter(_.signature.isDefined).groupBy(_.signature.get).toSeq: _*)
-    val plan: Seq[Either[FileEntry, Int]] = parts.indices.filter(parts(_)._1 > 0).map { i =>
-      val sig = parts(i)._2
-      pool.get(sig) match {
-        case Some(file +: rest) => pool(sig) = rest; Left(file)
-        case _ => Right(i)
-      }
+  private def linkedOrWritten(s: SparkSession, p: TablePlan,
+                              written: Map[(Int, Int), SnapshotCommitMessage],
+                              t: Int)(parts: Seq[Part]): Option[TableEntry] = {
+    val files = parts.map { part =>
+      part.parent.orElse(written.get((t, part.index))
+        .filter(m => m.rows == part.rows && m.sum.contains(part.sum))
+        .map(m => FileEntry(m.path, m.size, m.stats,
+          Some(signatureOf(p.schema, part.rows, Some(part.sum))))))
     }
-    val changed = plan.collect { case Right(i) => i }
-    if (changed.isEmpty) return Some(plan.collect { case Left(file) => file })
-    GraftShim.ofInternalRows(pinned.sparkSession,
-        org.apache.spark.rdd.PartitionPruningRDD.create(rdd, changed.toSet), pinned.schema)
-      .write.mode("error").parquet(dir)
-    val f = fs(s, root)
-    // task j of the pruned write holds partition changed(j)
-    val written = listParquetRecursive(s, f, new Path(dir)).groupBy { case (fe, _) =>
-      new Path(fe.path).getName match {
-        case partFileName(task) => task.toInt
-        case _ => -1
-      }
-    }
-    val proven = written.keySet == changed.indices.toSet && changed.indices.forall { j =>
-      written(j) match {
-        case Seq((_, footerRows)) => footerRows.contains(parts(changed(j))._1)
-        case _ => false
-      }
-    }
-    if (!proven) {
-      f.delete(new Path(dir), true)
+    if (files.forall(_.isDefined))
+      Some(TableEntry(files.flatten, p.rows, p.signature, schemaJson = Some(p.schema.json)))
+    else {
+      fs(s, p.dir).delete(new Path(p.dir), true)
       None
-    } else {
-      val own = changed.indices.map { j =>
-        changed(j) -> written(j).head._1.copy(signature = Some(parts(changed(j))._2))
-      }.toMap
-      Some(plan.map {
-        case Left(file) => file
-        case Right(i) => own(i)
-      })
     }
+  }
+
+  /** The whole-table write: Spark's `DataFrameWriter` over the pinned
+    * RDD into a fresh generation dir, hive-partitioned by `partCols`.
+    */
+  private def writeWhole(s: SparkSession, tagDir: String, p: TablePlan,
+                         owner: SparkSession, rdd: RDD[InternalRow],
+                         partCols: Seq[String]): TableEntry = {
+    val dir = freshDir(tagDir, p.name)
+    val writer = GraftShim.ofInternalRows(owner, rdd, p.schema)
+      .write.mode("error") // the generation dir is fresh by construction
+    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer).parquet(dir)
+    TableEntry(listParquetRecursive(s, fs(s, dir), new Path(dir)), p.rows, p.signature,
+      dir = if (partCols.nonEmpty) Some(dir) else None, partitionBy = partCols,
+      schemaJson = Some(p.schema.json))
   }
 
   /** Max-per-appId union of two txns ledgers: each writer's recorded
@@ -676,19 +747,15 @@ object Snapshot {
       k -> math.max(a.getOrElse(k, Long.MinValue), b.getOrElse(k, Long.MinValue))
     }.toMap
 
-  /** The parquet files under `dir`, each with the row count its footer
-    * declares (None when the footer could not be read).
-    */
-  private def listParquetRecursive(s: SparkSession, f: FileSystem,
-                                   dir: Path): Seq[(FileEntry, Option[Long])] = {
+  /** The parquet files under `dir`, with their footer stats. */
+  private def listParquetRecursive(s: SparkSession, f: FileSystem, dir: Path): Seq[FileEntry] = {
     // one conf clone for the whole listing — newHadoopConf() copies the
     // entire Hadoop conf, so cloning per file is O(files) wasted work
     // at manifest-build time on many-file snapshots
     val conf = hadoopConf(s)
     leafFiles(f, dir).filter(_.getPath.getName.endsWith(".parquet")).map { st =>
-      val (stats, rows) = footerStats(st.getPath, conf)
-      FileEntry(st.getPath.toString, st.getLen, stats) -> rows
-    }.sortBy(_._1.path)
+      FileEntry(st.getPath.toString, st.getLen, footerStats(st.getPath, conf))
+    }.sortBy(_.path)
   }
 
   /** Every file under `dir`, found by a recursive `listStatus` walk —
@@ -709,15 +776,14 @@ object Snapshot {
 
   /** Harvest per-file min/max for int32/int64 columns from the parquet
     * footer (one metadata read per file, done once when the file enters
-    * a manifest: at export's listing, and by the DSv2 write task that
-    * wrote it). A column appears only if EVERY row group has trustworthy
-    * statistics; integer stats are exact in parquet-mr, so presence ⇒
-    * correctness. Errors degrade to "no stats" — pruning is always
-    * advisory — and to no row count. The row count (the sum over row
-    * groups) comes from the same footer read.
+    * a manifest: at the whole-table write's listing, and by the
+    * [[SnapshotDataWriter]] that wrote it). A column appears only if
+    * EVERY row group has trustworthy statistics; integer stats are exact
+    * in parquet-mr, so presence ⇒ correctness. Errors degrade to "no
+    * stats" — pruning is always advisory.
     */
   private[sources] def footerStats(p: Path, conf: org.apache.hadoop.conf.Configuration)
-      : (Map[String, ColumnStats], Option[Long]) =
+      : Map[String, ColumnStats] =
     try {
       // the SESSION's Hadoop conf, not a bare `new Configuration()` —
       // a configured filesystem (S3 credentials, HA nameservice) would
@@ -754,9 +820,9 @@ object Snapshot {
             }
           }
         }
-        (acc.toMap, Some(reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum))
+        acc.toMap
       } finally reader.close()
-    } catch { case _: Exception => (Map.empty, None) }
+    } catch { case _: Exception => Map.empty }
 
   private def parseInstant(t: String): Option[java.time.Instant] =
     try Some(java.time.Instant.parse(t))

@@ -12,7 +12,7 @@ import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -364,6 +364,12 @@ case class SnapshotAgg(fn: String, column: Option[String], resultType: DataType)
 
 /** Footer-statistics scan: each input file yields ONE row of partial
   * aggregate values read from parquet block metadata — no data pages.
+  * Files are packed into input partitions the way Spark's own file
+  * scans pack splits (`FilePartition.getFilePartitions`, each file
+  * costing its size plus `spark.sql.files.openCostInBytes`): a footer
+  * read is tiny, so one task per file would spend most of its time on
+  * task overhead, while a large table still spreads over
+  * `spark.sql.files.minPartitionNum` (default parallelism) tasks.
   *
   * `owner` sits in a SECOND parameter list: case-class equality then
   * covers only the value fields, so two scans of the same snapshot
@@ -380,8 +386,12 @@ case class SnapshotAggScan(files: Seq[Snapshot.FileEntry], aggs: Seq[SnapshotAgg
     case other => throw new IllegalStateException(s"bad agg spec $other")
   })
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    SnapshotScan.partitions(files)
+  override def planInputPartitions(): Array[InputPartition] = {
+    val openCost = owner.sessionState.conf.filesOpenCostInBytes
+    val split = FilePartition.maxSplitBytes(owner, files.map(_.size + openCost).sum)
+    FilePartition.getFilePartitions(owner, files.sortBy(-_.size).map(SnapshotScan.split), split)
+      .toArray[InputPartition]
+  }
   override def createReaderFactory(): PartitionReaderFactory = {
     // the row-scan fallback reads only the aggregated columns
     val cols = aggs.flatMap(a => a.column.map(c => StructField(c, a.resultType))).distinct
@@ -400,23 +410,26 @@ case class SnapshotAggReaderFactory(aggs: Seq[SnapshotAgg],
     new SnapshotFooterAggReader(partition.asInstanceOf[FilePartition], aggs, rowReader)
 }
 
-/** Reads ONLY the parquet footer and emits one partial-aggregate row.
-  * If any needed column chunk lacks statistics (a foreign writer with
-  * stats disabled — parquet-mr always writes exact int32/int64
-  * min-max), the reader falls back to scanning THIS file's rows through
-  * `rowReader`, Spark's parquet reader, so pushdown stays a pure I/O
-  * optimization and never a correctness dependency.
+/** Reads ONLY the parquet footers and emits one partial-aggregate row
+  * per file of its partition. If any needed column chunk of a file
+  * lacks statistics (a foreign writer with stats disabled — parquet-mr
+  * always writes exact int32/int64 min-max), the reader falls back to
+  * scanning THAT file's rows alone through `rowReader`, Spark's parquet
+  * reader, so pushdown stays a pure I/O optimization and never a
+  * correctness dependency.
   */
 class SnapshotFooterAggReader(partition: FilePartition, aggs: Seq[SnapshotAgg],
                               rowReader: ParquetPartitionReaderFactory)
     extends PartitionReader[InternalRow] {
-  private var done = false
+  private var pos = 0
   private var row: InternalRow = _
 
   override def next(): Boolean = {
-    if (done) return false
+    if (pos >= partition.files.length) return false
+    val file = partition.files(pos)
+    pos += 1
     val inputFile = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(partition.files.head.toPath, rowReader.broadcastedConf.value.value)
+      .fromPath(file.toPath, rowReader.broadcastedConf.value.value)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile)
     val fromFooter: Option[Array[Any]] =
       try {
@@ -477,17 +490,16 @@ class SnapshotFooterAggReader(partition: FilePartition, aggs: Seq[SnapshotAgg],
         if (ok) Some(values) else None
       } finally reader.close()
 
-    row = new GenericInternalRow(fromFooter.getOrElse(rowScanPartials()))
-    done = true
+    row = new GenericInternalRow(fromFooter.getOrElse(rowScanPartials(file)))
     true
   }
 
-  /** Fallback: one pass over this file's rows computing the same
-    * partials — correct whenever the file is readable at all.
+  /** Fallback: one pass over `file`'s rows computing the same partials
+    * — correct whenever the file is readable at all.
     */
-  private def rowScanPartials(): Array[Any] = {
+  private def rowScanPartials(file: PartitionedFile): Array[Any] = {
     val schema = rowReader.readDataSchema
-    val r = rowReader.createReader(partition)
+    val r = rowReader.createReader(FilePartition(partition.index, Array(file)))
     var n = 0L
     val mins = scala.collection.mutable.Map.empty[String, Long]
     val maxs = scala.collection.mutable.Map.empty[String, Long]
@@ -647,16 +659,17 @@ case class SnapshotScan(dataSchema: StructType, required: StructType,
 }
 
 object SnapshotScan {
-  /** One input partition per manifest file, each a single split over
-    * the whole file. `SparkPath.fromPath`, not `fromUrlString`:
-    * manifest paths are unescaped, so a space or a `%` in them is a
-    * literal character, never an escape.
+  /** One split over the whole of a manifest file. `SparkPath.fromPath`,
+    * not `fromUrlString`: manifest paths are unescaped, so a space or a
+    * `%` in them is a literal character, never an escape.
     */
+  def split(f: Snapshot.FileEntry): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPath(new Path(f.path)), 0L, f.size,
+      fileSize = f.size)
+
+  /** One input partition per manifest file, each a whole-file [[split]]. */
   def partitions(files: Seq[Snapshot.FileEntry]): Array[InputPartition] =
-    files.zipWithIndex.map { case (f, i) =>
-      FilePartition(i, Array(PartitionedFile(InternalRow.empty,
-        SparkPath.fromPath(new Path(f.path)), 0L, f.size, fileSize = f.size))): InputPartition
-    }.toArray
+    files.zipWithIndex.map { case (f, i) => FilePartition(i, Array(split(f))): InputPartition }.toArray
 
   /** Spark's parquet reader for `required` of files holding
     * `dataSchema`, over `owner`'s Hadoop conf prepared with the keys
@@ -828,39 +841,29 @@ class SnapshotWriteBuilder(root: String, tag: String, table: String,
   }
   override def build(): org.apache.spark.sql.connector.write.Write =
     new org.apache.spark.sql.connector.write.Write {
-      override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = {
-        // Spark's parquet writer, prepared once on the driver from the
-        // OWNING session's SQL and Hadoop conf (codec, timestamp type,
-        // filesystem settings) — the route Spark's own DSv2 ParquetWrite
-        // takes. The session itself rides along for commit()'s manifest
-        // read-modify-write, which runs on a Spark-internal thread
-        // where SparkSession.active is not trustworthy (advice r9)
-        val sqlConf = owner.sessionState.conf
-        val job = Job.getInstance(owner.sessionState.newHadoopConf())
-        val writerFactory = ParquetUtils.prepareWrite(sqlConf, job, info.schema(),
-          new ParquetOptions(Map.empty[String, String], sqlConf))
-        SnapshotBatchWrite(root, tag, table, info.schema().json, truncateFirst, txn,
-          txnRetentionMs)(owner, writerFactory, new SerializableConfiguration(job.getConfiguration))
-      }
+      // the OWNING session prepares the writers and rides along for
+      // commit()'s manifest read-modify-write, which runs on a
+      // Spark-internal thread where SparkSession.active is not
+      // trustworthy (advice r9)
+      override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
+        SnapshotBatchWrite(root, tag, table, truncateFirst, txn, txnRetentionMs)(
+          owner, SnapshotWriterFactory(owner, s"$root/$tag/$table", info.schema()))
     }
 }
 
-case class SnapshotBatchWrite(root: String, tag: String, table: String,
-                              schemaJson: String, truncateFirst: Boolean,
+case class SnapshotBatchWrite(root: String, tag: String, table: String, truncateFirst: Boolean,
                               txn: Option[(String, Long)] = None,
                               txnRetentionMs: Option[Long] = None)(
                               val owner: SparkSession,
-                              val writerFactory: OutputWriterFactory,
-                              val hconf: SerializableConfiguration)
+                              val writers: SnapshotWriterFactory)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write._
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    SnapshotWriterFactory(s"$root/$tag/$table", schemaJson, writerFactory, hconf)
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = writers
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = SnapshotBatchWrite.commitLock.synchronized {
     val s = owner
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    val schema = writers.schema
     // rows == 0 partials never opened a file (lazy writer) — drop them
     // so empty partitions / empty micro-batches don't accrete 0-row
     // files (and scan partitions) in the manifest forever
@@ -887,7 +890,7 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String,
       // referenced by nothing) are deleted through the same conf
       // abort() uses — not left for vacuum, or every replayed batch
       // would leak a file set.
-      val conf = hconf.value
+      val conf = writers.hconf.value
       committed.foreach { m =>
         val p = new org.apache.hadoop.fs.Path(m.path)
         // a transient delete failure leaks an unreferenced duplicate
@@ -933,9 +936,20 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String,
             s"${schema.catalogString} — appended files must match the entry " +
             "schema exactly; use overwrite (truncate) to change it")
     }
-    val files = (priorEntry.map(_.files).getOrElse(Nil) ++
-      committed.map(m => Snapshot.FileEntry(m.path, m.size, m.stats))).sortBy(_.path)
+    val files = (priorEntry.map(_.files).getOrElse(Nil) ++ committed.map { m =>
+      Snapshot.FileEntry(m.path, m.size, m.stats,
+        m.sum.map(h => Snapshot.signatureOf(schema, m.rows, Some(h))))
+    }).sortBy(_.path)
     val rows = priorEntry.map(_.rows).getOrElse(0L) + committed.map(_.rows).sum
+    // The content term [[Snapshot.export]] signs with: the sum is
+    // commutative, so the entry's prior sum (zero for a fresh write or
+    // a truncate) plus the new files' sums is the sum over all its rows.
+    // Without a prior content term (legacy, `nohash-`) or without a row
+    // hash (maps), the signature stays prefix-only and never matches an
+    // export's.
+    val content = priorEntry.fold(Option(java.math.BigInteger.ZERO))(Snapshot.contentOf(_, schema))
+      .filter(_ => writers.hash.isDefined)
+      .map(prior => committed.flatMap(_.sum).foldLeft(prior)(_ add _))
     // carry the ledger forward (through overwrites too — see above) and
     // record this transaction's version on top, stamping the commit
     // time for age-based retention (TableEntry's RETENTION doc)
@@ -943,7 +957,7 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String,
     val ledger = priorLedger.map(_.txns).getOrElse(Map.empty[String, Long]) ++ txn
     val stamps = priorLedger.map(_.txnStamps).getOrElse(Map.empty[String, Long]) ++
       txn.map { case (app, _) => app -> nowMs }
-    val stamped = Snapshot.TableEntry(files, rows, Snapshot.signatureOf(schema, rows),
+    val stamped = Snapshot.TableEntry(files, rows, Snapshot.signatureOf(schema, rows, content),
       schemaJson = Some(schema.json), txns = ledger, txnStamps = stamps)
     // optional piggybacked sweep: this writer's own entry was stamped
     // `nowMs` above, so it can never expire itself
@@ -970,11 +984,11 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // the executors wrote through hconf (the owning session's conf as
-    // captured at build time) — clean up through the SAME conf, so the
-    // delete resolves the same filesystem regardless of which session
-    // is "active" on the abort thread
-    val conf = hconf.value
+    // the executors wrote through the writers' conf (the owning
+    // session's conf as captured at build time) — clean up through the
+    // SAME conf, so the delete resolves the same filesystem regardless
+    // of which session is "active" on the abort thread
+    val conf = writers.hconf.value
     messages.collect { case m: SnapshotCommitMessage => m }.foreach { m =>
       val p = new org.apache.hadoop.fs.Path(m.path)
       p.getFileSystem(conf).delete(p, false)
@@ -1006,29 +1020,71 @@ object SnapshotBatchWrite {
   @volatile private[graft] var commitRaceHook: () => Unit = () => ()
 }
 
+/** One written file: its path, size, rows and footer stats, and the
+  * exact sum of [[Snapshot.rowHash]] over its rows (None when the
+  * schema cannot be hashed).
+  */
 case class SnapshotCommitMessage(path: String, size: Long, rows: Long,
-                                 stats: Map[String, Snapshot.ColumnStats] = Map.empty)
+                                 stats: Map[String, Snapshot.ColumnStats] = Map.empty,
+                                 sum: Option[java.math.BigInteger] = None)
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
-case class SnapshotWriterFactory(dir: String, schemaJson: String,
+/** The task-side writers of a snapshot table's `dir`, for the DSv2 sink
+  * and for [[Snapshot.export]] alike: Spark's parquet `writerFactory`
+  * and the Hadoop conf it was prepared in, and the table's row `hash`.
+  */
+case class SnapshotWriterFactory(dir: String, schema: StructType,
                                  writerFactory: OutputWriterFactory,
-                                 hconf: SerializableConfiguration)
+                                 hconf: SerializableConfiguration,
+                                 hash: Option[Expression])
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new SnapshotDataWriter(dir, partitionId, taskId,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType], writerFactory, hconf.value)
+  override def createWriter(partitionId: Int, taskId: Long): SnapshotDataWriter =
+    new SnapshotDataWriter(dir, partitionId, taskId, schema, writerFactory, hconf.value, hash)
+
+  /** Writes `rows` to one file, as one task of Spark's DSv2 write does:
+    * commit on success, abort (deleting the file) on failure.
+    */
+  def writeAll(partitionId: Int, rows: Iterator[InternalRow]): SnapshotCommitMessage = {
+    val w = createWriter(partitionId, org.apache.spark.TaskContext.get().taskAttemptId())
+    try {
+      rows.foreach(w.write)
+      w.commit()
+    } catch {
+      case e: Throwable =>
+        try w.abort() catch { case s: Throwable => e.addSuppressed(s) }
+        throw e
+    } finally w.close()
+  }
+}
+
+object SnapshotWriterFactory {
+  /** Spark's parquet writer for `schema`, prepared once on the driver
+    * from the `owner` session's SQL and Hadoop conf (codec, timestamp
+    * type, filesystem settings) — the route Spark's own DSv2
+    * ParquetWrite takes — and the row hash decided on the driver.
+    */
+  def apply(owner: SparkSession, dir: String, schema: StructType): SnapshotWriterFactory = {
+    val sqlConf = owner.sessionState.conf
+    val job = Job.getInstance(owner.sessionState.newHadoopConf())
+    val writerFactory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    SnapshotWriterFactory(dir, schema, writerFactory,
+      new SerializableConfiguration(job.getConfiguration), Snapshot.rowHash(schema))
+  }
 }
 
 /** One write task's part file, encoded by Spark's own parquet writer
   * (`writerFactory`, from `ParquetUtils.prepareWrite`): same parquet
-  * schema, codec and timestamp encoding as [[Snapshot.export]]'s files,
-  * and every column type Spark's parquet writer stores. The file's
-  * manifest stats come from its footer, through the same
-  * [[Snapshot.footerStats]] export's listing uses.
+  * schema, codec and timestamp encoding as a whole-table export, and
+  * every column type Spark's parquet writer stores. The file's manifest
+  * stats come from its footer, through the same [[Snapshot.footerStats]]
+  * the whole-table export's listing uses. With a `hash`, the writer also sums
+  * [[Snapshot.rowHash]] over the rows it writes, exactly (128-bit), so
+  * the file is signed as [[Snapshot.export]] signs a partition.
   */
 class SnapshotDataWriter(dir: String, partitionId: Int, taskId: Long, schema: StructType,
-                         writerFactory: OutputWriterFactory, conf: Configuration)
+                         writerFactory: OutputWriterFactory, conf: Configuration,
+                         hash: Option[Expression])
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
 
   // partitionId+taskId dedup retries within one application; the UUID
@@ -1044,19 +1100,21 @@ class SnapshotDataWriter(dir: String, partitionId: Int, taskId: Long, schema: St
       new TaskID(new JobID("snapshot", 0), TaskType.MAP, partitionId), (taskId & Int.MaxValue).toInt)
     writerFactory.newInstance(path.toString, schema, new TaskAttemptContextImpl(conf, attempt))
   }
+  private val sum = hash.map(new Snapshot.HashSum(_))
   private var rows = 0L
 
   override def write(row: InternalRow): Unit = {
     writer.write(row)
+    sum.foreach(_.add(row))
     rows += 1L
   }
 
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
+  override def commit(): SnapshotCommitMessage = {
     if (rows == 0) return SnapshotCommitMessage(path.toString, 0L, 0L)
     writer.close()
     val fs = path.getFileSystem(conf)
     SnapshotCommitMessage(path.toString, fs.getFileStatus(path).getLen, rows,
-      Snapshot.footerStats(path, conf)._1)
+      Snapshot.footerStats(path, conf), sum.map(_.value))
   }
 
   override def abort(): Unit = if (rows > 0) {

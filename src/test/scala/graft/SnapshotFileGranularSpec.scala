@@ -148,23 +148,6 @@ class SnapshotFileGranularSpec extends SparkSpec {
     assert(m2.tables("t") == m.tables("t"))
   }
 
-  /** `body`'s result and the jobs it ran, counted by a SparkListener. */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.TestListenerBus.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("one signature job signs every table of an export") {
     val root = Files.createTempDirectory("snap_fg_onejob").toString
     val tables = Map("a" -> base, "b" -> rows(0, 300, 1), "c" -> rows(100, 2000, 3),
@@ -200,5 +183,83 @@ class SnapshotFileGranularSpec extends SparkSpec {
       assert(together(name).files.size == df.rdd.getNumPartitions &&
         together(name).files.forall(_.signature.isDefined), name)
     }
+  }
+
+  /** Writes `df` into `table` of `tag` through the DSv2 sink. */
+  private def sink(root: String, tag: String, table: String, df: DataFrame,
+                   mode: String = "append"): Unit =
+    df.write.format("graft.sources.SnapshotSource").option("root", root).option("tag", tag)
+      .option("table", table).option("schema", df.schema.json).mode(mode).save()
+
+  test("an export that rewrites partitions of three tables runs two jobs") {
+    val root = Files.createTempDirectory("snap_fg_twojobs").toString
+    val tables = Map("a" -> base, "b" -> rows(0, 300, 1), "c" -> rows(100, 2000, 3),
+      "d" -> rows(7, 50, 2))
+    val (m1, fullJobs) = withJobCount(Snapshot.export(spark, tables, root, "t1"))
+    assert(fullJobs == 2, "a full export signs in one job and writes every table in another")
+    val changed = tables ++ Map(
+      "a" -> base.unionByName(rows(4000, 500, 1)),
+      "b" -> tables("b").withColumn("v", when(col("id") === 5, lit(-1L)).otherwise(col("v"))),
+      "c" -> tables("c").unionByName(rows(9000, 10, 1)))
+    val (m2, jobs) = withJobCount(Snapshot.export(spark, changed, root, "t2", Some("t1")))
+    assert(jobs == 2, "one signature job and one write job")
+    Seq("a", "b", "c").foreach { t =>
+      val files = m2.tables(t).files
+      assert(files.exists(_.path.contains("/t2/")) && files.forall(_.signature.isDefined), t)
+      assert(sameRows(Snapshot.read(spark, root, "t2", t), changed(t)), t)
+    }
+    assert(paths(m2, "a").take(4) == paths(m1, "a") && paths(m2, "c").take(3) == paths(m1, "c"),
+      "unchanged partitions link the parent's files")
+    assert(m2.tables("d") == m1.tables("d"))
+  }
+
+  test("a DSv2-appended entry, read back and exported, is inherited whole") {
+    val root = Files.createTempDirectory("snap_fg_sinkinherit").toString
+    Snapshot.export(spark, Map("t" -> base), root, "t1")
+    sink(root, "t1", "t", rows(4000, 500, 2))
+    val appended = Snapshot.readManifest(spark, root, "t1").tables("t")
+    assert(appended.rows == 4500 && appended.files.size == 6)
+    val (m2, jobs) = withJobCount(
+      Snapshot.export(spark, Map("t" -> Snapshot.read(spark, root, "t1", "t")), root, "t2", Some("t1")))
+    assert(m2.tables("t") == appended, "the child's entry must be the parent's: same files")
+    assert(jobs == 1 && !new java.io.File(s"$root/t2/t").exists(), "nothing may be written")
+    // the same rows with one value changed are rewritten
+    val edited = Snapshot.read(spark, root, "t1", "t")
+      .withColumn("v", when(col("id") === 4100, lit(-1L)).otherwise(col("v")))
+    val m3 = Snapshot.export(spark, Map("t" -> edited), root, "t3", Some("t1"))
+    assert(m3.tables("t").signature != appended.signature)
+    assert(paths(m3, "t").exists(_.contains("/t3/")))
+    assert(sameRows(Snapshot.read(spark, root, "t3", "t"), edited))
+  }
+
+  test("the DSv2 sink signs its files and an appended table as export does") {
+    val root = Files.createTempDirectory("snap_fg_sinksig").toString
+    val extra = rows(4000, 500, 1)
+    val m1 = Snapshot.export(spark, Map("t" -> base), root, "t1")
+    sink(root, "t1", "t", extra)
+    val entry = Snapshot.readManifest(spark, root, "t1").tables("t")
+    val sinkFiles = entry.files.filterNot(m1.tables("t").files.contains)
+    val exported = Snapshot.export(spark, Map("x" -> extra), root, "x1").tables("x").files
+    assert(sinkFiles.size == 1 && exported.size == 1)
+    assert(sinkFiles.head.signature.isDefined && sinkFiles.head.signature == exported.head.signature)
+    assert(entry.signature == sumForm(base.unionByName(extra))._1)
+  }
+
+  test("a truncate signs only the new files; a map-column append stays prefix-only") {
+    val root = Files.createTempDirectory("snap_fg_sinktrunc").toString
+    val extra = rows(4000, 500, 2)
+    Snapshot.export(spark, Map("t" -> base), root, "t1")
+    sink(root, "t1", "t", extra, "overwrite")
+    val truncated = Snapshot.readManifest(spark, root, "t1").tables("t")
+    assert(truncated.rows == 500 && truncated.signature == sumForm(extra)._1)
+    assert(truncated.files.size == 2 && truncated.files.forall(_.signature.isDefined))
+    val maps = rows(0, 400, 2).withColumn("m", map(lit("k"), col("v")))
+    Snapshot.export(spark, Map("m" -> maps), root, "t1m")
+    sink(root, "t1m", "m", maps.limit(10))
+    val mapEntry = Snapshot.readManifest(spark, root, "t1m").tables("m")
+    assert(mapEntry.rows == 410)
+    assert(mapEntry.signature == s"410:${maps.schema.catalogString.hashCode}",
+      "an unhashable append keeps the prefix-only signature")
+    assert(mapEntry.files.forall(_.signature.isEmpty))
   }
 }

@@ -90,7 +90,7 @@ class SnapshotOwnerSessionSpec extends SparkSpec
     val (ownerIsA, probe) = withActiveB {
       val bw = table.newWriteBuilder(info).build().toBatch
         .asInstanceOf[graft.sources.SnapshotBatchWrite]
-      (bw.owner eq spark, bw.hconf.value.get("graft.owner.probe"))
+      (bw.owner eq spark, bw.writers.hconf.value.get("graft.owner.probe"))
     }
     assert(ownerIsA, "commit() would run against the wrong session")
     assert(probe == "A", s"write captured the wrong session's conf: $probe")

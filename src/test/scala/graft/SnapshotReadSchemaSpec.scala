@@ -11,23 +11,6 @@ import graft.sources.{Snapshot, Tables}
   */
 class SnapshotReadSchemaSpec extends SparkSpec {
 
-  /** `body`'s result and the Spark jobs it ran, counted by a SparkListener. */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.TestListenerBus.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("constructing Snapshot.read and readAsOf runs no Spark job") {
     val root = Files.createTempDirectory("snap_read_jobs").toString
     val nation = Tables.nation(spark, sf)

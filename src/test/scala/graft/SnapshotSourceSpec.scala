@@ -171,6 +171,27 @@ class SnapshotSourceSpec extends SparkSpec {
     assert((r.getLong(0), r.getInt(1), r.getInt(2)) == (25L, 0, 24))
   }
 
+  test("a 24-file footer aggregate packs files into fewer tasks, equal to the row scan") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val r = Files.createTempDirectory("snap_agg24").toString
+    val df = spark.range(0, 24000, 1, 24).select(col("id"), (col("id") % 97).cast("int").as("k"))
+    Snapshot.export(spark, Map("t" -> df), r, "t1")
+    assert(Snapshot.readManifest(spark, r, "t1").tables("t").files.size == 24)
+    def lookup(t: org.apache.spark.sql.DataFrame) =
+      t.agg(count(lit(1)), min("id"), max("id"), min("k"), max("k"))
+    val agg = lookup(spark.read.format("graft.sources.SnapshotSource")
+      .option("root", r).option("tag", "t1").option("table", "t").load())
+    val result = agg.collect().head
+    val scans = new AdaptiveSparkPlanHelper {}.collect(agg.queryExecution.executedPlan) {
+      case b: BatchScanExec => b
+    }
+    assert(scans.size == 1 && scans.head.scan.description().contains("GraftSnapshotAggScan"))
+    val planned = scans.head.batch.planInputPartitions().length
+    assert(planned > 1 && planned < 24, s"$planned input partitions for 24 files")
+    assert(result == lookup(Snapshot.read(spark, r, "t1", "t")).collect().head)
+  }
+
   test("aggregate pushdown declines filters, groupBy and stat-unsafe columns") {
     // filter present → normal scan + residual evaluation
     val filtered = dsv2("nation").where(col("n_nationkey") > 5).agg(count(lit(1)))
@@ -274,15 +295,7 @@ class SnapshotSourceSpec extends SparkSpec {
     val bad = Tables.nation(spark, sf)
       .select(col("n_nationkey"), expr("make_interval(0, 0, 0, n_regionkey)").as("iv"))
     val root = Files.createTempDirectory("snap_bad").toString
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    val (viaWriter, viaBuilder) = try {
+    val ((viaWriter, viaBuilder), jobs) = withJobCount {
       // through DataFrameWriter, Spark's analyzer refuses the interval
       // column before the sink is asked for a writer
       val w = intercept[org.apache.spark.sql.AnalysisException] {
@@ -308,14 +321,11 @@ class SnapshotSourceSpec extends SparkSpec {
         table.asInstanceOf[graft.sources.SnapshotTable].newWriteBuilder(info)
       }
       (w, b)
-    } finally {
-      org.apache.spark.TestListenerBus.drain(sc)
-      sc.removeSparkListener(listener)
     }
     assert(viaWriter.getMessage.contains("INTERVAL"), viaWriter.getMessage)
     assert(viaBuilder.getMessage.contains("snapshot table 'bad': column 'iv' has type interval") &&
       viaBuilder.getMessage.contains("parquet writer cannot store"), viaBuilder.getMessage)
-    assert(jobs.get == 0, s"the rejection must come before any Spark job; ${jobs.get} ran")
+    assert(jobs == 0, s"the rejection must come before any Spark job; $jobs ran")
     assert(!new java.io.File(s"$root/g1").exists(), "a rejected write must leave no files")
   }
 
