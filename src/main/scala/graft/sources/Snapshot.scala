@@ -4,9 +4,9 @@ import java.math.BigInteger
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow, XXH64}
 import org.apache.spark.sql.types.StructType
 
 /** Snapshot export/read/retention pipeline — the reference tool's own
@@ -22,13 +22,13 @@ import org.apache.spark.sql.types.StructType
   * Incremental export exploits immutability the way the reference
   * exploits SSTable immutability: a table whose content signature
   * matches the parent snapshot is NOT rewritten — its manifest entry
-  * points at the parent's files. Inheritance is also FILE-granular for
-  * flat tables: each partition of the exported DataFrame is signed
+  * points at the parent's files. Inheritance is also FILE-granular:
+  * each partition of the exported DataFrame is signed
   * separately, a partition equal to one of the parent's files links to
   * that file, and only the remaining partitions are written (the
   * reference uploads only the SSTables HDFS does not have). One entry
   * may therefore own files in several tags, and retention keeps every
-  * ancestor tag a kept tag links into. See [[export]] for the fallbacks.
+  * ancestor tag a kept tag links into. See [[export]].
   *
   * All I/O goes through the Hadoop FileSystem API, so the same code
   * runs against local disk here and HDFS/S3 on a cluster. The
@@ -48,19 +48,24 @@ object Snapshot {
     */
   case class ColumnStats(min: Long, max: Long)
   /** `signature` is the file's own content signature, in the table
-    * signature's format (see [[signatureOf]]). [[export]] records it
-    * when the file provably holds exactly one signed partition's rows,
-    * and the DSv2 sink for every file it writes of a schema the row hash
-    * can hash. A later export links a partition with the same signature
-    * to this file instead of rewriting it. Absent for files of legacy
-    * manifests, whole-table fallback writes and map-column appends; such
-    * files never match.
+    * signature's format (see [[signatureOf]]): the rows and row-hash sum
+    * its [[SnapshotDataWriter]] counted while writing it. A later export
+    * links a partition with the same signature to this file instead of
+    * rewriting it. Absent for files of legacy manifests; such files
+    * never match.
     */
   case class FileEntry(path: String, size: Long,
                        stats: Map[String, ColumnStats] = Map.empty,
                        signature: Option[String] = None)
-  /** `dir` is set for hive-partitioned tables (partition values are
-    * directory-encoded, so readers need the base dir, not bare files).
+  /** A stored file's manifest `entry`, with the row count and row-hash
+    * sum its signature records.
+    */
+  case class SignedFile(entry: FileEntry, rows: Long, sum: BigInteger)
+  /** `dir` and `partitionBy` are legacy-only: entries written by
+    * earlier builds' hive-partitioned export carry them (partition
+    * values are directory-encoded, so readers need the base dir, not
+    * bare files). No writer sets them any more; [[read]] still decodes
+    * such entries and the DSv2 source still rejects them by name.
     *
     * `txns` is the per-table idempotence ledger for at-least-once
     * writers (the Delta `SetTransaction` discipline): latest committed
@@ -332,7 +337,8 @@ object Snapshot {
     * serve every partition value as NULL, while a DSv2 append would
     * link flat files into the partitioned layout and corrupt it. Fail
     * at LOAD time with the correct path instead: [[read]] decodes
-    * partition dirs and prunes partitions; [[export]] writes them.
+    * partition dirs and prunes partitions. Only legacy entries are
+    * partitioned: [[export]] no longer writes hive layouts.
     */
   private[sources] def requireUnpartitioned(table: String, entry: TableEntry): Unit =
     if (entry.partitionBy.nonEmpty)
@@ -340,7 +346,7 @@ object Snapshot {
         s"snapshot table '$table' is hive-partitioned " +
           s"(partitionBy=${entry.partitionBy.mkString(",")}): the DSv2 source serves " +
           "flat entries only — read it with Snapshot.read (partition-dir decoding + " +
-          "partition pruning) and write it with Snapshot.export")
+          "partition pruning), or re-export it flat with Snapshot.export")
 
   /** One existence probe (single filesystem call — listTags pays one
     * RPC per tag directory, which catalog hot paths must not).
@@ -355,98 +361,110 @@ object Snapshot {
     finally in.close()
   }
 
-  /** The per-row term of every content signature: xxhash64, seed 42,
-    * over the row's columns in order. Each column is bound by ordinal,
-    * so a name is never re-parsed (a column literally named "a.b" is
-    * hashed as itself), and the value equals the hash of the whole row
-    * taken as one struct. None, decided on the driver, for a schema the
-    * hash cannot consume: map columns (Spark's `checkInputDataTypes`
-    * refuses them) or no columns at all.
+  /** The exact sum of every content signature's per-row term, kept as
+    * a 128-bit two's-complement pair so no sum wraps. The term is XXH64,
+    * seed 42, over the bytes of the row's `UnsafeRow` form: the null
+    * bitset, the fixed-width slots (zeroed for a NULL) and the
+    * variable-length section with its padding zeroed. So where a NULL
+    * sits is part of the hash: `(1, NULL, 5)` and `(1, 5, NULL)`,
+    * `[5, NULL]` and `[5]`, an empty array and a NULL all differ. Every
+    * column is bound by ordinal and taken as nullable, so a column name
+    * is never re-parsed and the declared nullability cannot change the
+    * bytes. Equal values in different bit patterns (NaN payloads, -0.0,
+    * map entry order) hash apart, which costs a rewrite, never a false
+    * match. A row that arrives as an `UnsafeRow` of the schema's width
+    * (what Spark's operators and scans emit) is hashed as it stands,
+    * without the copy: Spark's row writers zero null slots and padding,
+    * so its bytes are the projection's. The projection is compiled in
+    * the task that creates this.
     */
-  private[sources] def rowHash(schema: StructType): Option[Expression] =
-    if (schema.isEmpty) None
-    else Some(XxHash64(schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      BoundReference(i, f.dataType, nullable = true)
-    }, 42L)).filter(_.checkInputDataTypes().isSuccess)
-
-  /** The exact sum of [[rowHash]] over the rows a task adds, kept as a
-    * 128-bit two's-complement pair so no sum wraps. The projection is
-    * compiled in the task that creates this.
-    */
-  private[sources] final class HashSum(hash: Expression) {
-    private val proj = UnsafeProjection.create(Seq(hash))
+  private[sources] final class HashSum(schema: StructType) {
+    private val proj = UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map {
+      case (f, i) => BoundReference(i, f.dataType, nullable = true)
+    })
     private var hi, lo = 0L
     def add(row: InternalRow): Unit = {
-      val x = proj(row).getLong(0)
+      val u = row match {
+        case u: UnsafeRow if u.numFields == schema.length => u
+        case _ => proj(row)
+      }
+      val x = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.getSizeInBytes, 42L)
       val sum = lo + x
       // sign extension of x, plus the carry out of the unsigned low word
       hi += (x >> 63) + (if (java.lang.Long.compareUnsigned(sum, lo) < 0) 1L else 0L)
       lo = sum
     }
-    def value: BigInteger =
-      BigInteger.valueOf(hi).shiftLeft(64).add(new BigInteger(java.lang.Long.toUnsignedString(lo)))
+    /** The sum so far; the next sum starts from zero. */
+    def take(): BigInteger = {
+      val v = BigInteger.valueOf(hi).shiftLeft(64).add(new BigInteger(java.lang.Long.toUnsignedString(lo)))
+      hi = 0L
+      lo = 0L
+      v
+    }
   }
 
-  /** Each partition's (row count, [[rowHash]] sum) of every table, from
-    * ONE job for all tables of an export, with no shuffle: the job runs
-    * over the union of the tables' pinned RDDs, each task tagged with
-    * its table's index and its partition's, and hashes the rows
-    * directly, with no per-table query plan. A table signature adds its
-    * partitions up; a partition's own signature (same format, its own
-    * rows and sum) is what [[export]] matches against the parent's
-    * files. The sum is commutative and exact, so partition order and
-    * parallelism cannot change it.
-    *
-    * A table [[rowHash]] cannot hash (maps) gets None, and the caller
-    * degrades to a no-fingerprint signature that never matches — such
-    * tables are always rewritten (conservative, never wrong).
+  /** Each partition's (row count, [[HashSum]]) of every table, from ONE
+    * job for all tables, with no shuffle: the job runs over the union of
+    * the tables' pinned RDDs, each task tagged with its table's index
+    * and its partition's, and hashes the rows directly, with no
+    * per-table query plan. A table signature adds its partitions up; a
+    * partition's own signature (same format, its own rows and sum) is
+    * what [[export]] matches against the parent's files. The sum is
+    * commutative and exact, so partition order and parallelism cannot
+    * change it.
     */
   private def partitionSums(s: SparkSession, rdds: Seq[RDD[InternalRow]],
-                            schemas: Seq[StructType]): Seq[Option[Seq[(Long, BigInteger)]]] = {
-    val hashes = schemas.map(rowHash)
-    val tagged = rdds.indices.flatMap(t => hashes(t).map { hash =>
+                            schemas: Seq[StructType]): Seq[Seq[(Long, BigInteger)]] = {
+    val tagged = rdds.indices.map { t =>
+      val schema = schemas(t)
       rdds(t).mapPartitionsWithIndex { (i, it) =>
-        val sum = new HashSum(hash)
+        val sum = new HashSum(schema)
         var rows = 0L
         while (it.hasNext) {
           sum.add(it.next())
           rows += 1
         }
-        Iterator((t, i, rows, sum.value))
+        Iterator((t, i, rows, sum.take()))
       }
-    })
+    }
     val byTable =
       if (tagged.isEmpty) Map.empty[Int, Array[(Int, Int, Long, BigInteger)]]
       else s.sparkContext.union(tagged).collect().groupBy(_._1)
     rdds.indices.map { t =>
-      hashes(t).map { _ =>
-        byTable.getOrElse(t, Array.empty).sortBy(_._2).toSeq.map { case (_, _, n, h) => n -> h }
-      }
+      byTable.getOrElse(t, Array.empty).sortBy(_._2).toSeq.map { case (_, _, n, h) => n -> h }
     }
   }
 
+  /** The version of the content term. The term's row hash once skipped
+    * NULLs; a signature without this version never equals one with it,
+    * so a table signed before the change is rewritten once instead of
+    * matched by a hash that cannot see where a NULL sits.
+    */
+  private val ContentVersion = "h2"
+
   /** A table's or a file's content signature: row count, schema hash,
-    * and — when every row was hashed — the content term, the exact sum
-    * of [[rowHash]] over the rows (`empty` for none). The sum is
-    * commutative, so two writers that hold the same rows in any files
-    * sign alike: [[export]] signs partitions, and the DSv2 sink signs
-    * the files it writes and adds them to the entry's prior sum. Without
-    * the content term, a change that preserves row count and schema (an
+    * and the versioned content term, the exact [[HashSum]] over the
+    * rows (`empty` for none). The sum is commutative, so two writers
+    * that hold the same rows in any files sign alike: [[export]] signs
+    * partitions, every [[SnapshotDataWriter]] signs the files it writes,
+    * and a table's signature is the sum over its files. Without the
+    * content term, a change that preserves row count and schema (an
     * UPDATE) would silently inherit the parent's stale files — wrong
     * data, not a degraded mode — so a signature without one (a legacy
-    * entry, map columns) never equals any export's.
+    * entry, or an append onto one) never equals any export's.
     */
   private[sources] def signatureOf(schema: StructType, rows: Long,
                                    content: Option[BigInteger] = None): String = {
     val prefix = s"$rows:${schema.catalogString.hashCode}"
-    content.fold(prefix)(c => s"$prefix:${if (rows == 0) "empty" else c}")
+    content.fold(prefix)(c => s"$prefix:$ContentVersion:${if (rows == 0) "empty" else c}")
   }
 
   /** The content sum `entry`'s signature carries for `schema`: its
-    * number, zero for `empty`, None when it has no content term.
+    * number, zero for `empty`, None when it has no content term of the
+    * current version.
     */
   private[sources] def contentOf(entry: TableEntry, schema: StructType): Option[BigInteger] = {
-    val prefix = s"${signatureOf(schema, entry.rows)}:"
+    val prefix = s"${signatureOf(schema, entry.rows)}:$ContentVersion:"
     if (!entry.signature.startsWith(prefix)) None
     else entry.signature.substring(prefix.length) match {
       case "empty" => Some(BigInteger.ZERO)
@@ -477,37 +495,41 @@ object Snapshot {
     * signature is unchanged are linked to the parent's files instead
     * of rewritten (incremental transfer).
     *
-    * An export runs TWO Spark jobs, whatever the number of tables:
-    *  - every table's DataFrame is planned once and its row RDD pinned,
-    *    and ONE job signs the partitions of all tables
-    *    ([[partitionSums]]);
-    *  - the driver then decides every table: inherit the parent's entry
-    *    whole (equal signature), link it file by file, or write it
-    *    whole; and ONE job writes every changed partition of every
-    *    file-granular table, each to one file in its table's fresh
-    *    generation dir, through the DSv2 sink's [[SnapshotDataWriter]].
-    *    Its tasks see the same rows in partition `i` as the signature
-    *    job, and linked partitions are pruned from it, never recomputed.
+    * Every table's DataFrame is planned once and its row RDD pinned.
+    * An export then runs at most TWO Spark jobs, whatever the number of
+    * tables:
+    *  - ONE job signs the partitions of every table the parent has an
+    *    entry of the same name for ([[partitionSums]]); the driver then
+    *    decides each such table: inherit the parent's entry whole (equal
+    *    signature), or link its partitions that equal a parent file and
+    *    write the others. A table the parent lacks is not signed, since
+    *    there is nothing to compare it with: all its partitions are
+    *    written, so a first export reads each input row once;
+    *  - ONE job writes every partition to be written, of every table,
+    *    into its table's fresh generation dir through the DSv2 sink's
+    *    [[SnapshotDataWriter]], the only writer of snapshot files. Its
+    *    tasks see the same rows in partition `i` as the signature job,
+    *    and linked partitions are pruned from it, never recomputed.
+    *
+    * Signatures describe what is stored. A written file is signed by the
+    * rows and hash sum its writer counted; a linked file keeps its
+    * parent signature, which the partition matched. A table's signature
+    * is the sum over its files, so an export that writes every file
+    * signs as one that signs first, and a nondeterministic input is
+    * signed by the rows it stored, not by the signature job's.
     *
     * File by file: a non-empty partition whose signature equals a parent
     * file's links to that file; each parent file stands for at most one
     * partition, so two identical partitions still get two files.
     * Matching is scoped to a parent entry with the same schema JSON: the
     * row hash ignores column names, so a rename with identical values
-    * must not inherit. A written file records its signature only when it
-    * is proven: the rows and hash sum its writer counted equal the
-    * signed partition's. Parent files without a signature (legacy
-    * manifests, whole-table writes) never match, and empty partitions
-    * write nothing.
-    *
-    * The whole-table write (Spark's `DataFrameWriter`, its own job per
-    * table, no per-file signatures) serves what the granular write
-    * cannot: hive-partitioned tables, columns the row hash cannot hash
-    * (maps) or Spark's parquet writer cannot store, empty tables, a
-    * changed partition holding more rows than
-    * `spark.sql.files.maxRecordsPerFile` (decided before any write), and
-    * a written file that fails its proof. If the write job fails, the
-    * fresh generation dirs it wrote into are deleted.
+    * must not inherit. Parent files without a signature (legacy
+    * manifests) never match. Empty partitions write nothing, so an empty
+    * table is an entry with no files. A partition over
+    * `spark.sql.files.maxRecordsPerFile` rows is written as several
+    * files, each signed. Column types Spark's parquet writer cannot
+    * store fail the export before any job runs. If the write job fails,
+    * the fresh generation dirs it wrote into are deleted.
     *
     * Each write lands in a FRESH generation directory
     * `root/<tag>/<table>/g-<uuid>` — never `mode("overwrite")` into a
@@ -527,33 +549,33 @@ object Snapshot {
     * parent link.
     */
   def export(s: SparkSession, tables: Map[String, DataFrame], root: String,
-             tag: String, parent: Option[String] = None,
-             partitionBy: Map[String, Seq[String]] = Map.empty): Manifest = {
+             tag: String, parent: Option[String] = None): Manifest = {
     requireSafeSegment("snapshot tag", tag)
     // the parent tag is a path segment too: export(parent=Some("x/y"))
     // would readManifest a traversal-shaped path outside/below root and
     // inherit ITS file entries into the committed manifest (advice r15)
     parent.foreach(requireSafeSegment("snapshot parent tag", _))
     tables.keys.foreach(requireSafeSegment("snapshot table name", _))
+    tables.foreach { case (name, df) => SnapshotWriterFactory.requireStorable(name, df.schema) }
     val parentManifest = parent.map(readManifest(s, root, _))
     // pin the partitions: one planned RDD per table feeds the signature
     // job and the write, so partition i holds the same rows in both
     val named = tables.toSeq
     val rdds = named.map(_._2.queryExecution.toRdd)
-    val sums = partitionSums(s, rdds, named.map(_._2.schema))
-    // generation dirs are qualified, as the whole-table listing's paths are
+    val parents = named.map { case (name, _) => parentManifest.flatMap(_.tables.get(name)) }
+    // only a table with a parent entry has anything to match; the others
+    // are signed by the write alone
+    val signed = named.indices.filter(parents(_).isDefined)
+    val sums = signed.zip(partitionSums(s, signed.map(rdds), signed.map(named(_)._2.schema))).toMap
+    // generation dirs are qualified, so manifest paths name their filesystem
     val tagDir = s"${fs(s, root).makeQualified(new Path(root))}/$tag"
     val plans = named.indices.map { t =>
       val (name, df) = named(t)
-      planTable(s, tagDir, name, df.schema, rdds(t), sums(t),
-        partitionBy.getOrElse(name, Nil), parentManifest.flatMap(_.tables.get(name)))
+      planTable(tagDir, name, df.schema, rdds(t).getNumPartitions, sums.get(t), parents(t))
     }
     val written = writeParts(s, plans.zip(rdds))
     val entries = plans.indices.map { t =>
-      val p = plans(t)
-      p.name -> p.inherited.orElse(p.parts.flatMap(linkedOrWritten(s, p, written, t)))
-        .getOrElse(writeWhole(s, tagDir, p, named(t)._2.sparkSession, rdds(t),
-          partitionBy.getOrElse(p.name, Nil)))
+      plans(t).name -> plans(t).inherited.getOrElse(storedEntry(plans(t), written, t))
     }.toMap
     exportRaceHook() // test seam: the pre-commit window a concurrent retain can land in
     // OCC commit: the generation read and the preconditioned swap sit in
@@ -615,80 +637,71 @@ object Snapshot {
     }
   }
 
-  /** A non-empty partition `index` of a file-granular table, with its
-    * signed row count and hash sum: it links the `parent` file, or is
-    * written when that is None.
+  /** Partition `index` of a table [[export]] stores: linked to the
+    * `parent` file, which holds the partition's rows, or written when
+    * that is None.
     */
-  private case class Part(index: Int, rows: Long, sum: BigInteger, parent: Option[FileEntry])
+  private case class Part(index: Int, parent: Option[SignedFile])
 
-  /** [[export]]'s driver-side decision for one signed table: the
-    * parent's entry when it is `inherited` whole, else its `parts` when
-    * it is linked and written file by file into `dir`, else (both None)
-    * the whole-table write.
+  /** [[export]]'s driver-side decision for one table: the parent's
+    * entry when it is `inherited` whole, else its `parts`, linked or
+    * written into `dir`.
     */
-  private case class TablePlan(name: String, rows: Long, signature: String, schema: StructType,
-                               inherited: Option[TableEntry], parts: Option[Seq[Part]],
-                               dir: String)
+  private case class TablePlan(name: String, schema: StructType, dir: String,
+                               inherited: Option[TableEntry], parts: Seq[Part])
 
-  private def freshDir(tagDir: String, name: String) =
-    s"$tagDir/$name/g-${java.util.UUID.randomUUID().toString.take(8)}"
-
-  /** One table of [[export]], decided from its [[partitionSums]] result
-    * before any data moves.
+  /** One table of [[export]], decided before any data moves: from its
+    * [[partitionSums]] result when it was signed, else every one of its
+    * `numParts` partitions is written.
     */
-  private def planTable(s: SparkSession, tagDir: String, name: String,
-                        schema: StructType, rdd: RDD[InternalRow],
-                        sums: Option[Seq[(Long, BigInteger)]], partCols: Seq[String],
+  private def planTable(tagDir: String, name: String, schema: StructType, numParts: Int,
+                        sums: Option[Seq[(Long, BigInteger)]],
                         parentEntry: Option[TableEntry]): TablePlan = {
-    val rows = sums.fold(rdd.count())(_.map(_._1).sum)
-    val sig = sums match {
-      case None => s"${signatureOf(schema, rows)}:nohash-${java.util.UUID.randomUUID()}"
-      case Some(ps) => signatureOf(schema, rows, Some(ps.map(_._2).foldLeft(BigInteger.ZERO)(_ add _)))
-    }
-    val inherited = parentEntry.filter(_.signature == sig)
-    val maxRecords = s.sessionState.conf.maxRecordsPerFile
-    val parquet = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val parts =
-      if (inherited.isDefined || partCols.nonEmpty || rows == 0 ||
-          !schema.forall(f => parquet.supportDataType(f.dataType))) None
-      else sums.map { ps =>
-        val parentFiles = parentEntry.filter(_.schemaJson.contains(schema.json)).toSeq.flatMap(_.files)
-        val pool = scala.collection.mutable.Map(
-          parentFiles.filter(_.signature.isDefined).groupBy(_.signature.get).toSeq: _*)
-        ps.indices.filter(ps(_)._1 > 0).map { i =>
-          val (n, h) = ps(i)
-          val fileSig = signatureOf(schema, n, Some(h))
-          Part(i, n, h, pool.get(fileSig) match {
-            case Some(file +: rest) => pool(fileSig) = rest; Some(file)
-            case _ => None
-          })
+    val dir = s"$tagDir/$name/g-${java.util.UUID.randomUUID().toString.take(8)}"
+    sums match {
+      case None => TablePlan(name, schema, dir, None, (0 until numParts).map(Part(_, None)))
+      case Some(ps) =>
+        val rows = ps.map(_._1).sum
+        val sig = signatureOf(schema, rows, Some(ps.map(_._2).foldLeft(BigInteger.ZERO)(_ add _)))
+        val inherited = parentEntry.filter(_.signature == sig)
+        val parts = if (inherited.isDefined) Nil else {
+          val parentFiles = parentEntry.filter(_.schemaJson.contains(schema.json)).toSeq.flatMap(_.files)
+          val pool = scala.collection.mutable.Map(
+            parentFiles.filter(_.signature.isDefined).groupBy(_.signature.get).toSeq: _*)
+          ps.indices.filter(ps(_)._1 > 0).map { i =>
+            val (n, h) = ps(i)
+            val fileSig = signatureOf(schema, n, Some(h))
+            Part(i, pool.get(fileSig) match {
+              case Some(file +: rest) => pool(fileSig) = rest; Some(SignedFile(file, n, h))
+              case _ => None
+            })
+          }
         }
-      }.filter(_.forall(p => p.parent.isDefined || maxRecords <= 0 || p.rows <= maxRecords))
-    TablePlan(name, rows, sig, schema, inherited, parts, freshDir(tagDir, name))
+        TablePlan(name, schema, dir, inherited, parts)
+    }
   }
 
-  /** ONE job writing every unlinked part of every file-granular plan:
-    * a task per part writes its partition of the pinned RDD to one file
-    * in its table's dir through a [[SnapshotDataWriter]] prepared like
-    * the DSv2 sink's. Returns each task's commit message by (plan
-    * index, partition index). If the job fails, the dirs it wrote into
-    * are deleted.
+  /** ONE job writing every unlinked part of every plan: a task per
+    * part writes its partition of the pinned RDD into its table's dir
+    * through a [[SnapshotDataWriter]] prepared like the DSv2 sink's.
+    * Returns the files each task wrote, by (plan index, partition
+    * index). If the job fails, the dirs it wrote into are deleted.
     */
   private def writeParts(s: SparkSession, plans: Seq[(TablePlan, RDD[InternalRow])])
-      : Map[(Int, Int), SnapshotCommitMessage] = {
+      : Map[(Int, Int), Seq[SignedFile]] = {
     val writes = plans.zipWithIndex.flatMap { case ((p, rdd), t) =>
       // ascending, as PartitionPruningRDD keeps them: task j holds ids(j)
-      val ids = p.parts.toSeq.flatten.filter(_.parent.isEmpty).map(_.index).toArray
+      val ids = p.parts.filter(_.parent.isEmpty).map(_.index).toArray
       if (ids.isEmpty) None
       else {
         val writers = SnapshotWriterFactory(s, p.dir, p.schema)
-        Some(p.dir -> PartitionPruningRDD.create(rdd, ids.contains).mapPartitionsWithIndex {
-          (j, it) => Iterator((t, ids(j), writers.writeAll(ids(j), it)))
+        Some(p.dir -> PartitionPruningRDD.create(rdd, ids.toSet).mapPartitionsWithIndex {
+          (j, it) => Iterator((t, ids(j), writers.writeAll(ids(j), it).files))
         })
       }
     }
     if (writes.isEmpty) Map.empty
-    else try s.sparkContext.union(writes.map(_._2)).collect().map { case (t, i, m) => (t, i) -> m }.toMap
+    else try s.sparkContext.union(writes.map(_._2)).collect().map { case (t, i, f) => (t, i) -> f }.toMap
     catch {
       case e: Throwable =>
         writes.foreach { case (dir, _) =>
@@ -698,40 +711,15 @@ object Snapshot {
     }
   }
 
-  /** A file-granular plan's entry, its files in partition order. A
-    * written file is signed only when proven: the rows and hash sum its
-    * writer counted equal the signed partition's. None, with the plan's
-    * dir deleted, when a written file is unproven.
+  /** The entry of a table [[export]] linked or wrote: its files in
+    * partition order, and a signature summed over them.
     */
-  private def linkedOrWritten(s: SparkSession, p: TablePlan,
-                              written: Map[(Int, Int), SnapshotCommitMessage],
-                              t: Int)(parts: Seq[Part]): Option[TableEntry] = {
-    val files = parts.map { part =>
-      part.parent.orElse(written.get((t, part.index))
-        .filter(m => m.rows == part.rows && m.sum.contains(part.sum))
-        .map(m => FileEntry(m.path, m.size, m.stats,
-          Some(signatureOf(p.schema, part.rows, Some(part.sum))))))
-    }
-    if (files.forall(_.isDefined))
-      Some(TableEntry(files.flatten, p.rows, p.signature, schemaJson = Some(p.schema.json)))
-    else {
-      fs(s, p.dir).delete(new Path(p.dir), true)
-      None
-    }
-  }
-
-  /** The whole-table write: Spark's `DataFrameWriter` over the pinned
-    * RDD into a fresh generation dir, hive-partitioned by `partCols`.
-    */
-  private def writeWhole(s: SparkSession, tagDir: String, p: TablePlan,
-                         owner: SparkSession, rdd: RDD[InternalRow],
-                         partCols: Seq[String]): TableEntry = {
-    val dir = freshDir(tagDir, p.name)
-    val writer = GraftShim.ofInternalRows(owner, rdd, p.schema)
-      .write.mode("error") // the generation dir is fresh by construction
-    (if (partCols.nonEmpty) writer.partitionBy(partCols: _*) else writer).parquet(dir)
-    TableEntry(listParquetRecursive(s, fs(s, dir), new Path(dir)), p.rows, p.signature,
-      dir = if (partCols.nonEmpty) Some(dir) else None, partitionBy = partCols,
+  private def storedEntry(p: TablePlan, written: Map[(Int, Int), Seq[SignedFile]],
+                          t: Int): TableEntry = {
+    val files = p.parts.flatMap(part => part.parent.fold(written.getOrElse((t, part.index), Nil))(Seq(_)))
+    val rows = files.map(_.rows).sum
+    TableEntry(files.map(_.entry), rows,
+      signatureOf(p.schema, rows, Some(files.map(_.sum).foldLeft(BigInteger.ZERO)(_ add _))),
       schemaJson = Some(p.schema.json))
   }
 
@@ -747,25 +735,13 @@ object Snapshot {
       k -> math.max(a.getOrElse(k, Long.MinValue), b.getOrElse(k, Long.MinValue))
     }.toMap
 
-  /** The parquet files under `dir`, with their footer stats. */
-  private def listParquetRecursive(s: SparkSession, f: FileSystem, dir: Path): Seq[FileEntry] = {
-    // one conf clone for the whole listing — newHadoopConf() copies the
-    // entire Hadoop conf, so cloning per file is O(files) wasted work
-    // at manifest-build time on many-file snapshots
-    val conf = hadoopConf(s)
-    leafFiles(f, dir).filter(_.getPath.getName.endsWith(".parquet")).map { st =>
-      FileEntry(st.getPath.toString, st.getLen, footerStats(st.getPath, conf))
-    }.sortBy(_.path)
-  }
-
   /** Every file under `dir`, found by a recursive `listStatus` walk —
     * the shape of Spark's own leaf-file listing. Hadoop's recursive
     * file iterator would wrap each entry in a `LocatedFileStatus`, whose
     * constructor loads the file's permission, owner and group; without
     * native Hadoop the local filesystem answers that with one forked
-    * shell command per file, and neither caller uses block locations.
-    * Paths, `.crc`
-    * filtering (ChecksumFileSystem's `listStatus`) and modification
+    * shell command per file, and vacuum uses no block locations.
+    * Paths, `.crc` filtering (ChecksumFileSystem's `listStatus`) and modification
     * times are the filesystem's own. A missing `dir` throws
     * FileNotFoundException.
     */
@@ -775,8 +751,7 @@ object Snapshot {
   }
 
   /** Harvest per-file min/max for int32/int64 columns from the parquet
-    * footer (one metadata read per file, done once when the file enters
-    * a manifest: at the whole-table write's listing, and by the
+    * footer (one metadata read per file, done once by the
     * [[SnapshotDataWriter]] that wrote it). A column appears only if
     * EVERY row group has trustworthy statistics; integer stats are exact
     * in parquet-mr, so presence ⇒ correctness. Errors degrade to "no

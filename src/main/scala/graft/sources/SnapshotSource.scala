@@ -12,11 +12,11 @@ import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.internal.SQLConf
@@ -827,14 +827,7 @@ class SnapshotWriteBuilder(root: String, tag: String, table: String,
       v
     }
 
-  /** Column types Spark's parquet writer cannot store (intervals, for
-    * one) fail the query HERE, on the driver, before any task runs —
-    * not once per executor task after the job has started.
-    */
-  info.schema().fields.find(f => !new ParquetFileFormat().supportDataType(f.dataType))
-    .foreach(f => throw new IllegalArgumentException(
-      s"snapshot table '$table': column '${f.name}' has type ${f.dataType.catalogString}, " +
-        "which Spark's parquet writer cannot store"))
+  SnapshotWriterFactory.requireStorable(table, info.schema())
 
   override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
     truncateFirst = true; this
@@ -864,10 +857,9 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String, truncate
   override def commit(messages: Array[WriterCommitMessage]): Unit = SnapshotBatchWrite.commitLock.synchronized {
     val s = owner
     val schema = writers.schema
-    // rows == 0 partials never opened a file (lazy writer) — drop them
-    // so empty partitions / empty micro-batches don't accrete 0-row
-    // files (and scan partitions) in the manifest forever
-    val committed = messages.collect { case m: SnapshotCommitMessage if m.rows > 0 => m }
+    // an empty task wrote no file (lazy writer), so empty partitions and
+    // empty micro-batches never accrete 0-row files in the manifest
+    val committed = messages.toSeq.collect { case m: SnapshotCommitMessage => m.files }.flatten
     val prior =
       try Some(Snapshot.readManifest(s, root, tag))
       catch { case _: java.io.FileNotFoundException => None }
@@ -891,8 +883,8 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String, truncate
       // abort() uses — not left for vacuum, or every replayed batch
       // would leak a file set.
       val conf = writers.hconf.value
-      committed.foreach { m =>
-        val p = new org.apache.hadoop.fs.Path(m.path)
+      committed.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f.entry.path)
         // a transient delete failure leaks an unreferenced duplicate
         // that nothing else will ever sweep (vacuum only walks tags it
         // can attribute) — the commit must still succeed as a no-op,
@@ -911,7 +903,7 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String, truncate
     * non-local return).
     */
   private def commitFresh(s: SparkSession, schema: StructType,
-                          committed: Seq[SnapshotCommitMessage],
+                          committed: Seq[Snapshot.SignedFile],
                           prior: Option[Snapshot.Manifest],
                           priorLedger: Option[Snapshot.TableEntry]): Unit = {
     val priorEntry = if (truncateFirst) None else prior.flatMap(_.tables.get(table))
@@ -936,20 +928,15 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String, truncate
             s"${schema.catalogString} — appended files must match the entry " +
             "schema exactly; use overwrite (truncate) to change it")
     }
-    val files = (priorEntry.map(_.files).getOrElse(Nil) ++ committed.map { m =>
-      Snapshot.FileEntry(m.path, m.size, m.stats,
-        m.sum.map(h => Snapshot.signatureOf(schema, m.rows, Some(h))))
-    }).sortBy(_.path)
+    val files = (priorEntry.map(_.files).getOrElse(Nil) ++ committed.map(_.entry)).sortBy(_.path)
     val rows = priorEntry.map(_.rows).getOrElse(0L) + committed.map(_.rows).sum
     // The content term [[Snapshot.export]] signs with: the sum is
     // commutative, so the entry's prior sum (zero for a fresh write or
     // a truncate) plus the new files' sums is the sum over all its rows.
-    // Without a prior content term (legacy, `nohash-`) or without a row
-    // hash (maps), the signature stays prefix-only and never matches an
-    // export's.
+    // Without a current prior content term (a legacy entry), the
+    // signature stays prefix-only and never matches an export's.
     val content = priorEntry.fold(Option(java.math.BigInteger.ZERO))(Snapshot.contentOf(_, schema))
-      .filter(_ => writers.hash.isDefined)
-      .map(prior => committed.flatMap(_.sum).foldLeft(prior)(_ add _))
+      .map(prior => committed.map(_.sum).foldLeft(prior)(_ add _))
     // carry the ledger forward (through overwrites too — see above) and
     // record this transaction's version on top, stamping the commit
     // time for age-based retention (TableEntry's RETENTION doc)
@@ -989,8 +976,8 @@ case class SnapshotBatchWrite(root: String, tag: String, table: String, truncate
     // SAME conf, so the delete resolves the same filesystem regardless
     // of which session is "active" on the abort thread
     val conf = writers.hconf.value
-    messages.collect { case m: SnapshotCommitMessage => m }.foreach { m =>
-      val p = new org.apache.hadoop.fs.Path(m.path)
+    messages.collect { case m: SnapshotCommitMessage => m.files }.flatten.foreach { f =>
+      val p = new org.apache.hadoop.fs.Path(f.entry.path)
       p.getFileSystem(conf).delete(p, false)
     }
   }
@@ -1020,29 +1007,26 @@ object SnapshotBatchWrite {
   @volatile private[graft] var commitRaceHook: () => Unit = () => ()
 }
 
-/** One written file: its path, size, rows and footer stats, and the
-  * exact sum of [[Snapshot.rowHash]] over its rows (None when the
-  * schema cannot be hashed).
-  */
-case class SnapshotCommitMessage(path: String, size: Long, rows: Long,
-                                 stats: Map[String, Snapshot.ColumnStats] = Map.empty,
-                                 sum: Option[java.math.BigInteger] = None)
+/** The files one write task wrote, each signed by its writer. */
+case class SnapshotCommitMessage(files: Seq[Snapshot.SignedFile])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 /** The task-side writers of a snapshot table's `dir`, for the DSv2 sink
-  * and for [[Snapshot.export]] alike: Spark's parquet `writerFactory`
-  * and the Hadoop conf it was prepared in, and the table's row `hash`.
+  * and for [[Snapshot.export]] alike: Spark's parquet `writerFactory`,
+  * the Hadoop conf it was prepared in, and the session's
+  * `spark.sql.files.maxRecordsPerFile` (0 or less: no limit).
   */
 case class SnapshotWriterFactory(dir: String, schema: StructType,
                                  writerFactory: OutputWriterFactory,
                                  hconf: SerializableConfiguration,
-                                 hash: Option[Expression])
+                                 maxRecordsPerFile: Long)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): SnapshotDataWriter =
-    new SnapshotDataWriter(dir, partitionId, taskId, schema, writerFactory, hconf.value, hash)
+    new SnapshotDataWriter(dir, partitionId, taskId, schema, writerFactory, hconf.value,
+      maxRecordsPerFile)
 
-  /** Writes `rows` to one file, as one task of Spark's DSv2 write does:
-    * commit on success, abort (deleting the file) on failure.
+  /** Writes `rows`, as one task of Spark's DSv2 write does: commit on
+    * success, abort (deleting the files) on failure.
     */
   def writeAll(partitionId: Int, rows: Iterator[InternalRow]): SnapshotCommitMessage = {
     val w = createWriter(partitionId, org.apache.spark.TaskContext.get().taskAttemptId())
@@ -1060,8 +1044,8 @@ case class SnapshotWriterFactory(dir: String, schema: StructType,
 object SnapshotWriterFactory {
   /** Spark's parquet writer for `schema`, prepared once on the driver
     * from the `owner` session's SQL and Hadoop conf (codec, timestamp
-    * type, filesystem settings) — the route Spark's own DSv2
-    * ParquetWrite takes — and the row hash decided on the driver.
+    * type, file size limit, filesystem settings) — the route Spark's own
+    * DSv2 ParquetWrite takes.
     */
   def apply(owner: SparkSession, dir: String, schema: StructType): SnapshotWriterFactory = {
     val sqlConf = owner.sessionState.conf
@@ -1069,57 +1053,85 @@ object SnapshotWriterFactory {
     val writerFactory = ParquetUtils.prepareWrite(sqlConf, job, schema,
       new ParquetOptions(Map.empty[String, String], sqlConf))
     SnapshotWriterFactory(dir, schema, writerFactory,
-      new SerializableConfiguration(job.getConfiguration), Snapshot.rowHash(schema))
+      new SerializableConfiguration(job.getConfiguration), sqlConf.maxRecordsPerFile)
+  }
+
+  /** Column types Spark's parquet writer cannot store (intervals, for
+    * one) fail HERE, on the driver, before any job runs — not once per
+    * executor task after a job has started. The DSv2 sink and
+    * [[Snapshot.export]] both check their tables with this.
+    */
+  def requireStorable(table: String, schema: StructType): Unit = {
+    val parquet = new ParquetFileFormat
+    schema.fields.find(f => !parquet.supportDataType(f.dataType))
+      .foreach(f => throw new IllegalArgumentException(
+        s"snapshot table '$table': column '${f.name}' has type ${f.dataType.catalogString}, " +
+          "which Spark's parquet writer cannot store"))
   }
 }
 
-/** One write task's part file, encoded by Spark's own parquet writer
-  * (`writerFactory`, from `ParquetUtils.prepareWrite`): same parquet
-  * schema, codec and timestamp encoding as a whole-table export, and
-  * every column type Spark's parquet writer stores. The file's manifest
-  * stats come from its footer, through the same [[Snapshot.footerStats]]
-  * the whole-table export's listing uses. With a `hash`, the writer also sums
-  * [[Snapshot.rowHash]] over the rows it writes, exactly (128-bit), so
-  * the file is signed as [[Snapshot.export]] signs a partition.
+/** One write task's part files, encoded by Spark's own parquet writer
+  * (`writerFactory`, from `ParquetUtils.prepareWrite`): the one writer
+  * of every snapshot file, export's and the DSv2 sink's, so every
+  * column type Spark's parquet writer stores is stored alike. A file
+  * opens on the first row, so an empty task leaves none, and a new
+  * file starts every `maxRecordsPerFile` rows (0 or less: never), as
+  * Spark's own file writers roll. Each file is signed by what it
+  * holds: the writer counts its rows and sums [[Snapshot.HashSum]]'s
+  * row hash over them exactly, and its manifest stats come from its
+  * footer ([[Snapshot.footerStats]]).
   */
 class SnapshotDataWriter(dir: String, partitionId: Int, taskId: Long, schema: StructType,
                          writerFactory: OutputWriterFactory, conf: Configuration,
-                         hash: Option[Expression])
+                         maxRecordsPerFile: Long)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
 
-  // partitionId+taskId dedup retries within one application; the UUID
-  // makes names collision-free across applications appending to the
-  // same table from fresh JVMs (where taskIds restart at 0)
-  private val path = new Path(
-    f"$dir/part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.parquet")
-
-  // opened on the first row: an empty partition must leave NO file
-  // behind (its commit message is dropped by BatchWrite.commit)
-  private lazy val writer = {
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID("snapshot", 0), TaskType.MAP, partitionId), (taskId & Int.MaxValue).toInt)
-    writerFactory.newInstance(path.toString, schema, new TaskAttemptContextImpl(conf, attempt))
-  }
-  private val sum = hash.map(new Snapshot.HashSum(_))
+  private val attempt = new TaskAttemptID(
+    new TaskID(new JobID("snapshot", 0), TaskType.MAP, partitionId), (taskId & Int.MaxValue).toInt)
+  private val sum = new Snapshot.HashSum(schema)
+  private val done = Seq.newBuilder[Snapshot.SignedFile]
+  // every file opened, so abort() can delete the finished ones too
+  private val opened = scala.collection.mutable.ArrayBuffer.empty[Path]
+  private var writer: OutputWriter = _
   private var rows = 0L
 
   override def write(row: InternalRow): Unit = {
+    if (writer != null && maxRecordsPerFile > 0 && rows >= maxRecordsPerFile) finish()
+    if (writer == null) {
+      // partitionId+taskId dedup retries within one application; the
+      // UUID makes names collision-free across applications appending to
+      // the same table from fresh JVMs (where taskIds restart at 0)
+      val path = new Path(
+        f"$dir/part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID()}.parquet")
+      opened += path
+      writer = writerFactory.newInstance(path.toString, schema, new TaskAttemptContextImpl(conf, attempt))
+    }
     writer.write(row)
-    sum.foreach(_.add(row))
+    sum.add(row)
     rows += 1L
   }
 
-  override def commit(): SnapshotCommitMessage = {
-    if (rows == 0) return SnapshotCommitMessage(path.toString, 0L, 0L)
+  /** Closes the open file and signs it with its rows and hash sum. */
+  private def finish(): Unit = {
     writer.close()
-    val fs = path.getFileSystem(conf)
-    SnapshotCommitMessage(path.toString, fs.getFileStatus(path).getLen, rows,
-      Snapshot.footerStats(path, conf), sum.map(_.value))
+    writer = null
+    val path = opened.last
+    val h = sum.take()
+    done += Snapshot.SignedFile(
+      Snapshot.FileEntry(path.toString, path.getFileSystem(conf).getFileStatus(path).getLen,
+        Snapshot.footerStats(path, conf), Some(Snapshot.signatureOf(schema, rows, Some(h)))),
+      rows, h)
+    rows = 0L
   }
 
-  override def abort(): Unit = if (rows > 0) {
-    try writer.close() catch { case _: Exception => () }
-    path.getFileSystem(conf).delete(path, false)
+  override def commit(): SnapshotCommitMessage = {
+    if (writer != null) finish()
+    SnapshotCommitMessage(done.result())
+  }
+
+  override def abort(): Unit = {
+    if (writer != null) try writer.close() catch { case _: Exception => () }
+    opened.foreach(p => p.getFileSystem(conf).delete(p, false))
   }
 
   override def close(): Unit = ()

@@ -13,13 +13,14 @@ import graft.sources.{Snapshot, Tables}
   * silently serves a partial view, while a DSv2 append would link
   * flat files into the partitioned layout. [[Snapshot.read]] is the
   * partitioned path (partition-dir decoding + pruning, SnapshotSpec).
+  * Export no longer writes hive layouts, so the entries here are the
+  * legacy ones [[SparkSpec.legacyPartitioned]] writes.
   */
 class PartitionedDsv2ProbeSpec extends SparkSpec {
 
   private def exportPartitioned(): String = {
     val root = Files.createTempDirectory("snap_part_dsv2").toString
-    Snapshot.export(spark, Map("nation" -> Tables.nation(spark, sf)), root, "pt",
-      partitionBy = Map("nation" -> Seq("n_regionkey")))
+    legacyPartitioned(root, "pt", "nation", Tables.nation(spark, sf), Seq("n_regionkey"))
     root
   }
 
@@ -34,12 +35,10 @@ class PartitionedDsv2ProbeSpec extends SparkSpec {
   }
 
   test("catalog loadTable of a partitioned entry fails loudly, flat sibling still serves") {
-    val root = exportPartitioned()
-    // add a flat table next to the partitioned one under the same tag
-    Snapshot.export(spark,
-      Map("nation" -> Tables.nation(spark, sf), // partitioned again (same signature path rewrites)
-        "region" -> Tables.region(spark, sf)), root, "pt",
-      partitionBy = Map("nation" -> Seq("n_regionkey")))
+    val root = Files.createTempDirectory("snap_part_dsv2").toString
+    // a flat table and a partitioned one under the same tag
+    Snapshot.export(spark, Map("region" -> Tables.region(spark, sf)), root, "pt")
+    legacyPartitioned(root, "pt", "nation", Tables.nation(spark, sf), Seq("n_regionkey"))
     spark.conf.set("spark.sql.catalog.snapx", "graft.sources.SnapshotCatalog")
     spark.conf.set("spark.sql.catalog.snapx.root", root)
     try {

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, XXH64}
 import org.apache.spark.sql.functions._
 import graft.sources.Snapshot
 
@@ -28,15 +29,26 @@ class SnapshotFileGranularSpec extends SparkSpec {
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
-  /** The table signature in the earlier
-    * `sum(xxhash64(struct(*)).cast("decimal(38,0)"))` form, with its hash sum. */
+  /** The table signature of `df`'s rows, with its hash sum, computed
+    * apart from the snapshot code: XXH64 (seed 42) of each row's
+    * `UnsafeRow` bytes, collected, and summed as a BigInteger.
+    */
   private def sumForm(df: DataFrame): (String, java.math.BigInteger) = {
-    val cols = df.columns.map(n => col(s"`$n`"))
-    val old = df.select(xxhash64(struct(cols: _*)).cast("decimal(38,0)").as("h"))
-      .agg(count(lit(1)), sum(col("h"))).head
-    val total = old.getDecimal(1).toBigInteger
-    (s"${old.getLong(0)}:${df.schema.catalogString.hashCode}:$total", total)
+    val schema = df.schema
+    val hashes = df.queryExecution.toRdd.mapPartitions { it =>
+      val proj = UnsafeProjection.create(schema)
+      it.map { r =>
+        val u = proj(r)
+        XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.getSizeInBytes, 42L)
+      }
+    }.collect()
+    val total = hashes.foldLeft(java.math.BigInteger.ZERO)((a, h) => a.add(java.math.BigInteger.valueOf(h)))
+    val content = if (hashes.isEmpty) "empty" else total.toString
+    (s"${hashes.length}:${schema.catalogString.hashCode}:h2:$content", total)
   }
+
+  /** Rows in the parquet file at `path`. */
+  private def fileRows(path: String): Long = spark.read.parquet(path).count()
 
   test("an append writes only the new partition; the other paths point into the parent") {
     val root = Files.createTempDirectory("snap_fg_append").toString
@@ -98,22 +110,33 @@ class SnapshotFileGranularSpec extends SparkSpec {
     assert(Snapshot.read(spark, root, "t3", "t").count() == 2010)
   }
 
-  test("forcing maxRecordsPerFile falls back to the whole-table write") {
+  test("maxRecordsPerFile rolls written partitions into signed files; unchanged ones still link") {
     val root = Files.createTempDirectory("snap_fg_maxrec").toString
     val m1 = Snapshot.export(spark, Map("t" -> base), root, "t1")
     val grown = base.unionByName(rows(4000, 500, 1))
+    val more = rows(6000, 700, 1)
     val key = "spark.sql.files.maxRecordsPerFile"
-    spark.conf.set(key, "300")
-    val m2 =
-      try Snapshot.export(spark, Map("t" -> grown), root, "t2", Some("t1"))
-      finally spark.conf.unset(key)
+    def capped[T](body: => T): T = {
+      spark.conf.set(key, "300")
+      try body finally spark.conf.unset(key)
+    }
+    val m2 = capped(Snapshot.export(spark, Map("t" -> grown), root, "t2", Some("t1")))
     val files = m2.tables("t").files
-    // 4 x 1000 rows + 500 rows at 300 per file: 4 x 4 + 2 files, all new, none signed
-    assert(files.size == 18 && files.forall(_.path.contains("/t2/")), paths(m2, "t"))
-    assert(files.forall(_.signature.isEmpty), "a multi-file task must not record per-file signatures")
-    assert(paths(m2, "t").intersect(paths(m1, "t")).isEmpty)
+    // the 4 unchanged 1000-row partitions link; the new 500 rows become 300 + 200
+    assert(files.size == 6 && files.take(4) == m1.tables("t").files, paths(m2, "t"))
+    val fresh = files.drop(4)
+    assert(fresh.forall(_.path.contains("/t2/")) && fresh.map(f => fileRows(f.path)).sorted == Seq(200L, 300L))
+    assert(fresh.forall(_.signature.isDefined), "every rolled file is signed")
+    assert(m2.tables("t").signature == sumForm(grown)._1)
     assert(sameRows(Snapshot.read(spark, root, "t2", "t"), grown))
-    // the abandoned pruned write left nothing behind beside the fallback generation
+    // the DSv2 sink rolls under the same conf: 700 rows as 300 + 300 + 100
+    capped(sink(root, "t2", "t", more))
+    val appended = Snapshot.readManifest(spark, root, "t2").tables("t")
+    val sinkFiles = appended.files.filterNot(files.contains)
+    assert(sinkFiles.map(f => fileRows(f.path)).sorted == Seq(100L, 300L, 300L))
+    assert(sinkFiles.forall(_.signature.isDefined))
+    assert(appended.signature == sumForm(grown.unionByName(more))._1)
+    // one generation dir holds the written files
     val gens = new java.io.File(s"$root/t2/t").listFiles().filter(_.getName.startsWith("g-"))
     assert(gens.length == 1, gens.map(_.getName).mkString(", "))
   }
@@ -167,17 +190,15 @@ class SnapshotFileGranularSpec extends SparkSpec {
       "maps" -> rows(0, 400, 2).withColumn("m", map(lit("k"), col("v"))),
       "empty" -> rows(0, 0, 2))
     val together = Snapshot.export(spark, tables, root, "all").tables
-    // a map column cannot be hashed: its signature carries a fresh nonce
-    def stable(sig: String) = sig.replaceAll(":nohash-.*", ":nohash")
     tables.foreach { case (name, df) =>
       val alone = Snapshot.export(spark, Map(name -> df), root, s"only_$name").tables(name)
-      assert(stable(together(name).signature) == stable(alone.signature), name)
+      assert(together(name).signature == alone.signature, name)
       assert(together(name).files.map(_.signature) == alone.files.map(_.signature), name)
       assert(together(name).rows == alone.rows, name)
     }
-    assert(together("maps").signature.contains(":nohash-") && together("maps").rows == 400)
     assert(together("empty").signature.endsWith(":empty") && together("empty").rows == 0)
-    Seq("plain1", "plain2").foreach { name =>
+    assert(together("empty").files.isEmpty)
+    Seq("plain1", "plain2", "maps").foreach { name =>
       val df = tables(name)
       assert(together(name).signature == sumForm(df)._1, name)
       assert(together(name).files.size == df.rdd.getNumPartitions &&
@@ -196,7 +217,7 @@ class SnapshotFileGranularSpec extends SparkSpec {
     val tables = Map("a" -> base, "b" -> rows(0, 300, 1), "c" -> rows(100, 2000, 3),
       "d" -> rows(7, 50, 2))
     val (m1, fullJobs) = withJobCount(Snapshot.export(spark, tables, root, "t1"))
-    assert(fullJobs == 2, "a full export signs in one job and writes every table in another")
+    assert(fullJobs == 1, "a full export signs every table by the one job that writes it")
     val changed = tables ++ Map(
       "a" -> base.unionByName(rows(4000, 500, 1)),
       "b" -> tables("b").withColumn("v", when(col("id") === 5, lit(-1L)).otherwise(col("v"))),
@@ -245,7 +266,7 @@ class SnapshotFileGranularSpec extends SparkSpec {
     assert(entry.signature == sumForm(base.unionByName(extra))._1)
   }
 
-  test("a truncate signs only the new files; a map-column append stays prefix-only") {
+  test("a truncate signs only the new files; a map-column append is signed like any other") {
     val root = Files.createTempDirectory("snap_fg_sinktrunc").toString
     val extra = rows(4000, 500, 2)
     Snapshot.export(spark, Map("t" -> base), root, "t1")
@@ -255,11 +276,102 @@ class SnapshotFileGranularSpec extends SparkSpec {
     assert(truncated.files.size == 2 && truncated.files.forall(_.signature.isDefined))
     val maps = rows(0, 400, 2).withColumn("m", map(lit("k"), col("v")))
     Snapshot.export(spark, Map("m" -> maps), root, "t1m")
-    sink(root, "t1m", "m", maps.limit(10))
+    val few = maps.where(col("id") < 10)
+    sink(root, "t1m", "m", few)
     val mapEntry = Snapshot.readManifest(spark, root, "t1m").tables("m")
     assert(mapEntry.rows == 410)
-    assert(mapEntry.signature == s"410:${maps.schema.catalogString.hashCode}",
-      "an unhashable append keeps the prefix-only signature")
-    assert(mapEntry.files.forall(_.signature.isEmpty))
+    assert(mapEntry.signature == sumForm(maps.unionByName(few))._1)
+    assert(mapEntry.files.forall(_.signature.isDefined))
+  }
+
+  test("a nondeterministic input is signed by the rows its files store") {
+    val root = Files.createTempDirectory("snap_fg_nondet").toString
+    // a fresh value on every evaluation, so the signature job and the
+    // write job see different rows (rand() is seeded per partition and
+    // recomputes the same values)
+    val noise = udf(() => java.util.concurrent.ThreadLocalRandom.current().nextLong()).asNondeterministic()
+    val noisy = base.withColumn("r", noise())
+    Snapshot.export(spark, Map("t" -> noisy), root, "t1")
+    val m2 = Snapshot.export(spark, Map("t" -> noisy), root, "t2", Some("t1"))
+    val entry = m2.tables("t")
+    assert(entry.files.nonEmpty && entry.files.forall(_.signature.isDefined), "every file is signed")
+    assert(entry.signature == sumForm(Snapshot.read(spark, root, "t2", "t"))._1)
+  }
+
+  test("a first export reads each input row once, in one job") {
+    val root = Files.createTempDirectory("snap_fg_onepass").toString
+    val src = Files.createTempDirectory("snap_fg_onepass_src").toString + "/t"
+    base.write.parquet(src)
+    val input = spark.read.parquet(src)
+    val sc = spark.sparkContext
+    val recordsRead = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => recordsRead.addAndGet(m.inputMetrics.recordsRead))
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val (m, jobs) =
+      try {
+        val out = withJobCount(Snapshot.export(spark, Map("t" -> input), root, "t1"))
+        org.apache.spark.TestListenerBus.drain(sc)
+        out
+      } finally sc.removeSparkListener(listener)
+    assert(recordsRead.get == 4000L, s"${recordsRead.get} records read for 4000 rows")
+    assert(jobs == 1)
+    assert(m.tables("t").signature == sumForm(input)._1)
+  }
+
+  test("maps, empty and wide-decimal tables are written by the snapshot writer alone") {
+    val root = Files.createTempDirectory("snap_fg_onewriter").toString
+    val tables = Map(
+      "maps" -> rows(0, 400, 2).withColumn("m", map(lit("k"), col("v"))),
+      "empty" -> rows(0, 0, 2),
+      "wide" -> rows(0, 300, 2).withColumn("d", (col("id") * 1000003).cast("decimal(30,2)")))
+    val m = Snapshot.export(spark, tables, root, "t1")
+    val written = Files.walk(java.nio.file.Paths.get(root, "t1")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(Files.isRegularFile(_))
+      .map(_.getFileName.toString).filterNot(n => n.startsWith(".") || n == "manifest.json")
+    assert(written.nonEmpty && !written.contains("_SUCCESS"), written)
+    assert(written.forall(_.matches("part-\\d{5}-\\d+-[0-9a-f-]{36}\\.parquet")), written)
+    assert(m.tables("empty").files.isEmpty && m.tables("empty").rows == 0)
+    Seq("maps", "wide").foreach { t =>
+      assert(m.tables(t).files.nonEmpty && m.tables(t).files.forall(_.signature.isDefined), t)
+      assert(m.tables(t).signature == sumForm(tables(t))._1, t)
+    }
+    assert(Snapshot.read(spark, root, "t1", "empty").count() == 0)
+    assert(spark.read.format("graft.sources.SnapshotSource").option("root", root)
+      .option("tag", "t1").option("table", "empty").load().count() == 0)
+    spark.conf.set("spark.sql.catalog.snapw", "graft.sources.SnapshotCatalog")
+    spark.conf.set("spark.sql.catalog.snapw.root", root)
+    try assert(spark.sql("SELECT * FROM snapw.t1.empty").count() == 0)
+    finally {
+      spark.conf.unset("spark.sql.catalog.snapw")
+      spark.conf.unset("spark.sql.catalog.snapw.root")
+    }
+  }
+
+  test("an interval column fails the export by name before any job or file") {
+    val root = Files.createTempDirectory("snap_fg_interval").toString
+    val bad = base.withColumn("iv", expr("make_interval(0, 0, 0, 1)"))
+    val (e, jobs) = withJobCount(intercept[IllegalArgumentException] {
+      Snapshot.export(spark, Map("ok" -> base, "bad" -> bad), root, "t1")
+    })
+    assert(e.getMessage.contains("snapshot table 'bad': column 'iv' has type interval") &&
+      e.getMessage.contains("parquet writer cannot store"), e.getMessage)
+    assert(jobs == 0, s"$jobs jobs ran")
+    assert(!new java.io.File(s"$root/t1").exists(), "nothing may be written")
+  }
+
+  test("a table signs alike with or without a parent") {
+    val root = Files.createTempDirectory("snap_fg_parentless").toString
+    val tables = Map("a" -> base, "b" -> rows(0, 300, 1),
+      "maps" -> rows(0, 400, 2).withColumn("m", map(lit("k"), col("v"))), "empty" -> rows(0, 0, 2))
+    Snapshot.export(spark, tables.map { case (n, df) => n -> df.where(col("id") % 3 === 0) }, root, "p")
+    val child = Snapshot.export(spark, tables, root, "c", Some("p")).tables
+    val alone = Snapshot.export(spark, tables, root, "solo").tables
+    tables.keys.foreach { t =>
+      assert(child(t).signature == alone(t).signature && child(t).rows == alone(t).rows, t)
+    }
   }
 }

@@ -25,8 +25,7 @@ class SnapshotReadSchemaSpec extends SparkSpec {
   test("a partitioned entry reads with its manifest schema in the inferred column order") {
     val root = Files.createTempDirectory("snap_read_part").toString
     val nation = Tables.nation(spark, sf)
-    val m = Snapshot.export(spark, Map("nation" -> nation), root, "pt",
-      partitionBy = Map("nation" -> Seq("n_regionkey")))
+    val m = legacyPartitioned(root, "pt", "nation", nation, Seq("n_regionkey"))
     val entry = m.tables("nation")
     val (df, jobs) = withJobCount(Snapshot.read(spark, root, "pt", "nation"))
     assert(jobs == 0)

@@ -76,11 +76,9 @@ class SnapshotSpec extends SparkSpec {
     val root = Files.createTempDirectory("snap_ret_part").toString
     val orders = Tables.orders(spark, sf)
     // tag_1 is hive-partitioned: files live at root/tag_1/orders/<col>=<val>/...
-    Snapshot.export(spark, Map("orders" -> orders), root, "tag_1",
-      partitionBy = Map("orders" -> Seq("o_orderpriority")))
-    // tag_2 links tag_1's files (unchanged signature), tag_3 rewrites
-    Snapshot.export(spark, Map("orders" -> orders), root, "tag_2", Some("tag_1"),
-      partitionBy = Map("orders" -> Seq("o_orderpriority")))
+    val m1 = legacyPartitioned(root, "tag_1", "orders", orders, Seq("o_orderpriority"))
+    // tag_2 links tag_1's files (an unchanged table inherits its entry), tag_3 rewrites
+    Snapshot.writeManifest(spark, root, m1.copy(tag = "tag_2", parent = Some("tag_1")))
     Snapshot.export(spark, Map("orders" -> orders.limit(7)), root, "tag_3", Some("tag_2"))
     // keeping tag_2+tag_3 must protect tag_1 even though its files sit one
     // directory deeper than the flat layout (owner = first segment under root)
@@ -91,8 +89,7 @@ class SnapshotSpec extends SparkSpec {
 
   test("partitioned export prunes partitions on read (the 100 TB DPP path)") {
     val root = Files.createTempDirectory("snap_part").toString
-    Snapshot.export(spark, Map("orders" -> Tables.orders(spark, sf)), root, "p1",
-      partitionBy = Map("orders" -> Seq("o_orderpriority")))
+    legacyPartitioned(root, "p1", "orders", Tables.orders(spark, sf), Seq("o_orderpriority"))
     val back = Snapshot.read(spark, root, "p1", "orders")
     assert(back.count() == Tables.orders(spark, sf).count())
     val filtered = back.where(col("o_orderpriority") === "1-URGENT")
@@ -234,8 +231,7 @@ class SnapshotSpec extends SparkSpec {
   test("partitioned snapshot reads are pinned to the manifest, not directory contents") {
     val root = Files.createTempDirectory("snap_pin").toString
     val nation = Tables.nation(spark, sf)
-    val m = Snapshot.export(spark, Map("nation" -> nation), root, "pt",
-      partitionBy = Map("nation" -> Seq("n_regionkey")))
+    val m = legacyPartitioned(root, "pt", "nation", nation, Seq("n_regionkey"))
     val before = Snapshot.read(spark, root, "pt", "nation").count()
     assert(before == nation.count())
     // an orphan parquet file lands inside the generation dir (crashed
@@ -244,5 +240,35 @@ class SnapshotSpec extends SparkSpec {
     nation.limit(7).drop("n_regionkey").write.mode("append").parquet(s"$dir/n_regionkey=0")
     assert(Snapshot.read(spark, root, "pt", "nation").count() == before,
       "orphan files in the generation dir must not leak into a committed snapshot")
+  }
+
+  // A NULL that moves changes the rows, so it must change the content
+  // signature: each pair below holds different rows under one schema,
+  // and the child must be rewritten, never inherit the parent's files.
+  private val movedNulls: Seq[(String, String, org.apache.spark.sql.Row, org.apache.spark.sql.Row)] = {
+    import org.apache.spark.sql.Row
+    Seq(
+      ("between two columns of the same type", "id BIGINT, a BIGINT, b BIGINT",
+        Row(1L, null, 5L), Row(1L, 5L, null)),
+      ("off the end of an array", "id BIGINT, xs ARRAY<BIGINT>",
+        Row(1L, Seq(5L, null)), Row(1L, Seq(5L))),
+      ("in place of an empty array", "id BIGINT, xs ARRAY<BIGINT>",
+        Row(1L, Seq.empty[Long]), Row(1L, null)),
+      ("inside a struct", "id BIGINT, s STRUCT<a: BIGINT, b: BIGINT>",
+        Row(1L, Row(null, 5L)), Row(1L, Row(5L, null))))
+  }
+
+  movedNulls.foreach { case (where, ddl, before, after) =>
+    test(s"a NULL that moves $where is not inherited") {
+      val root = Files.createTempDirectory("snap_null").toString
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+      def frame(r: org.apache.spark.sql.Row) =
+        spark.createDataFrame(spark.sparkContext.parallelize(Seq(r), 1), schema)
+      val m1 = Snapshot.export(spark, Map("t" -> frame(before)), root, "p")
+      val m2 = Snapshot.export(spark, Map("t" -> frame(after)), root, "c", Some("p"))
+      assert(m2.tables("t").signature != m1.tables("t").signature)
+      assert(m2.tables("t").files.forall(_.path.contains("/c/")), m2.tables("t").files)
+      assert(Snapshot.read(spark, root, "c", "t").collect().toSeq == Seq(after))
+    }
   }
 }

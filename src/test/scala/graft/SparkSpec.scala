@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.Snapshot
 
 /** Shared session base for all specs: one local session per suite,
   * harness-shaped config (UTC, small shuffle partitions, UI off), with
@@ -38,5 +41,36 @@ trait SparkSpec extends AnyFunSuite {
       org.apache.spark.TestListenerBus.drain(sc)
       (out, jobs.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Adds `df` as `table` to snapshot `tag` (creating the tag when it
+    * has no manifest) the way export wrote hive-partitioned tables
+    * before it stopped: `DataFrameWriter.partitionBy(cols)` into a fresh
+    * `g-` generation dir, and an entry with `dir`, `partitionBy`,
+    * `schemaJson`, the file list and a signature with no content term.
+    * Returns the committed manifest.
+    */
+  def legacyPartitioned(root: String, tag: String, table: String, df: DataFrame,
+                        cols: Seq[String]): Snapshot.Manifest = {
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    val dir = fs.makeQualified(
+      new Path(s"$root/$tag/$table/g-${java.util.UUID.randomUUID().toString.take(8)}")).toString
+    df.write.mode("error").partitionBy(cols: _*).parquet(dir)
+    val listing = fs.listFiles(new Path(dir), true)
+    val files = Seq.newBuilder[Snapshot.FileEntry]
+    while (listing.hasNext) {
+      val st = listing.next()
+      if (st.getPath.getName.endsWith(".parquet")) files += Snapshot.FileEntry(st.getPath.toString, st.getLen)
+    }
+    val rows = df.count()
+    val entry = Snapshot.TableEntry(files.result().sortBy(_.path), rows,
+      s"$rows:${df.schema.catalogString.hashCode}", dir = Some(dir), partitionBy = cols,
+      schemaJson = Some(df.schema.json))
+    val prior = try Some(Snapshot.readManifest(spark, root, tag))
+                catch { case _: java.io.FileNotFoundException => None }
+    val m = prior.fold(Snapshot.Manifest(tag, None, Map(table -> entry)))(p =>
+      p.copy(tables = p.tables + (table -> entry), generation = p.generation + 1))
+    Snapshot.writeManifest(spark, root, m)
+    m
   }
 }
