@@ -398,8 +398,7 @@ object Scans {
     * re-read through SnapshotSource (Spark's parquet reader decodes the
     * 3-level LIST), then ranked by L2 norm through the codegen'd
     * float_dot expression — proving the
-    * custom source feeds vector operators without the Snapshot.read
-    * fallback. The oracle computes the same norms over the fixture
+    * custom source feeds vector operators. The oracle computes the same norms over the fixture
     * table directly (the snapshot is an exact copy).
     */
   private val embedSnapRoots = scala.collection.concurrent.TrieMap.empty[(String, String), String]

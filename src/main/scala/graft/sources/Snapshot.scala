@@ -4,9 +4,10 @@ import java.math.BigInteger
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow, XXH64}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.StructType
 
 /** Snapshot export/read/retention pipeline — the reference tool's own
@@ -61,11 +62,11 @@ object Snapshot {
     * sum its signature records.
     */
   case class SignedFile(entry: FileEntry, rows: Long, sum: BigInteger)
-  /** `dir` and `partitionBy` are legacy-only: entries written by
-    * earlier builds' hive-partitioned export carry them (partition
-    * values are directory-encoded, so readers need the base dir, not
-    * bare files). No writer sets them any more; [[read]] still decodes
-    * such entries and the DSv2 source still rejects them by name.
+  /** `dir` and `partitionBy` decode legacy partition values only:
+    * entries written by earlier builds' hive-partitioned export carry
+    * them, and [[SnapshotTable.of]] decodes each file's partition values
+    * from its path under `dir`. No writer sets them any more, and a DSv2
+    * write into such an entry fails by name.
     *
     * `txns` is the per-table idempotence ledger for at-least-once
     * writers (the Delta `SetTransaction` discipline): latest committed
@@ -330,24 +331,6 @@ object Snapshot {
     try readManifest(s, root, tag).generation
     catch { case _: java.io.FileNotFoundException => -1L }
 
-  /** The DSv2 path serves FLAT entries only: a hive-partitioned
-    * entry's partition values are directory-encoded, absent from the
-    * parquet files themselves, and Spark's parquet reader fills a
-    * column the file lacks with NULL — so a DSv2 read would SILENTLY
-    * serve every partition value as NULL, while a DSv2 append would
-    * link flat files into the partitioned layout and corrupt it. Fail
-    * at LOAD time with the correct path instead: [[read]] decodes
-    * partition dirs and prunes partitions. Only legacy entries are
-    * partitioned: [[export]] no longer writes hive layouts.
-    */
-  private[sources] def requireUnpartitioned(table: String, entry: TableEntry): Unit =
-    if (entry.partitionBy.nonEmpty)
-      throw new UnsupportedOperationException(
-        s"snapshot table '$table' is hive-partitioned " +
-          s"(partitionBy=${entry.partitionBy.mkString(",")}): the DSv2 source serves " +
-          "flat entries only — read it with Snapshot.read (partition-dir decoding + " +
-          "partition pruning), or re-export it flat with Snapshot.export")
-
   /** One existence probe (single filesystem call — listTags pays one
     * RPC per tag directory, which catalog hot paths must not).
     */
@@ -599,8 +582,7 @@ object Snapshot {
       // several ancestor tags.
       val f = fs(s, root)
       val rootQ = f.makeQualified(new Path(root))
-      val owners = entries.values.flatMap(e =>
-          e.files.map(fe => new Path(fe.path)) ++ e.dir.map(new Path(_)))
+      val owners = entries.values.flatMap(_.files.map(fe => new Path(fe.path)))
         .flatMap(ownerTagOf(f, rootQ)).toSet - tag
       val swept = owners.filterNot(tagExists(s, root, _))
       if (swept.nonEmpty)
@@ -940,38 +922,27 @@ object Snapshot {
             s"(tags: ${listTags(s, root).mkString(", ")})"))
   }
 
-  /** Time-travel read: the `table` as it was at `asOf`. */
+  /** Time-travel read: the `table` as it was at `asOf`, read as [[read]]
+    * reads it from the manifest [[resolveAsOf]] resolves.
+    */
   def readAsOf(s: SparkSession, root: String, asOf: String, table: String,
                from: Option[String] = None): DataFrame =
-    readEntry(s, resolveAsOf(s, root, asOf, from), table)
+    readEntry(s, root, resolveAsOf(s, root, asOf, from), table)
 
-  /** Batch-queryable face of a snapshot: manifest → schema and file
-    * list → parquet scan. Filters/pruning push into the scan as usual.
+  /** Batch-queryable face of a snapshot: one manifest read, then the
+    * table's [[SnapshotTable]] scan, the same DSv2 scan the source and
+    * the catalog read through. Building the DataFrame runs no Spark job;
+    * the manifest's stats and partition values skip files, and the rest
+    * are split and packed as Spark's file scans pack them.
     */
   def read(s: SparkSession, root: String, tag: String, table: String): DataFrame =
-    readEntry(s, readManifest(s, root, tag), table)
+    readEntry(s, root, readManifest(s, root, tag), table)
 
-  private def readEntry(s: SparkSession, m: Manifest, table: String): DataFrame = {
+  private def readEntry(s: SparkSession, root: String, m: Manifest, table: String): DataFrame = {
     val entry = m.tables.getOrElse(table,
       throw new IllegalArgumentException(s"table $table not in snapshot ${m.tag}"))
-    // the manifest's schema spares the parquet schema-inference job;
-    // entries that predate schemaJson still infer
-    val reader = entry.schemaJson.fold(s.read)(j =>
-      s.read.schema(org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]))
-    entry.dir match {
-      // partitioned: scan the MANIFEST's file list with the generation
-      // dir as basePath, so partition values decode from the layout and
-      // partition pruning applies — but directory contents do NOT
-      // define the snapshot (an orphan file from a crashed later write,
-      // or a new generation landing in a shared dir, must not leak into
-      // a committed snapshot's rows; the manifest is the unit of truth
-      // for partitioned tables exactly as for unpartitioned ones)
-      case Some(d) if entry.files.nonEmpty =>
-        reader.option("basePath", d).parquet(entry.files.map(_.path): _*)
-      case Some(d) => reader.parquet(d) // legacy empty-file-list entry
-      case None => reader.parquet(entry.files.map(_.path): _*)
-    }
+    GraftShim.ofRows(s, DataSourceV2Relation.create(
+      SnapshotTable.of(root, m.tag, table, Some(entry), writable = false, s), None, None))
   }
 
   def listTags(s: SparkSession, root: String): Seq[String] = {
@@ -1046,8 +1017,8 @@ object Snapshot {
   }
 
   /** Owner tag of a data path = first path segment under root.
-    * Counting parent hops instead would mis-resolve hive-partitioned
-    * layouts (root/<tag>/<table>/<col>=<val>/<file> → "<table>"), so a
+    * Counting parent hops instead would mis-resolve legacy hive-partitioned
+    * entries' files (root/<tag>/<table>/<col>=<val>/<file> → "<table>"), so a
     * kept child's inherited files would fail to protect their parent
     * tag and retention could delete still-referenced data.
     */

@@ -5,7 +5,7 @@ import java.util
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Catalog plugin for snapshot roots: registers a snapshot tree so SQL
@@ -117,19 +117,11 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces {
         // unique case-insensitive fallback, same rule as tags
         .filter(_ => manifest.tables.keys.count(_.equalsIgnoreCase(ident.name)) == 1))
       .getOrElse(noSuchTable(ident))
-    val schema = entry.schemaJson
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
-      // a legacy pre-schemaJson entry exists but cannot be served; the
-      // catalog contract's catchable signal is NoSuchTableException
-      .getOrElse(noSuchTable(ident))
-    Snapshot.requireUnpartitioned(actualName, entry)
     // owner = the session loading the table (loadTable runs on the
     // querying session's analysis thread) — captured ONCE here so
     // later builder/commit callbacks on Spark-internal threads never
     // consult SparkSession.active themselves (advice r9)
-    SnapshotTable(actualName, schema, entry.files,
-      entry.files.map(_.size).sum, entry.rows, root, tag, writable = writable,
-      entrySchemaJson = entry.schemaJson)(spark)
+    SnapshotTable.of(root, tag, actualName, Some(entry), writable, spark)
   }
 
   /** ONE fresh manifest resolution per call (freshness invariant). */

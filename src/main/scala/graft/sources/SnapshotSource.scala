@@ -2,22 +2,24 @@ package graft.sources
 
 import java.util
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.ParquetInputFormat
-import org.apache.spark.paths.SparkPath
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriter, OutputWriterFactory, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetUtils, ParquetWriteSupport}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, OutputWriter, OutputWriterFactory, PartitionedFile, PartitioningAwareFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -26,13 +28,15 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 face of the snapshot store — the "custom source" of
   * the project north-star: `spark.read.format("graft.sources.SnapshotSource")
-  * .option("root", …).option("tag", …).option("table", …)`.
+  * .option("root", …).option("tag", …).option("table", …)`, and the one
+  * reader of every snapshot entry: [[Snapshot.read]], [[Snapshot.readAsOf]]
+  * and [[SnapshotCatalog]] read through the same [[SnapshotTable]].
   *
   * The manifest supplies the schema (no footer sniffing on the
-  * driver) and plans the scan: each selected manifest file entry
-  * becomes one input partition, so parallelism follows the snapshot's
-  * file layout, and files whose manifest stats cannot match the
-  * predicates get none. The rows themselves come from Spark's own
+  * driver) and plans the scan: files whose manifest stats or partition
+  * values cannot match the predicates are skipped, and the rest are
+  * split and packed into input partitions as Spark's own file scans
+  * pack them. The rows themselves come from Spark's own
   * parquet reader (`ParquetPartitionReaderFactory`): column pruning,
   * row-group filtering, vectorized decode and missing-file errors are
   * Spark's, so the column types this source reads are exactly the ones
@@ -138,25 +142,24 @@ class SnapshotSource extends TableProvider {
   private def entryFor(options: CaseInsensitiveStringMap): Option[Snapshot.TableEntry] =
     manifestFor(options).flatMap(_.tables.get(coords(options)._3))
 
+
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     try {
+      val (root, tag, table) = coords(options)
       entryFor(options) match {
         case Some(entry) =>
-          entry.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType]).getOrElse(
-            throw new IllegalArgumentException(
-              s"snapshot entry for ${coords(options)._3} predates schemaJson manifests"))
+          SnapshotTable.of(root, tag, table, Some(entry), writable = false, SparkSession.active).schema()
         case None if options.get("asOf") != null =>
           // time travel is read-only: a missing table at the resolved
           // snapshot is a read error, never a write-creation target
           throw new IllegalArgumentException(
-            s"table ${coords(options)._3} not in the snapshot resolved for " +
-              s"asOf='${options.get("asOf")}'")
+            s"table $table not in the snapshot resolved for asOf='${options.get("asOf")}'")
         case None =>
           // a new table being created by a write: the writer passes the
           // dataframe schema explicitly (save() offers no other channel)
           Option(options.get("schema")).map(DataType.fromJson(_).asInstanceOf[StructType])
             .getOrElse(throw new IllegalArgumentException(
-              s"table ${coords(options)._3} not in snapshot ${coords(options)._2}; " +
+              s"table $table not in snapshot $tag; " +
                 "to create it via a write, pass .option(\"schema\", df.schema.json)"))
       }
     } catch {
@@ -215,35 +218,32 @@ class SnapshotSource extends TableProvider {
     // session's thread — scan/write builders and commit/abort run on
     // Spark-internal threads later, where SparkSession.active can be a
     // DIFFERENT session in a multi-session app (wrong per-session fs
-    // settings, silently)
-    val owner = SparkSession.active
-    manifest.flatMap(_.tables.get(table)) match {
-      case Some(entry) =>
-        Snapshot.requireUnpartitioned(table, entry)
-        SnapshotTable(table, schema, entry.files,
-          entry.files.map(_.size).sum, entry.rows, root, tag,
-          writable = asOf.isEmpty, entrySchemaJson = entry.schemaJson)(owner)
-      // write target only: reading it must still fail loudly (see
-      // newScanBuilder) — a typo'd tag/table on a READ that happens to
-      // carry the schema option must not become a silent empty result
-      case None => SnapshotTable(table, schema, Nil, 0L, 0L, root, tag,
-        existed = false, writable = asOf.isEmpty)(owner)
-    }
+    // settings, silently). A table the manifest lacks is a write target
+    // only: reading it must still fail loudly (see newScanBuilder) — a
+    // typo'd tag/table on a READ that happens to carry the schema option
+    // must not become a silent empty result.
+    SnapshotTable.of(root, tag, table, manifest.flatMap(_.tables.get(table)),
+      writable = asOf.isEmpty, SparkSession.active, Some(schema))
   }
 }
 
-/** `owner` sits in a SECOND parameter list (same convention as the
+/** A snapshot entry as Spark reads and writes it, built by
+  * [[SnapshotTable.of]]. `dataSchema` is what the files store;
+  * `partitionSchema` is what a legacy hive-partitioned entry encodes in
+  * its paths, with each path's values in `partitionValues` (both empty
+  * for other entries).
+  *
+  * `owner` sits in a SECOND parameter list (same convention as the
   * scans): case-class equality stays on the value fields, and
   * the session is threaded — not re-resolved — because builder/commit/
   * abort callbacks run on Spark-internal threads where
   * `SparkSession.active` may name a different session than the one
   * that loaded this table (advice r9).
   */
-case class SnapshotTable(tableName: String, tableSchema: StructType,
-                         files: Seq[Snapshot.FileEntry],
-                         totalBytes: Long, rows: Long, root: String = "", tag: String = "",
-                         existed: Boolean = true, writable: Boolean = true,
-                         entrySchemaJson: Option[String] = None)(
+case class SnapshotTable(tableName: String, tableSchema: StructType, dataSchema: StructType,
+                         partitionSchema: StructType, files: Seq[Snapshot.FileEntry],
+                         partitionValues: Map[String, InternalRow], rows: Long,
+                         root: String, tag: String, existed: Boolean, writable: Boolean)(
                          val owner: SparkSession)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
@@ -266,28 +266,96 @@ case class SnapshotTable(tableName: String, tableSchema: StructType,
     // choke point, so overwrite-based schema evolution (which goes
     // through newWriteBuilder + the commit-time append check) is
     // unaffected.
-    entrySchemaJson.map(DataType.fromJson(_).asInstanceOf[StructType]).foreach { es =>
-      if (es.catalogString != tableSchema.catalogString)
-        throw new IllegalArgumentException(
-          s"user-specified read schema ${tableSchema.catalogString} does not match " +
-            s"snapshot table '$tableName''s committed schema ${es.catalogString} — " +
-            "drop .schema(...): the snapshot's own schema is authoritative on reads")
-    }
-    new SnapshotScanBuilder(tableSchema, files, totalBytes, rows, owner)
+    val stored = StructType(dataSchema ++ partitionSchema)
+    if (stored.catalogString != tableSchema.catalogString)
+      throw new IllegalArgumentException(
+        s"user-specified read schema ${tableSchema.catalogString} does not match " +
+          s"snapshot table '$tableName''s committed schema ${stored.catalogString} — " +
+          "drop .schema(...): the snapshot's own schema is authoritative on reads")
+    new SnapshotScanBuilder(this)
   }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     if (!writable) throw new UnsupportedOperationException(
       s"snapshot table $tableName was opened with asOf (time travel) — " +
         "history is immutable; write to a named tag instead")
+    // flat files would carry none of a legacy entry's directory values
+    if (partitionSchema.nonEmpty) throw new UnsupportedOperationException(
+      s"snapshot table '$tableName' is hive-partitioned " +
+        s"(partitionBy=${partitionSchema.fieldNames.mkString(",")}): the DSv2 source " +
+        "writes flat entries only — re-export it flat with Snapshot.export, then write")
     new SnapshotWriteBuilder(root, tag, tableName, info, owner)
   }
 }
 
-class SnapshotScanBuilder(dataSchema: StructType, files: Seq[Snapshot.FileEntry],
-                          totalBytes: Long, rows: Long, owner: SparkSession)
+object SnapshotTable {
+  /** The one constructor of a [[SnapshotTable]]; no Spark job runs.
+    * The entry's schema is its `schemaJson`, else its first file's
+    * [[footerSchema]], with a legacy entry's partition columns
+    * ([[ManifestFileIndex]]) last, as Spark's file sources order them.
+    * No `entry` is a table only a write can create. `requested` (a
+    * user's `.schema(...)` or a write's query schema) overrides it as
+    * the table's schema; a read rejects one that differs.
+    */
+  def of(root: String, tag: String, name: String, entry: Option[Snapshot.TableEntry],
+         writable: Boolean, owner: SparkSession,
+         requested: Option[StructType] = None): SnapshotTable = {
+    val e = entry.getOrElse(Snapshot.TableEntry(Nil, 0L, ""))
+    val stored = e.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+      .orElse(e.files.headOption.map(f => footerSchema(owner, new Path(f.path))))
+      .orElse(requested).getOrElse(new StructType())
+    val index = e.dir.filter(_ => e.partitionBy.nonEmpty)
+      .map(new ManifestFileIndex(owner, _, e.files, e.schemaJson.map(_ => stored)))
+    val partitionSchema = index.fold(new StructType())(_.partitionSchema)
+    val resolver = owner.sessionState.conf.resolver
+    val dataSchema = StructType(stored.filterNot(f => partitionSchema.exists(p => resolver(p.name, f.name))))
+    SnapshotTable(name, requested.getOrElse(StructType(dataSchema ++ partitionSchema)), dataSchema,
+      partitionSchema, e.files, index.fold(Map.empty[String, InternalRow])(_.valuesByPath),
+      e.rows, root, tag, existed = entry.isDefined, writable)(owner)
+  }
+
+  /** The Spark schema of the parquet file `p`, read from its footer on
+    * the driver as Spark's parquet schema inference reads it: the Spark
+    * schema its writer stored there, else its parquet schema converted by
+    * `ParquetToSparkSchemaConverter` under the owner's SQL conf.
+    */
+  private def footerSchema(owner: SparkSession, p: Path): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, owner.sessionState.newHadoopConf()))
+    try ParquetFileFormat.readSchemaFromFooter(new Footer(p, reader.getFooter),
+      new ParquetToSparkSchemaConverter(owner.sessionState.conf))
+    finally reader.close()
+  }
+}
+
+/** A legacy hive-partitioned entry's manifest files as Spark's file
+  * index rooted at its `dir` (the index's base path), listing nothing:
+  * partition values decode through Spark's own
+  * `PartitioningUtils.parsePartitions` as a V1 read over `dir` decodes
+  * them (types from `schema` when given, unescaping,
+  * `__HIVE_DEFAULT_PARTITION__` as NULL).
+  */
+private class ManifestFileIndex(s: SparkSession, dir: String, files: Seq[Snapshot.FileEntry],
+                                schema: Option[StructType])
+    extends PartitioningAwareFileIndex(s, Map.empty, schema) {
+  private val statuses = files.map(f => new FileStatus(f.size, false, 0, 0L, 0L, new Path(f.path)))
+  override val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
+    mutable.LinkedHashMap(statuses.map(st => st.getPath -> st): _*)
+  override val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+    statuses.toArray.groupBy(_.getPath.getParent)
+  override val rootPaths: Seq[Path] = Seq(new Path(dir))
+  override lazy val partitionSpec: PartitionSpec = inferPartitioning()
+  override def refresh(): Unit = ()
+
+  /** Each manifest path's partition values. */
+  def valuesByPath: Map[String, InternalRow] = {
+    val byDir = partitionSpec.partitions.map(p => p.path -> p.values).toMap
+    files.map(f => f.path -> byDir(new Path(f.path).getParent)).toMap
+  }
+}
+
+class SnapshotScanBuilder(table: SnapshotTable)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownAggregates {
-  private var required: StructType = dataSchema
+  private var required: StructType = table.schema()
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
   private var pushedAggs: Seq[SnapshotAgg] = Nil
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -298,20 +366,22 @@ class SnapshotScanBuilder(dataSchema: StructType, files: Seq[Snapshot.FileEntry]
     * full scan into a footer walk. Partial pushdown contract: each
     * file contributes one pre-aggregated row; Spark plans the final
     * merge (sum of counts, min of mins). Restricted to no-filter,
-    * no-groupBy plans and int/long/date columns — integer stats are
-    * exact, while float (NaN) and binary (truncation) footer stats are
-    * not trustworthy, and a pushed filter would invalidate the counts.
+    * no-groupBy plans and int/long/date columns the files store —
+    * integer stats are exact, while float (NaN) and binary (truncation)
+    * footer stats are not trustworthy, a pushed filter would invalidate
+    * the counts, and a legacy entry's partition columns have no chunk in
+    * the footers (the row-scan fallback would read them as NULL).
     */
   override def pushAggregation(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     // files.isEmpty: zero partial rows would make the final merged
     // count NULL instead of 0 — serve empty tables from the row scan
-    if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty || files.isEmpty) return false
+    if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty || table.files.isEmpty) return false
     def statSafeField(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
       e match {
         case nr: NamedReference if nr.fieldNames.length == 1 =>
-          dataSchema.fields.find(_.name == nr.fieldNames.head).filter(f => f.dataType match {
+          table.dataSchema.fields.find(_.name == nr.fieldNames.head).filter(f => f.dataType match {
             case IntegerType | LongType | DateType => true
             case _ => false
           })
@@ -347,14 +417,9 @@ class SnapshotScanBuilder(dataSchema: StructType, files: Seq[Snapshot.FileEntry]
     filters
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  // the OWNING session, not SparkSession.active: build() runs on a
-  // planning thread where a multi-session app's active session can
-  // differ from the one that loaded the table (advice r9); the readers
-  // get its Hadoop conf, so filesystem settings (S3 credentials, HA
-  // nameservices, kerberos) reach the executors
   override def build(): Scan =
-    if (pushedAggs.nonEmpty) SnapshotAggScan(files, pushedAggs)(owner)
-    else SnapshotScan(dataSchema, required, files, pushed.toSeq, totalBytes, rows)(owner)
+    if (pushedAggs.nonEmpty) SnapshotAggScan(table, pushedAggs)
+    else SnapshotScan(table, required, pushed.toSeq)
 }
 
 /** One pushed aggregate: `count` (no column) or `min`/`max` of an
@@ -364,21 +429,16 @@ case class SnapshotAgg(fn: String, column: Option[String], resultType: DataType)
 
 /** Footer-statistics scan: each input file yields ONE row of partial
   * aggregate values read from parquet block metadata — no data pages.
-  * Files are packed into input partitions the way Spark's own file
-  * scans pack splits (`FilePartition.getFilePartitions`, each file
-  * costing its size plus `spark.sql.files.openCostInBytes`): a footer
-  * read is tiny, so one task per file would spend most of its time on
-  * task overhead, while a large table still spreads over
+  * Whole files are packed into input partitions by [[SnapshotScan.pack]]:
+  * a footer read is tiny, so one task per file would spend most of its
+  * time on task overhead, while a large table still spreads over
   * `spark.sql.files.minPartitionNum` (default parallelism) tasks.
   *
-  * `owner` sits in a SECOND parameter list: case-class equality then
-  * covers only the value fields, so two scans of the same snapshot
+  * The reader factory is built with the table's `owner` session, which
+  * case-class equality does not cover: two scans of the same snapshot
   * still compare equal and Spark's scan/exchange reuse keeps working.
-  * Required, not defaulted — a caller forgetting it must not compile
-  * into a silent fallback to whichever session is active.
   */
-case class SnapshotAggScan(files: Seq[Snapshot.FileEntry], aggs: Seq[SnapshotAgg])(
-    val owner: SparkSession)
+case class SnapshotAggScan(table: SnapshotTable, aggs: Seq[SnapshotAgg])
     extends Scan with Batch {
   override def readSchema(): StructType = StructType(aggs.map {
     case SnapshotAgg("count", _, _) => StructField("count(*)", LongType, nullable = false)
@@ -386,20 +446,16 @@ case class SnapshotAggScan(files: Seq[Snapshot.FileEntry], aggs: Seq[SnapshotAgg
     case other => throw new IllegalStateException(s"bad agg spec $other")
   })
   override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] = {
-    val openCost = owner.sessionState.conf.filesOpenCostInBytes
-    val split = FilePartition.maxSplitBytes(owner, files.map(_.size + openCost).sum)
-    FilePartition.getFilePartitions(owner, files.sortBy(-_.size).map(SnapshotScan.split), split)
-      .toArray[InputPartition]
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    SnapshotScan.pack(table.owner, table.files, splitFiles = false, _ => InternalRow.empty)
   override def createReaderFactory(): PartitionReaderFactory = {
     // the row-scan fallback reads only the aggregated columns
-    val cols = aggs.flatMap(a => a.column.map(c => StructField(c, a.resultType))).distinct
+    val cols = StructType(aggs.flatMap(a => a.column.map(c => StructField(c, a.resultType))).distinct)
     SnapshotAggReaderFactory(aggs,
-      SnapshotScan.readerFactory(owner, StructType(cols), StructType(cols), Nil))
+      SnapshotScan.readerFactory(table.owner, cols, cols, new StructType(), Nil))
   }
   override def description(): String =
-    s"GraftSnapshotAggScan(files=${files.size}, " +
+    s"GraftSnapshotAggScan(files=${table.files.size}, " +
       s"pushedAggregates=[${aggs.map(a => s"${a.fn}(${a.column.getOrElse("*")})").mkString(", ")}])"
 }
 
@@ -536,17 +592,20 @@ class SnapshotFooterAggReader(partition: FilePartition, aggs: Seq[SnapshotAgg],
   override def close(): Unit = ()
 }
 
-/** The row scan: manifest-planned, read by Spark's parquet reader.
-  * `owner` in a second parameter list for the same reuse-preserving
-  * reason as [[SnapshotAggScan]]. */
-case class SnapshotScan(dataSchema: StructType, required: StructType,
-                        files: Seq[Snapshot.FileEntry],
-                        filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
-                        totalBytes: Long = 0L, rows: Long = 0L)(
-                        val owner: SparkSession)
+/** The row scan: files skipped by manifest stats, runtime filter and
+  * partition value, the rest split and packed by [[SnapshotScan.pack]]
+  * and read by Spark's parquet reader: the `required` stored columns,
+  * then every partition column (constant per split), as Spark's
+  * `FileScan` orders them. Equality leaves out the table's `owner`, for
+  * the reuse-preserving reason given at [[SnapshotAggScan]].
+  */
+case class SnapshotScan(table: SnapshotTable, required: StructType,
+                        filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
-  override def readSchema(): StructType = required
+  private val readDataSchema =
+    StructType(required.filterNot(f => table.partitionSchema.fieldNames.contains(f.name)))
+  override def readSchema(): StructType = StructType(readDataSchema ++ table.partitionSchema)
 
   /** Manifest-derived statistics for the planner: the snapshot knows
     * its exact byte size and row count without touching storage, so
@@ -557,53 +616,52 @@ case class SnapshotScan(dataSchema: StructType, required: StructType,
     * plan like a 20 TB input, not a 100 TB one.
     */
   override def estimateStatistics(): Statistics = new Statistics {
+    private val totalBytes = table.files.map(_.size).sum
     private val width =
-      if (dataSchema.isEmpty) 1.0
-      else required.length.toDouble / dataSchema.length.toDouble
+      if (table.schema().isEmpty) 1.0
+      else required.length.toDouble / table.schema().length.toDouble
     override def sizeInBytes(): util.OptionalLong =
       if (totalBytes > 0) util.OptionalLong.of(math.max(1L, (totalBytes * width).toLong))
       else util.OptionalLong.empty()
     override def numRows(): util.OptionalLong =
-      if (rows > 0) util.OptionalLong.of(rows) else util.OptionalLong.empty()
+      if (table.rows > 0) util.OptionalLong.of(table.rows) else util.OptionalLong.empty()
   }
   override def toBatch: Batch = this
 
   /** Manifest-statistics file pruning: a file whose recorded
     * int-column range cannot satisfy the pushed predicates gets NO
-    * input partition — the driver skips it using manifest numbers
+    * input split — the driver skips it using manifest numbers
     * alone, before any footer or data I/O. Files without stats always
     * scan (pruning is advisory, never a correctness dependency).
     */
   private lazy val staticSelected: Seq[Snapshot.FileEntry] =
-    files.filter(f => filters.forall(SnapshotFilePruning.mayMatch(f.stats, _)))
+    table.files.filter(f => filters.forall(SnapshotFilePruning.mayMatch(f.stats, _)))
 
   /** DSv2 runtime filtering (the snapshot twin of q_scan_dpp's native-
     * parquet dynamic pruning): at execution start Spark evaluates the
     * completed broadcast side of a selective join and hands this scan
     * the join-key set as an `In` filter — files whose manifest range
-    * can't contain any key get no input partition. Pure I/O
-    * optimization: the join itself still filters rows, so pruning can
-    * only skip files, never change results. At 100 TB this is the
+    * or partition values can't contain any key get no input split. Pure
+    * I/O optimization: the join itself still filters rows, so pruning
+    * can only skip files, never change results. At 100 TB this is the
     * difference between scanning the whole fact snapshot and scanning
     * the handful of files a pruned dimension actually touches.
     */
   private var runtimeFilters: Seq[org.apache.spark.sql.sources.Filter] = Nil
 
-  /** Only attributes the manifest can actually prune on — top-level
-    * columns with recorded stats in at least one file. Advertising a
-    * column we can't prune would make Spark build and broadcast a key
-    * set for nothing.
+  /** Only attributes the scan can actually prune on — top-level
+    * columns with recorded stats in at least one file, and a legacy
+    * entry's partition columns. Advertising a column we can't prune
+    * would make Spark build and broadcast a key set for nothing.
     */
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val statCols = files.iterator.flatMap(_.stats.keysIterator).toSet
-    dataSchema.fields.iterator.filter(f => statCols.contains(f.name))
+    val statCols = table.files.iterator.flatMap(_.stats.keysIterator).toSet
+    (table.dataSchema.fields.filter(f => statCols.contains(f.name)) ++ table.partitionSchema.fields)
       .map(f => org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
-      .toArray
   }
 
   override def filter(fs: Array[org.apache.spark.sql.sources.Filter]): Unit =
     runtimeFilters = fs.toSeq
-
   /** Runtime-key pruning pre-sorts each In-set ONCE and range-probes it
     * per file with a binary search — O(F log V) driver work instead of
     * the naive O(F × V), which matters when a 100k-file snapshot meets
@@ -644,40 +702,58 @@ case class SnapshotScan(dataSchema: StructType, required: StructType,
     fe => checks.forall(_(fe))
   }
 
-  private def selected: Seq[Snapshot.FileEntry] =
-    if (runtimeFilters.isEmpty) staticSelected
-    else staticSelected.filter(runtimePruner(runtimeFilters))
+  private def selected: Seq[Snapshot.FileEntry] = {
+    val byStats =
+      if (runtimeFilters.isEmpty) staticSelected
+      else staticSelected.filter(runtimePruner(runtimeFilters))
+    val inPartition = SnapshotFilePruning.partitionFilter(table.partitionSchema, filters ++ runtimeFilters)
+    byStats.filter(f => inPartition(table.partitionValues.getOrElse(f.path, InternalRow.empty)))
+  }
 
   override def planInputPartitions(): Array[InputPartition] =
-    SnapshotScan.partitions(selected)
+    SnapshotScan.pack(table.owner, selected, splitFiles = true,
+      f => table.partitionValues.getOrElse(f.path, InternalRow.empty))
+  // the OWNING session, not SparkSession.active: this runs on a
+  // planning thread where a multi-session app's active session can
+  // differ from the one that loaded the table (advice r9); the readers
+  // get its Hadoop conf, so filesystem settings (S3 credentials, HA
+  // nameservices, kerberos) reach the executors
   override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotScan.readerFactory(owner, dataSchema, required, filters)
+    SnapshotScan.readerFactory(table.owner, table.dataSchema, readDataSchema, table.partitionSchema,
+      filters)
   override def description(): String =
-    s"GraftSnapshotScan(files=${files.size}, skippedByStats=${files.size - selected.size}, " +
+    s"GraftSnapshotScan(files=${table.files.size}, skippedByStats=${table.files.size - selected.size}, " +
       s"columns=${required.fieldNames.mkString(",")}, " +
       s"pushedFilters=[${filters.mkString(", ")}])"
 }
 
 object SnapshotScan {
-  /** One split over the whole of a manifest file. `SparkPath.fromPath`,
-    * not `fromUrlString`: manifest paths are unescaped, so a space or a
-    * `%` in them is a literal character, never an escape.
+  /** Input partitions over `files` as Spark's file scans plan them:
+    * `PartitionedFileUtil.splitFiles` cuts each file (if `splitFiles`)
+    * at `FilePartition.maxSplitBytes`, and `getFilePartitions` packs the
+    * splits, largest first. Its `SparkPath.fromPath` keeps a space or `%`
+    * in a manifest path literal.
     */
-  def split(f: Snapshot.FileEntry): PartitionedFile =
-    PartitionedFile(InternalRow.empty, SparkPath.fromPath(new Path(f.path)), 0L, f.size,
-      fileSize = f.size)
-
-  /** One input partition per manifest file, each a whole-file [[split]]. */
-  def partitions(files: Seq[Snapshot.FileEntry]): Array[InputPartition] =
-    files.zipWithIndex.map { case (f, i) => FilePartition(i, Array(split(f))): InputPartition }.toArray
+  def pack(owner: SparkSession, files: Seq[Snapshot.FileEntry], splitFiles: Boolean,
+           values: Snapshot.FileEntry => InternalRow): Array[InputPartition] = {
+    val openCost = owner.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(owner, files.map(_.size + openCost).sum)
+    val splits = files.flatMap { f =>
+      val p = new Path(f.path)
+      PartitionedFileUtil.splitFiles(FileStatusWithMetadata(new FileStatus(f.size, false, 0, 0L, 0L, p)),
+        p, splitFiles, maxSplit, values(f))
+    }
+    FilePartition.getFilePartitions(owner, splits.sortBy(-_.length), maxSplit).toArray
+  }
 
   /** Spark's parquet reader for `required` of files holding
-    * `dataSchema`, over `owner`'s Hadoop conf prepared with the keys
-    * Spark's own `ParquetScan.createReaderFactory` sets. Spark applies
-    * the `filters` it can translate as row-group filters.
+    * `dataSchema`, plus each split's `partitionSchema` values, over
+    * `owner`'s Hadoop conf prepared with the keys Spark's own
+    * `ParquetScan.createReaderFactory` sets. Spark applies the `filters`
+    * it can translate (on stored columns) as row-group filters.
     */
   def readerFactory(owner: SparkSession, dataSchema: StructType, required: StructType,
-                    filters: Seq[org.apache.spark.sql.sources.Filter])
+                    partitionSchema: StructType, filters: Seq[org.apache.spark.sql.sources.Filter])
       : ParquetPartitionReaderFactory = {
     val sqlConf = owner.sessionState.conf
     val conf = owner.sessionState.newHadoopConf()
@@ -697,7 +773,7 @@ object SnapshotScan {
     ).foreach { case (entry, v) => conf.setBoolean(entry.key, v) }
     ParquetPartitionReaderFactory(sqlConf,
       owner.sparkContext.broadcast(new SerializableConfiguration(conf)),
-      dataSchema, required, new StructType(), filters.toArray, None,
+      dataSchema, required, partitionSchema, filters.toArray, None,
       new ParquetOptions(Map.empty[String, String], sqlConf))
   }
 }
@@ -720,6 +796,9 @@ object SnapshotScanProbe {
   * min/max alone and always pass.
   */
 object SnapshotFilePruning {
+  import org.apache.spark.sql.GraftShim
+  import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+  import org.apache.spark.sql.catalyst.{expressions => cat}
   import org.apache.spark.sql.sources._
 
   def mayMatch(stats: Map[String, Snapshot.ColumnStats], f: Filter): Boolean = f match {
@@ -746,6 +825,22 @@ object SnapshotFilePruning {
       case n: java.lang.Byte => Some((s, n.longValue()))
       case _ => None
     })
+
+  /** Whether a file of a legacy hive-partitioned entry, whose partition
+    * columns are `schema`, may hold a row matching `fs`, judged from its
+    * partition row alone: each filter that names partition columns only,
+    * converted to Catalyst by Spark's own `V2ExpressionUtils`, must not be
+    * false or NULL on it. A filter that does not convert or evaluate
+    * keeps the file.
+    */
+  def partitionFilter(schema: StructType, fs: Seq[Filter]): InternalRow => Boolean = {
+    val preds = fs.filter(_.references.forall(schema.fieldNames.contains))
+      .flatMap(f => cat.V2ExpressionUtils.toCatalyst(GraftShim.toV2(f)))
+      .map(_.transform { case a: UnresolvedAttribute =>
+        cat.BoundReference(schema.fieldIndex(a.name), schema(a.name).dataType, nullable = true)
+      })
+    row => preds.forall(p => scala.util.Try(p.eval(row)).fold(_ => true, _ == true))
+  }
 }
 
 // ---------------------------------------------------------------------------

@@ -5,7 +5,8 @@ import org.apache.spark.sql.errors.QueryCompilationErrors
 
 /** Minimal bridge into the `private[sql]` Dataset constructors so the
   * graft library can return DataFrames built from custom logical
-  * plans (the AsOfJoin node), and can reject a wrong argument count
+  * plans (the AsOfJoin node, a snapshot scan), convert a source filter
+  * to its V2 predicate, and reject a wrong argument count
   * with Spark's own error. This is the standard
   * extension-library technique; nothing else from the sql internals is
   * touched.
@@ -13,6 +14,8 @@ import org.apache.spark.sql.errors.QueryCompilationErrors
 object GraftShim {
   def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
+
+  def toV2(f: sources.Filter): connector.expressions.filter.Predicate = f.toV2
 
   /** Spark's WRONG_NUM_ARGS AnalysisException, as built-in functions raise it. */
   def wrongNumArgs(function: String, expected: Int, actual: Int): Throwable =

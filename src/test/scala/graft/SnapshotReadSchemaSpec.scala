@@ -4,10 +4,11 @@ import java.nio.file.Files
 
 import graft.sources.{Snapshot, Tables}
 
-/** `Snapshot.read` takes the table's schema from the manifest, so
-  * building the DataFrame runs no Spark job: parquet schema inference
-  * over the files is one job per read. Entries that predate the
-  * manifest's `schemaJson` still infer.
+/** `Snapshot.read` takes the table's schema from the manifest and its
+  * files from the manifest's list, so building the DataFrame runs no
+  * Spark job: no schema inference and no file listing, whatever the
+  * file count. Entries that predate the manifest's `schemaJson` take the
+  * first file's footer schema, read on the driver.
   */
 class SnapshotReadSchemaSpec extends SparkSpec {
 
@@ -20,6 +21,15 @@ class SnapshotReadSchemaSpec extends SparkSpec {
     assert(df.schema == nation.schema)
     assert(withJobCount(Snapshot.readAsOf(spark, root, "2024-06-01T00:00:00Z", "nation"))._2 == 0)
     assert(df.count() == nation.count())
+  }
+
+  test("building a read of a 40-file entry runs no Spark job (no file listing)") {
+    val root = Files.createTempDirectory("snap_read_40").toString
+    Snapshot.export(spark, Map("t" -> spark.range(0, 4000, 1, 40).toDF("id")), root, "v1")
+    assert(Snapshot.readManifest(spark, root, "v1").tables("t").files.size == 40)
+    val (df, jobs) = withJobCount(Snapshot.read(spark, root, "v1", "t"))
+    assert(jobs == 0, s"$jobs jobs to build the read")
+    assert(df.count() == 4000)
   }
 
   test("a partitioned entry reads with its manifest schema in the inferred column order") {
@@ -44,8 +54,15 @@ class SnapshotReadSchemaSpec extends SparkSpec {
     val m = Snapshot.export(spark, Map("nation" -> nation), root, "v1")
     Snapshot.writeManifest(spark, root, m.copy(tag = "legacy", parent = None, generation = 0L,
       tables = m.tables.map { case (k, e) => k -> e.copy(schemaJson = None) }))
-    val df = Snapshot.read(spark, root, "legacy", "nation")
+    val (df, jobs) = withJobCount(Snapshot.read(spark, root, "legacy", "nation"))
+    assert(jobs == 0)
     assert(df.schema.fieldNames.toSeq == nation.schema.fieldNames.toSeq)
     assert(df.count() == nation.count())
+    // the DSv2 options path reads it the same way
+    val (v2, v2Jobs) = withJobCount(spark.read.format("graft.sources.SnapshotSource")
+      .option("root", root).option("tag", "legacy").option("table", "nation").load())
+    assert(v2Jobs == 0)
+    assert(v2.schema == df.schema)
+    assert(v2.exceptAll(nation).isEmpty && nation.exceptAll(v2).isEmpty)
   }
 }

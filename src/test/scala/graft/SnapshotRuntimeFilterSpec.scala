@@ -9,8 +9,8 @@ import graft.sources.Snapshot
   * predicates; with SupportsRuntimeFiltering a selective broadcast-join
   * dimension now prunes snapshot files at execution time — the
   * snapshot-source twin of what q_scan_dpp proves for the native
-  * parquet path. Fewer files must be READ (tasks of the fact-scan
-  * stage, one per file), results must be identical with the feature off.
+  * parquet path. Fewer files must be READ (records of the fact-scan
+  * stage, 100 per file), results must be identical with the feature off.
   */
 class SnapshotRuntimeFilterSpec extends SparkSpec {
 
@@ -33,24 +33,24 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
 
   private var rootDir: String = _
 
-  /** `body`'s result and the tasks it ran in stages that read the
-    * snapshot: the scan's input RDD is a `DataSourceRDD` with one
-    * partition per planned file.
+  /** `body`'s result and the files it read in stages that read the
+    * snapshot (the scan's input RDD is a `DataSourceRDD`), counted as
+    * records read over the 100 rows each file of the fact holds.
     */
-  private def withScanTasks[T](body: => T): (T, Int) = {
+  private def withScanFiles[T](body: => T): (T, Long) = {
     val sc = spark.sparkContext
-    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val records = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         if (e.stageInfo.rddInfos.exists(_.name == "DataSourceRDD"))
-          tasks.addAndGet(e.stageInfo.numTasks)
+          records.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
     }
     org.apache.spark.TestListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try {
       val out = body
       org.apache.spark.TestListenerBus.drain(sc)
-      (out, tasks.get)
+      (out, records.get / 100)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -75,14 +75,14 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
     assert(planStr.toLowerCase.contains("dynamicpruning"),
       s"snapshot fact scan must carry a runtime pruning subquery, got:\n$planStr")
 
-    val (on, opensOn) = withScanTasks(q1.collect())
+    val (on, opensOn) = withScanFiles(q1.collect())
     assert(opensOn < 8,
       s"runtime filter must prune file reads below the 8-file total, read $opensOn")
 
     val saved = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
     try {
       spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
-      val (off, opensOff) = withScanTasks(query.collect())
+      val (off, opensOff) = withScanFiles(query.collect())
       assert(opensOff == 8, s"with the feature off every file scans, read $opensOff")
       assert(on.toSeq == off.toSeq,
         s"pruning must not change results: on=${on.toSeq} off=${off.toSeq}")
@@ -93,8 +93,7 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
     rootDir = Files.createTempDirectory("snap_rf_attrs").toString
     exportRangedFact(rootDir)
     val entry = Snapshot.readManifest(spark, rootDir, "g1").tables("fact")
-    val scan = graft.sources.SnapshotScan(
-      snap.schema, snap.schema, entry.files)(spark)
+    val scan = graft.sources.SnapshotScan(snapshotTable(entry), snap.schema)
     val attrs = scan.filterAttributes().map(_.describe()).toSet
     assert(attrs.contains("k") && attrs.contains("v"),
       s"int64 columns with footer stats must be advertised, got $attrs")
@@ -111,15 +110,16 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
         Map("k" -> Snapshot.ColumnStats(i * 10L, i * 10L + 9L)))
     }
     val schema = StructType(Seq(StructField("k", LongType)))
-    val scan = graft.sources.SnapshotScan(schema, schema, files)(spark)
+    val scan = graft.sources.SnapshotScan(
+      snapshotTable(Snapshot.TableEntry(files, 0L, "", schemaJson = Some(schema.json))), schema)
     val keys: Array[Any] =
       Array.tabulate(10000)(j => java.lang.Long.valueOf(j * 100L))
     val probes0 = graft.sources.SnapshotScanProbe.runtimeProbes.sum()
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("k", keys)))
-    val planned = scan.planInputPartitions()
+    val planned = plannedFiles(scan)
     assert(planned.length == 10000,
-      s"10k keys in 10k distinct file ranges must plan exactly 10k partitions, got ${planned.length}")
+      s"10k keys in 10k distinct file ranges must plan exactly 10k files, got ${planned.length}")
     // complexity asserted as an OP-COUNT, not wall-clock (which flakes
     // on loaded shared hosts — r12 advice): exactly one binary-search
     // range probe per file proves the O(F log V) shape; the naive
@@ -134,21 +134,20 @@ class SnapshotRuntimeFilterSpec extends SparkSpec {
     rootDir = Files.createTempDirectory("snap_rf_unit").toString
     exportRangedFact(rootDir)
     val entry = Snapshot.readManifest(spark, rootDir, "g1").tables("fact")
-    val scan = graft.sources.SnapshotScan(
-      snap.schema, snap.schema, entry.files)(spark)
+    val scan = graft.sources.SnapshotScan(snapshotTable(entry), snap.schema)
     // keys chosen inside exactly two distinct file ranges
     val mins = entry.files.map(_.stats("k").min).sorted
     val keys: Array[Any] = Array(java.lang.Long.valueOf(mins(2)), java.lang.Long.valueOf(mins(5)))
     scan.filter(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.In("k", keys)))
-    val planned = scan.planInputPartitions()
+    val planned = plannedFiles(scan)
     assert(planned.length == 2,
-      s"two keys in two disjoint file ranges must plan exactly 2 partitions, got ${planned.length}")
+      s"two keys in two disjoint file ranges must plan exactly 2 files, got ${planned.length}")
     // an empty-overlap key set prunes everything
     scan.filter(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.In("k",
       Array(java.lang.Long.valueOf(100000L)))))
-    assert(scan.planInputPartitions().isEmpty)
+    assert(plannedFiles(scan).isEmpty)
     // clearing the runtime filter restores the full file set
     scan.filter(Array.empty[org.apache.spark.sql.sources.Filter])
-    assert(scan.planInputPartitions().length == 8)
+    assert(plannedFiles(scan).length == 8)
   }
 }

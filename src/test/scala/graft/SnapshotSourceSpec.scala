@@ -406,25 +406,69 @@ class SnapshotSourceSpec extends SparkSpec {
     assert(entry.files.forall(_.stats.contains("n_nationkey")),
       "export must harvest footer min/max for integer columns")
 
-    def partitionsFor(filters: org.apache.spark.sql.sources.Filter*): Int = {
-      val schema = org.apache.spark.sql.types.DataType
-        .fromJson(entry.schemaJson.get).asInstanceOf[org.apache.spark.sql.types.StructType]
-      val b = new graft.sources.SnapshotScanBuilder(schema, entry.files, 0L, 0L, spark)
+    def filesFor(filters: org.apache.spark.sql.sources.Filter*): Int = {
+      val b = new graft.sources.SnapshotScanBuilder(snapshotTable(entry))
       b.pushFilters(filters.toArray)
-      b.build().toBatch.planInputPartitions().length
+      plannedFiles(b.build().toBatch).length
     }
     import org.apache.spark.sql.sources.{EqualTo, GreaterThan}
-    assert(partitionsFor() == 4, "no filter → all files planned")
-    assert(partitionsFor(EqualTo("n_nationkey", 3L)) == 1,
+    assert(filesFor() == 4, "no filter → all files planned")
+    assert(filesFor(EqualTo("n_nationkey", 3L)) == 1,
       "point lookup must plan exactly the one file whose range covers it")
-    assert(partitionsFor(GreaterThan("n_nationkey", 1000L)) == 0,
-      "out-of-range predicate must plan zero partitions")
+    assert(filesFor(GreaterThan("n_nationkey", 1000L)) == 0,
+      "out-of-range predicate must plan zero files")
     // end-to-end: the pruned scan still returns exact results
     val one = spark.read.format("graft.sources.SnapshotSource")
       .option("root", r).option("tag", "t1").option("table", "nation").load()
       .where(col("n_nationkey") === 3)
     assert(one.count() == 1)
     assert(one.queryExecution.executedPlan.toString.contains("skippedByStats=3"))
+  }
+
+  test("Snapshot.read plans only the files whose manifest stats admit a point key") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val r = Files.createTempDirectory("snap_read_prune").toString
+    val lineitem = Tables.lineitem(spark, sf)
+    Snapshot.export(spark, Map("lineitem" -> lineitem.repartitionByRange(8, col("l_orderkey"))), r, "t1")
+    val files = Snapshot.readManifest(spark, r, "t1").tables("lineitem").files
+    assert(files.size == 8)
+    val k = lineitem.agg(max("l_orderkey")).collect().head.getLong(0) / 2
+    val admit = files.filter(f => f.stats("l_orderkey").min <= k && k <= f.stats("l_orderkey").max)
+    assert(admit.nonEmpty && admit.size < files.size)
+    val hit = Snapshot.read(spark, r, "t1", "lineitem").where(col("l_orderkey") === k)
+    val scanned = new AdaptiveSparkPlanHelper {}.collect(hit.queryExecution.executedPlan) {
+      case b: BatchScanExec => plannedFiles(b.batch)
+    }.flatten
+    assert(scanned.sorted == admit.map(_.path).sorted)
+    assert(hit.count() == lineitem.where(col("l_orderkey") === k).count())
+  }
+
+  test("a file larger than maxPartitionBytes reads in several splits, every row once") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val r = Files.createTempDirectory("snap_split").toString
+    val src = spark.range(0, 200000, 1, 1).select(col("id"), (col("id") * 7 % 1000).as("v"))
+    // several row groups, so that each split has its own rows to read
+    spark.conf.set("parquet.block.size", (128 * 1024).toString)
+    try Snapshot.export(spark, Map("t" -> src), r, "t1")
+    finally spark.conf.unset("parquet.block.size")
+    val files = Snapshot.readManifest(spark, r, "t1").tables("t").files
+    assert(files.size == 1)
+    val file = files.head
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (64 * 1024).toString)
+    try {
+      assert(file.size > 4 * 64 * 1024, s"file of ${file.size} bytes")
+      Seq(Snapshot.read(spark, r, "t1", "t"), spark.read.format("graft.sources.SnapshotSource")
+        .option("root", r).option("tag", "t1").option("table", "t").load()).foreach { df =>
+        val splits = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+          case b: BatchScanExec => b.batch.planInputPartitions().toSeq
+        }.flatten
+        assert(splits.size > 1, s"${splits.size} splits")
+        assert(df.count() == 200000)
+        assert(df.exceptAll(src).isEmpty && src.exceptAll(df).isEmpty)
+      }
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
   test("DSv2-written files carry manifest stats and prune") {
@@ -458,16 +502,14 @@ class SnapshotSourceSpec extends SparkSpec {
     // while the scattered gen1 layout cannot prune at all
     // the memoized root for (this session, this sf dir)
     val root = graft.operators.Scans.optimizeRoots((graft.SessionToken(spark), sf))
-    def plannedFiles(tag: String): Int = {
+    def filesFor(tag: String): Int = {
       val entry = Snapshot.readManifest(spark, root, tag).tables("orders_opt")
-      val schema = org.apache.spark.sql.types.DataType
-        .fromJson(entry.schemaJson.get).asInstanceOf[org.apache.spark.sql.types.StructType]
-      val b = new graft.sources.SnapshotScanBuilder(schema, entry.files, 0L, 0L, spark)
+      val b = new graft.sources.SnapshotScanBuilder(snapshotTable(entry))
       b.pushFilters(Array(org.apache.spark.sql.sources.EqualTo("o_orderkey", 42L)))
-      b.build().toBatch.planInputPartitions().length
+      plannedFiles(b.build().toBatch).length
     }
-    assert(plannedFiles("gen1") == 8, "scattered layout: every file may hold the key")
-    assert(plannedFiles("gen2") == 1, "optimized layout: exactly one file can")
+    assert(filesFor("gen1") == 8, "scattered layout: every file may hold the key")
+    assert(filesFor("gen2") == 1, "optimized layout: exactly one file can")
     // generations carry identical data
     def readTag(tag: String) = spark.read.format("graft.sources.SnapshotSource")
       .option("root", root).option("tag", tag).option("table", "orders_opt").load()

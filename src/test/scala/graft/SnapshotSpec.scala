@@ -96,9 +96,14 @@ class SnapshotSpec extends SparkSpec {
     val expected = Tables.orders(spark, sf)
       .where(col("o_orderpriority") === "1-URGENT").count()
     assert(filtered.count() == expected)
-    // the predicate must become a partition filter, not a data filter
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(o_orderpriority"), plan)
+    // the scan plans only the matching partition's files
+    val scanned = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(filtered.queryExecution.executedPlan) {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => plannedFiles(b.batch)
+      }.flatten
+    val urgent = Snapshot.readManifest(spark, root, "p1").tables("orders").files.map(_.path)
+      .filter(_.contains("/o_orderpriority=1-URGENT/"))
+    assert(urgent.nonEmpty && scanned.sorted == urgent.sorted, scanned)
   }
 
   test("crashed export leaves no readable snapshot (manifest written last)") {

@@ -43,6 +43,18 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** A read-only DSv2 table over `entry`, built as every snapshot read
+    * builds one.
+    */
+  def snapshotTable(entry: Snapshot.TableEntry): graft.sources.SnapshotTable =
+    graft.sources.SnapshotTable.of("", "", "t", Some(entry), writable = false, spark)
+
+  /** The distinct files `batch` plans input splits over. */
+  def plannedFiles(batch: org.apache.spark.sql.connector.read.Batch): Seq[String] =
+    batch.planInputPartitions().toSeq.flatMap(
+      _.asInstanceOf[org.apache.spark.sql.execution.datasources.FilePartition].files.map(_.filePath.toString))
+      .distinct
+
   /** Adds `df` as `table` to snapshot `tag` (creating the tag when it
     * has no manifest) the way export wrote hive-partitioned tables
     * before it stopped: `DataFrameWriter.partitionBy(cols)` into a fresh
