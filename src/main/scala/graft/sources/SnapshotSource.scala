@@ -18,7 +18,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, OutputWriter, OutputWriterFactory, PartitionedFile, PartitioningAwareFileIndex, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, GraftPartitionShim, OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.internal.SQLConf
@@ -67,163 +67,98 @@ class SnapshotSource extends TableProvider {
     (root, tag, table)
   }
 
-  /** The manifest the options name: the exact `tag`, or — with
-    * `asOf` — the snapshot in effect at that point (parent-chain walk
-    * from `tag` when both are given, newest catalog tag <= asOf
-    * otherwise). None when the snapshot doesn't exist yet — a valid
+  /** The table the options name, built by [[SnapshotTable.of]] from
+    * the exact `tag`'s manifest, or — with `asOf` — from the snapshot in
+    * effect at that point (parent-chain walk from `tag` when both are
+    * given, newest catalog tag <= asOf otherwise). An asOf table is
+    * read-only and carries the resolved tag. No manifest yet is a valid
     * state only for a WRITE creating a new table.
     *
     * Memoized per provider instance, keyed on (root, tag, asOf): Spark
-    * calls inferSchema and then getTable on the SAME TableProvider
-    * instance for one load, so both see ONE resolution — the parent
-    * chain is walked once per table load (not 3-4 times), and a
-    * catalog change landing between the two calls (a backfilled tag
-    * <= asOf) can no longer pair one snapshot's schema with another
+    * calls inferSchema and then getTable on the SAME instance for one
+    * load, so both see ONE resolution — the manifest is read and the
+    * table built once per load, and a catalog change landing between
+    * the two calls cannot pair one snapshot's schema with another
     * snapshot's file list.
     *
-    * HARD INVARIANT — memo lifetime is ONE load: getTable TAKES the
-    * entry (atomic remove-and-use) when materializing the resolution
-    * into the returned SnapshotTable. The format(...).load()/save()
-    * path constructs a fresh TableProvider per load today, but this
-    * class must stay correct under SEQUENTIAL reuse of one instance
-    * (catalog registration): without the take, a manifest updated
-    * since — or a memoized None for a table created since — would be
-    * served stale, silently. Two hardenings on top of the take
-    * (round 8, advice): (1) inferSchema always RE-RESOLVES and
-    * overwrites — it never returns a leftover entry, so an earlier
-    * load that aborted between inferSchema and getTable cannot feed
-    * a later load's schema; (2) entries are stamped with the
-    * resolving THREAD id and getTable consumes only a same-thread
-    * entry — and leaves other threads' in-flight entries in place —
-    * (Spark resolves one load's inferSchema→getTable synchronously on
-    * one thread), so an external-metadata load — which skips
-    * inferSchema — can never swallow an orphan another thread left
-    * behind; (3) a THROWING inferSchema clears its own entry before
-    * propagating, so a failed load leaves no same-thread orphan
-    * either. The one remaining (theoretical) orphan window is a load
-    * whose inferSchema SUCCEEDS but is abandoned before getTable —
-    * Spark's load path has no such exit today, and the entry is
-    * overwritten by the next inferSchema on the same coords. CONCURRENT loads sharing one instance while
-    * the catalog mutates are still NOT protected: Spark's API hands
-    * getTable the schema separately from this resolution, so two
-    * loads interleaving on one instance could pair one resolution's
-    * schema with the other's file list — that usage
-    * needs one provider per load, as the stock path guarantees (the
-    * catalog path, [[SnapshotCatalog]], sidesteps this class
-    * entirely: one fresh manifest resolution per loadTable call).
+    * HARD INVARIANT — memo lifetime is ONE load, so a sequentially
+    * reused instance (catalog registration) never serves a stale
+    * manifest: (1) inferSchema always re-resolves and overwrites;
+    * (2) entries are stamped with the resolving thread id, and getTable
+    * TAKES (atomic remove-and-use) only a same-thread entry, leaving
+    * other threads' in-flight entries in place — one load's
+    * inferSchema→getTable runs synchronously on one thread, so an
+    * external-metadata load (which skips inferSchema) can never swallow
+    * another load's entry; (3) a throwing inferSchema clears its own
+    * entry. CONCURRENT loads sharing one instance while the catalog
+    * mutates are NOT protected — Spark hands getTable the schema
+    * separately from this resolution — and need one provider per load,
+    * as the stock path guarantees ([[SnapshotCatalog]] resolves fresh
+    * per loadTable call).
     */
-  private val resolved = scala.collection.mutable.Map
-    .empty[(String, String, String), (Long, Option[Snapshot.Manifest])]
+  private val resolved = mutable.Map.empty[(String, String, String), (Long, SnapshotTable)]
 
-  /** One un-memoized manifest resolution (the parent-chain walk). */
-  private def resolveManifest(options: CaseInsensitiveStringMap): Option[Snapshot.Manifest] = {
+  private def key(options: CaseInsensitiveStringMap) = {
     val (root, tag, _) = coords(options)
-    Option(options.get("asOf")) match {
-      case Some(a) =>
-        Some(Snapshot.resolveAsOf(SparkSession.active, root, a, Option(tag)))
+    (root, tag, options.get("asOf"))
+  }
+
+  /** One un-memoized resolution. The session is captured HERE, on the
+    * loading thread: builder and commit callbacks run on Spark-internal
+    * threads where `SparkSession.active` can name another session.
+    */
+  private def resolve(options: CaseInsensitiveStringMap): SnapshotTable = {
+    val (root, tag, table) = coords(options)
+    val asOf = Option(options.get("asOf"))
+    val m = asOf match {
+      case Some(a) => Some(Snapshot.resolveAsOf(SparkSession.active, root, a, Option(tag)))
       case None =>
         try Some(Snapshot.readManifest(SparkSession.active, root, tag))
         catch { case _: java.io.FileNotFoundException => None }
     }
+    SnapshotTable.of(root, asOf.flatMap(_ => m.map(_.tag)).getOrElse(tag), table,
+      m.flatMap(_.tables.get(table)), writable = asOf.isEmpty, SparkSession.active)
   }
-
-  private def manifestFor(options: CaseInsensitiveStringMap): Option[Snapshot.Manifest] = {
-    val (root, tag, _) = coords(options)
-    val asOf = Option(options.get("asOf"))
-    // always a FRESH resolution, overwriting any orphan a previous
-    // aborted load left on these coords (memo invariant above)
-    val m = resolveManifest(options)
-    resolved.synchronized {
-      resolved.update((root, tag, asOf.orNull), (Thread.currentThread().getId, m))
-    }
-    m
-  }
-
-  private def entryFor(options: CaseInsensitiveStringMap): Option[Snapshot.TableEntry] =
-    manifestFor(options).flatMap(_.tables.get(coords(options)._3))
-
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     try {
-      val (root, tag, table) = coords(options)
-      entryFor(options) match {
-        case Some(entry) =>
-          SnapshotTable.of(root, tag, table, Some(entry), writable = false, SparkSession.active).schema()
-        case None if options.get("asOf") != null =>
-          // time travel is read-only: a missing table at the resolved
-          // snapshot is a read error, never a write-creation target
-          throw new IllegalArgumentException(
-            s"table $table not in the snapshot resolved for asOf='${options.get("asOf")}'")
-        case None =>
-          // a new table being created by a write: the writer passes the
-          // dataframe schema explicitly (save() offers no other channel)
-          Option(options.get("schema")).map(DataType.fromJson(_).asInstanceOf[StructType])
-            .getOrElse(throw new IllegalArgumentException(
-              s"table $table not in snapshot $tag; " +
-                "to create it via a write, pass .option(\"schema\", df.schema.json)"))
-      }
+      val t = resolve(options)
+      resolved.synchronized(resolved.update(key(options), (Thread.currentThread().getId, t)))
+      if (t.existed) t.schema()
+      // time travel is read-only: a missing table at the resolved
+      // snapshot is a read error, never a write-creation target
+      else if (options.get("asOf") != null) throw new IllegalArgumentException(
+        s"table ${t.tableName} not in the snapshot resolved for asOf='${options.get("asOf")}'")
+      // a new table being created by a write: the writer passes the
+      // dataframe schema explicitly (save() offers no other channel)
+      else Option(options.get("schema")).map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(throw new IllegalArgumentException(s"table ${t.tableName} not in snapshot ${t.tag}; " +
+          "to create it via a write, pass .option(\"schema\", df.schema.json)"))
     } catch {
       case e: Throwable =>
-        // a FAILED load must not leave its resolution behind: the memo
-        // entry manifestFor just wrote would otherwise be a same-thread
-        // orphan that a LATER external-metadata load (which skips
-        // inferSchema) on this thread could consume — serving a stale
-        // file list under a fresh schema. No getTable follows a throw
-        // here, so the entry can never be legitimately claimed.
-        val (root, tag, _) = coords(options)
-        resolved.synchronized {
-          resolved.remove((root, tag, options.get("asOf")))
-        }
+        // no getTable follows a throw, so the entry could only be a
+        // same-thread orphan for a later external-metadata load
+        resolved.synchronized(resolved.remove(key(options)))
         throw e
     }
 
+  /** The memoized table (invariant above), else a fresh resolution,
+    * with the load's `schema`. A read rejects one that differs from the
+    * entry's (see newScanBuilder). A table the manifest lacks is a write
+    * target only: reading it fails loudly, so a typo'd tag/table on a
+    * read that carries the schema option is never a silent empty result.
+    */
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
-    val (root, tagOpt, table) = coords(options)
-    val asOf = Option(options.get("asOf"))
-    // an asOf read pins a HISTORICAL manifest — its tag is the resolved
-    // one (for error messages), and the table must be read-only so a
-    // time-travel handle can never append into history
-    // ATOMIC TAKE of the resolution inferSchema memoized (invariant
-    // above): the value is fully captured in the SnapshotTable below
-    // (file list, row count, resolved tag), and removing it in the same
-    // step means a sequentially-reused provider instance re-resolves on
-    // its next load instead of serving a stale manifest. Only a
-    // SAME-THREAD entry is consumed — one load's inferSchema→getTable
-    // runs synchronously on one thread, so a thread mismatch means the
-    // entry is another load's orphan, not ours. A load that reached
-    // getTable without inferSchema (external metadata) resolves fresh
-    // here.
     val tid = Thread.currentThread().getId
-    val manifest = resolved.synchronized {
-      // CONDITIONAL take: remove only OUR OWN same-thread entry.
-      // Another thread's in-flight entry must be left for its owner —
-      // an unconditional remove would let an external-metadata load
-      // (which skips inferSchema) destroy a concurrent load's
-      // resolution between ITS inferSchema and getTable, forcing that
-      // load to re-resolve and potentially pair its already-returned
-      // schema with a re-exported manifest's file list.
-      resolved.get((root, tagOpt, asOf.orNull)) match {
-        case Some((`tid`, m)) =>
-          resolved.remove((root, tagOpt, asOf.orNull)); Some(m)
+    val t = resolved.synchronized {
+      resolved.get(key(options)) match {
+        case Some((`tid`, t)) => resolved.remove(key(options)); Some(t)
         case _ => None
       }
-    } match {
-      case Some(m) => m
-      case None => resolveManifest(options)
-    }
-    val tag = asOf.map(_ => manifest.get.tag).getOrElse(tagOpt)
-    // capture the OWNING session HERE, at load time on the loading
-    // session's thread — scan/write builders and commit/abort run on
-    // Spark-internal threads later, where SparkSession.active can be a
-    // DIFFERENT session in a multi-session app (wrong per-session fs
-    // settings, silently). A table the manifest lacks is a write target
-    // only: reading it must still fail loudly (see newScanBuilder) — a
-    // typo'd tag/table on a READ that happens to carry the schema option
-    // must not become a silent empty result.
-    SnapshotTable.of(root, tag, table, manifest.flatMap(_.tables.get(table)),
-      writable = asOf.isEmpty, SparkSession.active, Some(schema))
+    }.getOrElse(resolve(options))
+    t.copy(tableSchema = schema)(t.owner)
   }
 }
 
@@ -290,27 +225,25 @@ case class SnapshotTable(tableName: String, tableSchema: StructType, dataSchema:
 object SnapshotTable {
   /** The one constructor of a [[SnapshotTable]]; no Spark job runs.
     * The entry's schema is its `schemaJson`, else its first file's
-    * [[footerSchema]], with a legacy entry's partition columns
-    * ([[ManifestFileIndex]]) last, as Spark's file sources order them.
-    * No `entry` is a table only a write can create. `requested` (a
-    * user's `.schema(...)` or a write's query schema) overrides it as
-    * the table's schema; a read rejects one that differs.
+    * [[footerSchema]], with a legacy entry's partition columns (decoded
+    * from its files' dirs under `dir` by Spark's own parser) last, as
+    * Spark's file sources order them. No `entry` is a table only a write
+    * can create; its schema is the one the load passes to getTable.
     */
   def of(root: String, tag: String, name: String, entry: Option[Snapshot.TableEntry],
-         writable: Boolean, owner: SparkSession,
-         requested: Option[StructType] = None): SnapshotTable = {
+         writable: Boolean, owner: SparkSession): SnapshotTable = {
     val e = entry.getOrElse(Snapshot.TableEntry(Nil, 0L, ""))
     val stored = e.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
-      .orElse(e.files.headOption.map(f => footerSchema(owner, new Path(f.path))))
-      .orElse(requested).getOrElse(new StructType())
-    val index = e.dir.filter(_ => e.partitionBy.nonEmpty)
-      .map(new ManifestFileIndex(owner, _, e.files, e.schemaJson.map(_ => stored)))
-    val partitionSchema = index.fold(new StructType())(_.partitionSchema)
+      .orElse(e.files.headOption.map(f => footerSchema(owner, new Path(f.path)))).getOrElse(new StructType())
+    val dirOf = (f: Snapshot.FileEntry) => new Path(f.path).getParent
+    val (partitionSchema, byDir) = e.dir.filter(_ => e.partitionBy.nonEmpty).fold(
+      (new StructType(), Map.empty[Path, InternalRow]))(d => GraftPartitionShim.parsePartitions(
+        owner, new Path(d), e.files.map(dirOf).distinct, e.schemaJson.map(_ => stored)))
     val resolver = owner.sessionState.conf.resolver
     val dataSchema = StructType(stored.filterNot(f => partitionSchema.exists(p => resolver(p.name, f.name))))
-    SnapshotTable(name, requested.getOrElse(StructType(dataSchema ++ partitionSchema)), dataSchema,
-      partitionSchema, e.files, index.fold(Map.empty[String, InternalRow])(_.valuesByPath),
-      e.rows, root, tag, existed = entry.isDefined, writable)(owner)
+    SnapshotTable(name, StructType(dataSchema ++ partitionSchema), dataSchema, partitionSchema, e.files,
+      e.files.flatMap(f => byDir.get(dirOf(f)).map(f.path -> _)).toMap, e.rows, root, tag,
+      existed = entry.isDefined, writable)(owner)
   }
 
   /** The Spark schema of the parquet file `p`, read from its footer on
@@ -323,32 +256,6 @@ object SnapshotTable {
     try ParquetFileFormat.readSchemaFromFooter(new Footer(p, reader.getFooter),
       new ParquetToSparkSchemaConverter(owner.sessionState.conf))
     finally reader.close()
-  }
-}
-
-/** A legacy hive-partitioned entry's manifest files as Spark's file
-  * index rooted at its `dir` (the index's base path), listing nothing:
-  * partition values decode through Spark's own
-  * `PartitioningUtils.parsePartitions` as a V1 read over `dir` decodes
-  * them (types from `schema` when given, unescaping,
-  * `__HIVE_DEFAULT_PARTITION__` as NULL).
-  */
-private class ManifestFileIndex(s: SparkSession, dir: String, files: Seq[Snapshot.FileEntry],
-                                schema: Option[StructType])
-    extends PartitioningAwareFileIndex(s, Map.empty, schema) {
-  private val statuses = files.map(f => new FileStatus(f.size, false, 0, 0L, 0L, new Path(f.path)))
-  override val leafFiles: mutable.LinkedHashMap[Path, FileStatus] =
-    mutable.LinkedHashMap(statuses.map(st => st.getPath -> st): _*)
-  override val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
-    statuses.toArray.groupBy(_.getPath.getParent)
-  override val rootPaths: Seq[Path] = Seq(new Path(dir))
-  override lazy val partitionSpec: PartitionSpec = inferPartitioning()
-  override def refresh(): Unit = ()
-
-  /** Each manifest path's partition values. */
-  def valuesByPath: Map[String, InternalRow] = {
-    val byDir = partitionSpec.partitions.map(p => p.path -> p.values).toMap
-    files.map(f => f.path -> byDir(new Path(f.path).getParent)).toMap
   }
 }
 
@@ -595,17 +502,18 @@ class SnapshotFooterAggReader(partition: FilePartition, aggs: Seq[SnapshotAgg],
 /** The row scan: files skipped by manifest stats, runtime filter and
   * partition value, the rest split and packed by [[SnapshotScan.pack]]
   * and read by Spark's parquet reader: the `required` stored columns,
-  * then every partition column (constant per split), as Spark's
-  * `FileScan` orders them. Equality leaves out the table's `owner`, for
+  * then the `required` partition columns (constant per split), as
+  * Spark's `FileScan` orders them. Equality leaves out the table's `owner`, for
   * the reuse-preserving reason given at [[SnapshotAggScan]].
   */
 case class SnapshotScan(table: SnapshotTable, required: StructType,
                         filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
+  private val readPartitionSchema = StructType(table.partitionSchema.filter(f => required.fieldNames.contains(f.name)))
   private val readDataSchema =
     StructType(required.filterNot(f => table.partitionSchema.fieldNames.contains(f.name)))
-  override def readSchema(): StructType = StructType(readDataSchema ++ table.partitionSchema)
+  override def readSchema(): StructType = StructType(readDataSchema ++ readPartitionSchema)
 
   /** Manifest-derived statistics for the planner: the snapshot knows
     * its exact byte size and row count without touching storage, so
@@ -702,27 +610,33 @@ case class SnapshotScan(table: SnapshotTable, required: StructType,
     fe => checks.forall(_(fe))
   }
 
+  private def byStats: Seq[Snapshot.FileEntry] =
+    if (runtimeFilters.isEmpty) staticSelected else staticSelected.filter(runtimePruner(runtimeFilters))
+  private def values(f: Snapshot.FileEntry) = table.partitionValues.getOrElse(f.path, InternalRow.empty)
   private def selected: Seq[Snapshot.FileEntry] = {
-    val byStats =
-      if (runtimeFilters.isEmpty) staticSelected
-      else staticSelected.filter(runtimePruner(runtimeFilters))
     val inPartition = SnapshotFilePruning.partitionFilter(table.partitionSchema, filters ++ runtimeFilters)
-    byStats.filter(f => inPartition(table.partitionValues.getOrElse(f.path, InternalRow.empty)))
+    byStats.filter(f => inPartition(values(f)))
   }
 
-  override def planInputPartitions(): Array[InputPartition] =
+  /** Each split carries its file's values of the required partition
+    * columns only, as `FileScan` projects them.
+    */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val idx = readPartitionSchema.map(f => table.partitionSchema.fieldIndex(f.name))
     SnapshotScan.pack(table.owner, selected, splitFiles = true,
-      f => table.partitionValues.getOrElse(f.path, InternalRow.empty))
+      f => InternalRow.fromSeq(idx.map(i => values(f).get(i, table.partitionSchema(i).dataType))))
+  }
   // the OWNING session, not SparkSession.active: this runs on a
   // planning thread where a multi-session app's active session can
   // differ from the one that loaded the table (advice r9); the readers
   // get its Hadoop conf, so filesystem settings (S3 credentials, HA
   // nameservices, kerberos) reach the executors
   override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotScan.readerFactory(table.owner, table.dataSchema, readDataSchema, table.partitionSchema,
+    SnapshotScan.readerFactory(table.owner, table.dataSchema, readDataSchema, readPartitionSchema,
       filters)
   override def description(): String =
-    s"GraftSnapshotScan(files=${table.files.size}, skippedByStats=${table.files.size - selected.size}, " +
+    s"GraftSnapshotScan(files=${table.files.size}, skippedByStats=${table.files.size - byStats.size}, " +
+      s"skippedByPartition=${byStats.size - selected.size}, " +
       s"columns=${required.fieldNames.mkString(",")}, " +
       s"pushedFilters=[${filters.mkString(", ")}])"
 }

@@ -129,6 +129,21 @@ class PartitionedDsv2ProbeSpec extends SparkSpec {
     }
   }
 
+  test("a pruned read carries only the required partition columns") {
+    val root = exportPartitioned()
+    def scanColumns(df: DataFrame): Seq[String] =
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b.scan.readSchema().fieldNames.toSeq
+      }.flatten
+    val names = options(root).select("n_name")
+    assert(scanColumns(names) == Seq("n_name"))
+    assert(names.exceptAll(nation.select("n_name")).isEmpty && nation.select("n_name").exceptAll(names).isEmpty)
+    val both = options(root).select("n_regionkey", "n_name")
+    assert(scanColumns(both) == Seq("n_name", "n_regionkey"))
+    val want = nation.select("n_regionkey", "n_name")
+    assert(both.exceptAll(want).isEmpty && want.exceptAll(both).isEmpty)
+  }
+
   test("a runtime filter on the partition column prunes files") {
     val root = exportPartitioned()
     val dim = Tables.region(spark, sf).select(col("r_regionkey").as("n_regionkey"),
