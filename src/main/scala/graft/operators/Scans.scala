@@ -365,10 +365,10 @@ object Scans {
   }
 
   /** Metadata-only aggregation through the DSv2 source: count/min/max
-    * answered from parquet FOOTER statistics (SupportsPushDownAggregates
-    * — the plan shows GraftSnapshotAggScan and no data pages are read).
-    * At 100 TB this is a footer walk instead of a table scan. The
-    * oracle recomputes the same aggregates the honest way.
+    * answered from the snapshot manifest's signed row counts and column
+    * bounds (SupportsPushDownAggregates with complete pushdown — the
+    * plan is a local scan of the one answer row, and no file is read).
+    * The oracle recomputes the same aggregates the honest way.
     */
   // exported once per (session, sfDir) — plan-only consumers must not
   // re-export or leak another snapshot copy. Keyed on sessionUUID (a

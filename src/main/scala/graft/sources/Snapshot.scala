@@ -7,6 +7,8 @@ import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow, XXH64}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.StructType
 
@@ -103,12 +105,37 @@ object Snapshot {
     * clocks (mixed-clock skew is noise at day granularity; the
     * filesystem-probe trick vacuum uses has no analogue here because
     * ledger entries are manifest rows, not files).
+    *
+    * `inputs` is the fingerprint of the parquet files [[export]] read the
+    * entry's rows from, when its input was a bare `spark.read.parquet`
+    * relation. A later export whose input has the same fingerprint,
+    * against a parent entry with the same schema JSON and a current
+    * content term, inherits the entry without reading a row. The trust
+    * model: the same files (path, length, modification time), read with
+    * the same options under the same schema, hold the same rows. A
+    * writer that rewrites a file in place at the same length and keeps
+    * its modification time, or a session conf that decodes the same
+    * bytes differently (a datetime rebase mode set for the session, not
+    * as an option), is outside it. The DSv2 sink builds its entries
+    * without `inputs`, so an append or truncate makes the next export
+    * sign the table again. Manifests written before this field parse
+    * as None.
     */
   case class TableEntry(files: Seq[FileEntry], rows: Long, signature: String,
                         dir: Option[String] = None, partitionBy: Seq[String] = Nil,
                         schemaJson: Option[String] = None,
                         txns: Map[String, Long] = Map.empty,
-                        txnStamps: Map[String, Long] = Map.empty)
+                        txnStamps: Map[String, Long] = Map.empty,
+                        inputs: Option[InputFiles] = None)
+  /** One input file of [[TableEntry]] `inputs`, as its filesystem
+    * reported it at export time.
+    */
+  case class InputFile(path: String, size: Long, modified: Long)
+  /** The `files` of an input relation, sorted by path, and the SHA-256
+    * of its options (options may carry credentials, so only their digest
+    * is stored).
+    */
+  case class InputFiles(files: Seq[InputFile], options: String)
   /** `generation` is the tag's optimistic-concurrency version: every
     * committed manifest carries the predecessor's generation + 1, and a
     * committer states the generation it READ as a swap precondition
@@ -455,6 +482,10 @@ object Snapshot {
     }
   }
 
+  /** The row count `file`'s signature records; None for an unsigned file. */
+  private[sources] def signedRows(file: FileEntry): Option[Long] =
+    file.signature.flatMap(_.takeWhile(_ != ':').toLongOption)
+
   /** Tags and table names become filesystem path segments under
     * `root`. A slashed tag (`x/y`) commits `root/x/y/manifest.json` —
     * a manifest [[listTags]] (depth-1) never sees — so a later
@@ -478,16 +509,32 @@ object Snapshot {
     * signature is unchanged are linked to the parent's files instead
     * of rewritten (incremental transfer).
     *
-    * Every table's DataFrame is planned once and its row RDD pinned.
-    * An export then runs at most TWO Spark jobs, whatever the number of
-    * tables:
+    * A table whose input is provably the parent entry's content inherits
+    * that entry without reading a row. Each proof needs a parent entry
+    * of the same name with a current content term and the input's
+    * schema JSON, and one of:
+    *  - the input is a bare read of a [[SnapshotTable]] (no filter, no
+    *    projection) under the same qualified root whose files are the
+    *    parent entry's: snapshot files are immutable, so the rows are the
+    *    parent's;
+    *  - the input is a bare `spark.read.parquet` relation whose
+    *    [[InputFiles]] fingerprint, taken by a fresh `getFileStatus` per
+    *    file that also matches the relation's own listing, equals the
+    *    parent entry's `inputs` (trust model at [[TableEntry]]).
+    * Export records `inputs` on every entry of a parquet-relation input,
+    * whether it writes, links or inherits it.
+    *
+    * Every other table's DataFrame is planned once and its row RDD
+    * pinned. An export then runs at most TWO Spark jobs, whatever the
+    * number of tables:
     *  - ONE job signs the partitions of every table the parent has an
-    *    entry of the same name for ([[partitionSums]]); the driver then
-    *    decides each such table: inherit the parent's entry whole (equal
-    *    signature), or link its partitions that equal a parent file and
-    *    write the others. A table the parent lacks is not signed, since
-    *    there is nothing to compare it with: all its partitions are
-    *    written, so a first export reads each input row once;
+    *    entry of the same name for and that is not proven unchanged
+    *    ([[partitionSums]]); the driver then decides each such table:
+    *    inherit the parent's entry whole (equal signature), or link its
+    *    partitions that equal a parent file and write the others. A
+    *    table the parent lacks is not signed, since there is nothing to
+    *    compare it with: all its partitions are written, so a first
+    *    export reads each input row once;
     *  - ONE job writes every partition to be written, of every table,
     *    into its table's fresh generation dir through the DSv2 sink's
     *    [[SnapshotDataWriter]], the only writer of snapshot files. Its
@@ -541,24 +588,32 @@ object Snapshot {
     tables.keys.foreach(requireSafeSegment("snapshot table name", _))
     tables.foreach { case (name, df) => SnapshotWriterFactory.requireStorable(name, df.schema) }
     val parentManifest = parent.map(readManifest(s, root, _))
-    // pin the partitions: one planned RDD per table feeds the signature
-    // job and the write, so partition i holds the same rows in both
     val named = tables.toSeq
-    val rdds = named.map(_._2.queryExecution.toRdd)
     val parents = named.map { case (name, _) => parentManifest.flatMap(_.tables.get(name)) }
+    // fingerprinted before any job reads a row, so a file changed during
+    // the export is signed again next time
+    val inputs = named.map { case (_, df) => inputsOf(s, df) }
+    // generation dirs are qualified, so manifest paths name their filesystem
+    val rootQ = fs(s, root).makeQualified(new Path(root))
+    val proven = named.indices.map { t =>
+      parents(t).filter(provenUnchanged(s, rootQ, named(t)._2, inputs(t), _))
+    }
+    // pin the partitions: one planned RDD per unproven table feeds the
+    // signature job and the write, so partition i holds the same rows in both
+    val rdds = named.indices.filter(proven(_).isEmpty).map(t => t -> named(t)._2.queryExecution.toRdd).toMap
     // only a table with a parent entry has anything to match; the others
     // are signed by the write alone
-    val signed = named.indices.filter(parents(_).isDefined)
+    val signed = named.indices.filter(t => rdds.contains(t) && parents(t).isDefined)
     val sums = signed.zip(partitionSums(s, signed.map(rdds), signed.map(named(_)._2.schema))).toMap
-    // generation dirs are qualified, so manifest paths name their filesystem
-    val tagDir = s"${fs(s, root).makeQualified(new Path(root))}/$tag"
     val plans = named.indices.map { t =>
       val (name, df) = named(t)
-      planTable(tagDir, name, df.schema, rdds(t).getNumPartitions, sums.get(t), parents(t))
+      if (proven(t).isDefined) TablePlan(name, df.schema, "", proven(t), Nil)
+      else planTable(s"$rootQ/$tag", name, df.schema, rdds(t).getNumPartitions, sums.get(t), parents(t))
     }
-    val written = writeParts(s, plans.zip(rdds))
+    val written = writeParts(s, plans, rdds)
     val entries = plans.indices.map { t =>
-      plans(t).name -> plans(t).inherited.getOrElse(storedEntry(plans(t), written, t))
+      val e = plans(t).inherited.getOrElse(storedEntry(plans(t), written, t))
+      plans(t).name -> inputs(t).fold(e)(i => e.copy(inputs = Some(i)))
     }.toMap
     exportRaceHook() // test seam: the pre-commit window a concurrent retain can land in
     // OCC commit: the generation read and the preconditioned swap sit in
@@ -580,10 +635,8 @@ object Snapshot {
       // is the one being written. Every file of every entry is checked,
       // not one per entry: a file-granular entry links files owned by
       // several ancestor tags.
-      val f = fs(s, root)
-      val rootQ = f.makeQualified(new Path(root))
       val owners = entries.values.flatMap(_.files.map(fe => new Path(fe.path)))
-        .flatMap(ownerTagOf(f, rootQ)).toSet - tag
+        .flatMap(ownerTagOf(fs(s, root), rootQ)).toSet - tag
       val swept = owners.filterNot(tagExists(s, root, _))
       if (swept.nonEmpty)
         throw new ConcurrentSnapshotCommitException(
@@ -663,21 +716,69 @@ object Snapshot {
     }
   }
 
-  /** ONE job writing every unlinked part of every plan: a task per
-    * part writes its partition of the pinned RDD into its table's dir
-    * through a [[SnapshotDataWriter]] prepared like the DSv2 sink's.
-    * Returns the files each task wrote, by (plan index, partition
-    * index). If the job fails, the dirs it wrote into are deleted.
+  /** Whether `df` provably holds the rows of `parent`, so [[export]]
+    * inherits the entry without signing it: a bare read of a
+    * [[SnapshotTable]] under `rootQ` over the parent's files, or a
+    * parquet relation whose `inputs` fingerprint is the parent's.
     */
-  private def writeParts(s: SparkSession, plans: Seq[(TablePlan, RDD[InternalRow])])
+  private def provenUnchanged(s: SparkSession, rootQ: Path, df: DataFrame,
+                              inputs: Option[InputFiles], parent: TableEntry): Boolean =
+    parent.schemaJson.contains(df.schema.json) && contentOf(parent, df.schema).isDefined &&
+      (df.queryExecution.analyzed match {
+        case r: DataSourceV2Relation => r.table match {
+          case t: SnapshotTable =>
+            r.output.map(_.name) == t.schema().fieldNames.toSeq && t.files == parent.files &&
+              fs(s, t.root).makeQualified(new Path(t.root)) == rootQ
+          case _ => false
+        }
+        case _ => inputs.isDefined && parent.inputs == inputs
+      })
+
+  /** The [[InputFiles]] fingerprint of `df` when it is a bare parquet
+    * relation whose file listing still matches the filesystem: a fresh
+    * `getFileStatus` of each file must report the length and
+    * modification time the relation listed. None otherwise.
+    */
+  private def inputsOf(s: SparkSession, df: DataFrame): Option[InputFiles] =
+    df.queryExecution.analyzed match {
+      case lr: LogicalRelation if !lr.isStreaming => lr.relation match {
+        case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] => h.location match {
+          case idx: PartitioningAwareFileIndex =>
+            val conf = s.sessionState.newHadoopConfWithOptions(h.options)
+            val listed = idx.allFiles()
+            val fresh = listed.flatMap { st =>
+              scala.util.Try(st.getPath.getFileSystem(conf).getFileStatus(st.getPath)).toOption
+                .filter(now => now.getLen == st.getLen && now.getModificationTime == st.getModificationTime)
+                .map(now => InputFile(now.getPath.toString, now.getLen, now.getModificationTime))
+            }
+            val options = h.options.map { case (k, v) => s"${k.toLowerCase(java.util.Locale.ROOT)}=$v" }
+              .toSeq.sorted.mkString("\n")
+            val digest = java.security.MessageDigest.getInstance("SHA-256").digest(options.getBytes("UTF-8"))
+            if (fresh.size != listed.size) None
+            else Some(InputFiles(fresh.sortBy(_.path), digest.map(b => f"$b%02x").mkString))
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** ONE job writing every unlinked part of every plan: a task per
+    * part writes its partition of the table's pinned RDD in `rdds`
+    * into its table's dir through a [[SnapshotDataWriter]] prepared like
+    * the DSv2 sink's. Returns the files each task wrote, by (plan index,
+    * partition index). If the job fails, the dirs it wrote into are
+    * deleted.
+    */
+  private def writeParts(s: SparkSession, plans: Seq[TablePlan], rdds: Map[Int, RDD[InternalRow]])
       : Map[(Int, Int), Seq[SignedFile]] = {
-    val writes = plans.zipWithIndex.flatMap { case ((p, rdd), t) =>
+    val writes = plans.zipWithIndex.flatMap { case (p, t) =>
       // ascending, as PartitionPruningRDD keeps them: task j holds ids(j)
       val ids = p.parts.filter(_.parent.isEmpty).map(_.index).toArray
       if (ids.isEmpty) None
       else {
         val writers = SnapshotWriterFactory(s, p.dir, p.schema)
-        Some(p.dir -> PartitionPruningRDD.create(rdd, ids.toSet).mapPartitionsWithIndex {
+        Some(p.dir -> PartitionPruningRDD.create(rdds(t), ids.toSet).mapPartitionsWithIndex {
           (j, it) => Iterator((t, ids(j), writers.writeAll(ids(j), it).files))
         })
       }

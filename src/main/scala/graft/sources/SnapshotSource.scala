@@ -3,7 +3,6 @@ package graft.sources
 import java.util
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -16,9 +15,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, GraftPartitionShim, OutputWriter, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, GraftPartitionShim, OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.internal.SQLConf
@@ -264,53 +264,82 @@ class SnapshotScanBuilder(table: SnapshotTable)
     with SupportsPushDownFilters with SupportsPushDownAggregates {
   private var required: StructType = table.schema()
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var pushedAggs: Seq[SnapshotAgg] = Nil
+  private var answered: Option[SnapshotAggScan] = None
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Metadata-only aggregation: COUNT(*)/MIN/MAX answered from parquet
-    * FOOTER statistics — zero data pages read. At 100 TB this turns a
-    * full scan into a footer walk. Partial pushdown contract: each
-    * file contributes one pre-aggregated row; Spark plans the final
-    * merge (sum of counts, min of mins). Restricted to no-filter,
-    * no-groupBy plans and int/long/date columns the files store —
-    * integer stats are exact, while float (NaN) and binary (truncation)
-    * footer stats are not trustworthy, a pushed filter would invalidate
-    * the counts, and a legacy entry's partition columns have no chunk in
-    * the footers (the row-scan fallback would read them as NULL).
+  /** Metadata-only aggregation: a no-filter, no-groupBy `count(*)` (or
+    * `count` of a non-null literal) and `min`/`max` of top-level int,
+    * long and date columns the files store, answered WHOLLY from the
+    * manifest (Iceberg's manifest-statistics answer): Spark plans the
+    * one answer row as a local scan, and no job reads a row or opens a
+    * file. Accepted only when the manifest holds every input:
+    *  - every file's signature records its row count, and the counts sum
+    *    to the entry's `rows` (a tampered or legacy count is refused);
+    *  - every file still exists at its recorded length (one status call
+    *    per file on the driver), so a missing or truncated file is
+    *    refused and the row scan fails naming it;
+    *  - for each `min`/`max` column, every non-empty file has bounds
+    *    under the column's name, and no other column's leaves can share
+    *    that dotted key (a flat `a.b` beside a struct `a`).
+    * Integer footer stats are exact, while float (NaN) and binary
+    * (truncation) ones are not, so no other type is answered. Anything
+    * else is refused, and Spark plans its ordinary scan and aggregate.
+    * `supportCompletePushDown` and `pushAggregation` give the same
+    * answer for the same aggregation.
     */
-  override def pushAggregation(agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    import org.apache.spark.sql.connector.expressions.NamedReference
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    // files.isEmpty: zero partial rows would make the final merged
-    // count NULL instead of 0 — serve empty tables from the row scan
-    if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty || table.files.isEmpty) return false
-    def statSafeField(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
-      e match {
-        case nr: NamedReference if nr.fieldNames.length == 1 =>
-          table.dataSchema.fields.find(_.name == nr.fieldNames.head).filter(f => f.dataType match {
-            case IntegerType | LongType | DateType => true
-            case _ => false
-          })
-        case _ => None
-      }
-    val specs = agg.aggregateExpressions.toSeq.map {
-      case _: CountStar => Some(SnapshotAgg("count", None, LongType))
-      // count(<non-null literal>) ≡ count(*); count(col) would need
-      // per-column null counts (not reliably in footers) — not pushed
-      case c: org.apache.spark.sql.connector.expressions.aggregate.Count
-          if !c.isDistinct && (c.column match {
-            case l: org.apache.spark.sql.connector.expressions.Literal[_] => l.value != null
-            case _ => false
-          }) => Some(SnapshotAgg("count", None, LongType))
-      case m: Min => statSafeField(m.column).map(f => SnapshotAgg("min", Some(f.name), f.dataType))
-      case m: Max => statSafeField(m.column).map(f => SnapshotAgg("max", Some(f.name), f.dataType))
+  override def supportCompletePushDown(agg: Aggregation): Boolean = answer(agg).isDefined
+
+  override def pushAggregation(agg: Aggregation): Boolean = {
+    answered = answer(agg)
+    answered.isDefined
+  }
+
+  private lazy val filesIntact: Boolean = {
+    val conf = table.owner.sessionState.newHadoopConf()
+    table.files.forall { f =>
+      val p = new Path(f.path)
+      scala.util.Try(p.getFileSystem(conf).getFileStatus(p).getLen == f.size).getOrElse(false)
+    }
+  }
+
+  private def answer(agg: Aggregation): Option[SnapshotAggScan] = {
+    import org.apache.spark.sql.connector.expressions.{Literal, NamedReference}
+    import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
+    def bounded(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] = e match {
+      case nr: NamedReference if nr.fieldNames.length == 1 =>
+        table.dataSchema.fields.find(_.name == nr.fieldNames.head).filter(f => f.dataType match {
+          case IntegerType | LongType | DateType => true
+          case _ => false
+        })
       case _ => None
     }
-    if (specs.nonEmpty && specs.forall(_.isDefined)) {
-      pushedAggs = specs.flatten
-      true
-    } else false
+    val specs = agg.aggregateExpressions.toSeq.map {
+      case _: CountStar => Some(SnapshotAgg("count", None, LongType))
+      // count(col) would need per-column null counts the manifest lacks
+      case c: Count if !c.isDistinct && (c.column match {
+            case l: Literal[_] => l.value != null
+            case _ => false
+          }) => Some(SnapshotAgg("count", None, LongType))
+      case m: Min => bounded(m.column).map(f => SnapshotAgg("min", Some(f.name), f.dataType))
+      case m: Max => bounded(m.column).map(f => SnapshotAgg("max", Some(f.name), f.dataType))
+      case _ => None
+    }
+    val counts = table.files.map(Snapshot.signedRows)
+    if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty || specs.isEmpty || specs.contains(None) ||
+        counts.contains(None) || counts.flatten.sum != table.rows || !filesIntact) return None
+    val nonEmpty = table.files.zip(counts.flatten).collect { case (f, n) if n > 0 => f }
+    val values = specs.flatten.map {
+      case SnapshotAgg("count", _, _) => Some(table.rows)
+      case SnapshotAgg(fn, Some(c), t) =>
+        val shared = table.dataSchema.exists(f => f.name != c && c.startsWith(s"${f.name}."))
+        val bounds = nonEmpty.map(_.stats.get(c))
+        if (shared || bounds.contains(None)) None
+        else Some((if (fn == "min") bounds.flatten.map(_.min).minOption else bounds.flatten.map(_.max).maxOption)
+          .map(v => if (t == LongType) v: Any else v.toInt: Any).orNull)
+      case other => throw new IllegalStateException(s"bad agg spec $other")
+    }
+    if (values.contains(None)) None else Some(SnapshotAggScan(table, specs.flatten, values.flatten))
   }
   /** Every filter goes to the scan, and every filter is also returned
     * as residual so Spark re-evaluates it after the scan: the manifest
@@ -324,9 +353,7 @@ class SnapshotScanBuilder(table: SnapshotTable)
     filters
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def build(): Scan =
-    if (pushedAggs.nonEmpty) SnapshotAggScan(table, pushedAggs)
-    else SnapshotScan(table, required, pushed.toSeq)
+  override def build(): Scan = answered.getOrElse(SnapshotScan(table, required, pushed.toSeq))
 }
 
 /** One pushed aggregate: `count` (no column) or `min`/`max` of an
@@ -334,177 +361,32 @@ class SnapshotScanBuilder(table: SnapshotTable)
   */
 case class SnapshotAgg(fn: String, column: Option[String], resultType: DataType)
 
-/** Footer-statistics scan: each input file yields ONE row of partial
-  * aggregate values read from parquet block metadata — no data pages.
-  * Whole files are packed into input partitions by [[SnapshotScan.pack]]:
-  * a footer read is tiny, so one task per file would spend most of its
-  * time on task overhead, while a large table still spreads over
-  * `spark.sql.files.minPartitionNum` (default parallelism) tasks.
-  *
-  * The reader factory is built with the table's `owner` session, which
-  * case-class equality does not cover: two scans of the same snapshot
-  * still compare equal and Spark's scan/exchange reuse keeps working.
+/** The manifest's answer to a pushed aggregation, as Spark's
+  * `LocalScan`: `values` is the one answer row, in `aggs` order (count
+  * as long, int and date bounds narrowed from the manifest's long
+  * bounds, NULL bounds for an empty table).
   */
-case class SnapshotAggScan(table: SnapshotTable, aggs: Seq[SnapshotAgg])
-    extends Scan with Batch {
+case class SnapshotAggScan(table: SnapshotTable, aggs: Seq[SnapshotAgg], values: Seq[Any])
+    extends LocalScan {
   override def readSchema(): StructType = StructType(aggs.map {
     case SnapshotAgg("count", _, _) => StructField("count(*)", LongType, nullable = false)
     case SnapshotAgg(fn, Some(c), t) => StructField(s"$fn($c)", t)
     case other => throw new IllegalStateException(s"bad agg spec $other")
   })
-  override def toBatch: Batch = this
-  override def planInputPartitions(): Array[InputPartition] =
-    SnapshotScan.pack(table.owner, table.files, splitFiles = false, _ => InternalRow.empty)
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // the row-scan fallback reads only the aggregated columns
-    val cols = StructType(aggs.flatMap(a => a.column.map(c => StructField(c, a.resultType))).distinct)
-    SnapshotAggReaderFactory(aggs,
-      SnapshotScan.readerFactory(table.owner, cols, cols, new StructType(), Nil))
-  }
+  override def rows(): Array[InternalRow] = Array(new GenericInternalRow(values.toArray))
   override def description(): String =
     s"GraftSnapshotAggScan(files=${table.files.size}, " +
       s"pushedAggregates=[${aggs.map(a => s"${a.fn}(${a.column.getOrElse("*")})").mkString(", ")}])"
-}
-
-case class SnapshotAggReaderFactory(aggs: Seq[SnapshotAgg],
-                                    rowReader: ParquetPartitionReaderFactory)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new SnapshotFooterAggReader(partition.asInstanceOf[FilePartition], aggs, rowReader)
-}
-
-/** Reads ONLY the parquet footers and emits one partial-aggregate row
-  * per file of its partition. If any needed column chunk of a file
-  * lacks statistics (a foreign writer with stats disabled — parquet-mr
-  * always writes exact int32/int64 min-max), the reader falls back to
-  * scanning THAT file's rows alone through `rowReader`, Spark's parquet
-  * reader, so pushdown stays a pure I/O optimization and never a
-  * correctness dependency.
-  */
-class SnapshotFooterAggReader(partition: FilePartition, aggs: Seq[SnapshotAgg],
-                              rowReader: ParquetPartitionReaderFactory)
-    extends PartitionReader[InternalRow] {
-  private var pos = 0
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    if (pos >= partition.files.length) return false
-    val file = partition.files(pos)
-    pos += 1
-    val inputFile = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(file.toPath, rowReader.broadcastedConf.value.value)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(inputFile)
-    val fromFooter: Option[Array[Any]] =
-      try {
-        val blocks = reader.getFooter.getBlocks
-        val values = new Array[Any](aggs.length)
-        var ok = true
-        var i = 0
-        while (ok && i < aggs.length) {
-          values(i) = aggs(i) match {
-            case SnapshotAgg("count", _, _) =>
-              var n = 0L
-              blocks.forEach(b => n += b.getRowCount)
-              n
-            case SnapshotAgg(fn, Some(cname), _) =>
-              var acc: Option[Long] = None
-              val it = blocks.iterator()
-              while (ok && it.hasNext) {
-                val b = it.next()
-                // A column chunk absent from this file's footer (schema
-                // evolution, foreign file) is treated like missing
-                // statistics: fall back to the row scan — which raises a
-                // genuine schema error itself if the column truly doesn't
-                // exist — rather than failing the query here.
-                // Exact SINGLE-ELEMENT path match, not toDotString: only
-                // top-level columns are ever pushed (statSafeField), and
-                // a dot-string compare would let a NESTED chunk a.b
-                // shadow a flat column literally named "a.b" (dots are
-                // parquet's path delimiter) — find() would take whichever
-                // comes first in schema order and silently serve the
-                // OTHER column's min/max (DottedColumnProbeSpec).
-                val st = b.getColumns.asScala.find { c =>
-                  val p = c.getPath.toArray; p.length == 1 && p(0) == cname
-                }.map(_.getStatistics).orNull
-                if (st == null || st.isEmpty) ok = false // → row-scan fallback
-                else if (st.hasNonNullValue) {
-                  val v = (if (fn == "min") st.genericGetMin else st.genericGetMax) match {
-                    case l: java.lang.Long => l.longValue()
-                    case n: java.lang.Integer => n.longValue()
-                    case _ => ok = false; 0L
-                  }
-                  if (ok)
-                    acc = Some(acc.fold(v)(a => if (fn == "min") math.min(a, v) else math.max(a, v)))
-                }
-              }
-              // null partial when the file has no non-null values — the
-              // final min/max merge ignores nulls
-              acc.map { v =>
-                aggs(i).resultType match {
-                  case LongType => v
-                  case IntegerType | DateType => v.toInt
-                  case other => throw new IllegalStateException(s"bad agg type $other")
-                }
-              }.orNull
-            case other => throw new IllegalStateException(s"bad agg spec $other")
-          }
-          i += 1
-        }
-        if (ok) Some(values) else None
-      } finally reader.close()
-
-    row = new GenericInternalRow(fromFooter.getOrElse(rowScanPartials(file)))
-    true
-  }
-
-  /** Fallback: one pass over `file`'s rows computing the same partials
-    * — correct whenever the file is readable at all.
-    */
-  private def rowScanPartials(file: PartitionedFile): Array[Any] = {
-    val schema = rowReader.readDataSchema
-    val r = rowReader.createReader(FilePartition(partition.index, Array(file)))
-    var n = 0L
-    val mins = scala.collection.mutable.Map.empty[String, Long]
-    val maxs = scala.collection.mutable.Map.empty[String, Long]
-    try {
-      while (r.next()) {
-        val row = r.get()
-        n += 1
-        schema.fields.indices.foreach { i =>
-          if (!row.isNullAt(i)) {
-            val v = schema(i).dataType match {
-              case LongType => row.getLong(i)
-              case _ => row.getInt(i).toLong
-            }
-            mins.updateWith(schema(i).name)(o => Some(o.fold(v)(math.min(_, v))))
-            maxs.updateWith(schema(i).name)(o => Some(o.fold(v)(math.max(_, v))))
-          }
-        }
-      }
-    } finally r.close()
-    aggs.map {
-      case SnapshotAgg("count", _, _) => n: Any
-      case SnapshotAgg(fn, Some(c), t) =>
-        (if (fn == "min") mins.get(c) else maxs.get(c)).map { v =>
-          t match {
-            case LongType => v: Any
-            case _ => v.toInt: Any
-          }
-        }.orNull
-      case other => throw new IllegalStateException(s"bad agg spec $other")
-    }.toArray
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = ()
 }
 
 /** The row scan: files skipped by manifest stats, runtime filter and
   * partition value, the rest split and packed by [[SnapshotScan.pack]]
   * and read by Spark's parquet reader: the `required` stored columns,
   * then the `required` partition columns (constant per split), as
-  * Spark's `FileScan` orders them. Equality leaves out the table's `owner`, for
-  * the reuse-preserving reason given at [[SnapshotAggScan]].
+  * Spark's `FileScan` orders them. The reader factory is built with the
+  * table's `owner` session, which case-class equality does not cover: two
+  * scans of the same snapshot still compare equal and Spark's
+  * scan/exchange reuse keeps working.
   */
 case class SnapshotScan(table: SnapshotTable, required: StructType,
                         filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
@@ -521,7 +403,9 @@ case class SnapshotScan(table: SnapshotTable, required: StructType,
     * sees real numbers instead of a default guess. sizeInBytes is
     * scaled by the column-pruning fraction — the standard width
     * heuristic: a 2-of-10-column scan of a 100 TB snapshot should
-    * plan like a 20 TB input, not a 100 TB one.
+    * plan like a 20 TB input, not a 100 TB one. An empty entry reports
+    * 0 rows and the 1-byte floor, so it plans as the smallest join side
+    * rather than at `spark.sql.defaultSizeInBytes`.
     */
   override def estimateStatistics(): Statistics = new Statistics {
     private val totalBytes = table.files.map(_.size).sum
@@ -529,10 +413,10 @@ case class SnapshotScan(table: SnapshotTable, required: StructType,
       if (table.schema().isEmpty) 1.0
       else required.length.toDouble / table.schema().length.toDouble
     override def sizeInBytes(): util.OptionalLong =
-      if (totalBytes > 0) util.OptionalLong.of(math.max(1L, (totalBytes * width).toLong))
-      else util.OptionalLong.empty()
+      util.OptionalLong.of(math.max(1L, (totalBytes * width).toLong))
     override def numRows(): util.OptionalLong =
-      if (table.rows > 0) util.OptionalLong.of(table.rows) else util.OptionalLong.empty()
+      if (table.files.isEmpty) util.OptionalLong.of(0L)
+      else if (table.rows > 0) util.OptionalLong.of(table.rows) else util.OptionalLong.empty()
   }
   override def toBatch: Batch = this
 

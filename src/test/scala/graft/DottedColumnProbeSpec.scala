@@ -26,12 +26,12 @@ import graft.sources.{Snapshot, SnapshotScan, Tables}
   *     quoted, and that an out-of-range value on the flat column
   *     skips the row group where the decoy's range would not.
   *
-  *  2. AGGREGATES: min/max pushdown IS taken for a flat dotted column
-  *     (the connector reference arrives unparsed as one field name).
-  *     The footer reader must therefore match column chunks by EXACT
-  *     single-element path — a dot-string compare would let a nested
-  *     chunk a.b (struct a, field b) shadow the flat column "a.b" and
-  *     silently serve the WRONG column's statistics.
+  *  2. AGGREGATES: the manifest keys column stats by dotted path, so
+  *     the flat column "a.b" and the nested chunk a.b (struct a, field
+  *     b) share one key, whose bounds mix both. min/max of "a.b" must
+  *     therefore be refused by the manifest answer and come from the
+  *     row scan — serving the key would silently mix in the WRONG
+  *     column's values.
   */
 class DottedColumnProbeSpec extends SparkSpec {
 
@@ -103,14 +103,15 @@ class DottedColumnProbeSpec extends SparkSpec {
   test("footer min/max of 'a.b' matches chunks by exact path, not dot-string") {
     val back = readBack
     val agg = back.agg(min(col("`a.b`")).as("mn"), max(col("`a.b`")).as("mx"))
-    // the aggregate must actually take the footer path — otherwise this
-    // spec can't discriminate the chunk-matching rule
-    assert(agg.queryExecution.executedPlan.toString.contains("GraftSnapshotAggScan"),
-      "min/max over a flat int column must push to the footer scan")
+    // the manifest's "a.b" key is ambiguous: the answer must be refused
+    assert(!answeredFromManifest(agg),
+      "min/max of a column whose stats key a nested leaf shares must not be answered")
+    // positive control: the undotted int column is answered
+    assert(answeredFromManifest(back.agg(min(col("id")), max(col("id")))))
     val row = agg.collect().head
     val direct = fixture.agg(min(col("`a.b`")), max(col("`a.b`"))).collect().head
     assert(row.getInt(0) == direct.getInt(0) && row.getInt(1) == direct.getInt(1),
-      s"footer stats served the wrong chunk: got (${row.getInt(0)}, ${row.getInt(1)}), " +
+      s"stats served the wrong chunk: got (${row.getInt(0)}, ${row.getInt(1)}), " +
         s"want (${direct.getInt(0)}, ${direct.getInt(1)}) — the struct a.b decoy is +100")
     // the decoy would have surfaced as min >= 100
     assert(row.getInt(0) < 100, "min came from the struct chunk — dot-string shadowing")

@@ -68,7 +68,7 @@ class GraftTestFs2 extends GraftTestFs {
   * (S3 credentials/endpoints, HA nameservices) that a bare
   * `new Configuration()` silently drops — fine on file:// fixtures,
   * broken at deployment. These tests run the DSv2 row scan, the
-  * footer-statistics aggregate scan, and the DSv2 write entirely over
+  * aggregate scan the manifest cannot answer, and the DSv2 write entirely over
   * a scheme registered ONLY in the session conf, proving the conf
   * captured driver-side reaches every executor-side reader and writer.
   */
@@ -111,12 +111,14 @@ class SnapshotConfPropagationSpec extends SparkSpec
     Snapshot.export(spark, Map("orders" -> orders), root, "v2")
     val back = spark.read.format("graft.sources.SnapshotSource")
       .option("root", root).option("tag", "v2").option("table", "orders").load()
-    // count(*) + min/max(int64) plan through SnapshotAggScan → the
-    // footer reader must open graftfs:// files
-    val r = back.agg(count(lit(1)).as("n"), min(col("o_orderkey")).as("lo"),
-      max(col("o_orderkey")).as("hi")).collect().head
+    // max of a string column is not answered from the manifest, so the
+    // row scan must open graftfs:// files
+    val agg = back.agg(count(lit(1)).as("n"), min(col("o_orderkey")).as("lo"),
+      max(col("o_orderkey")).as("hi"), max(col("o_orderstatus")).as("st"))
+    assert(!answeredFromManifest(agg))
+    val r = agg.collect().head
     val want = orders.agg(count(lit(1)), min(col("o_orderkey")),
-      max(col("o_orderkey"))).collect().head
+      max(col("o_orderkey")), max(col("o_orderstatus"))).collect().head
     assert(r == want, s"footer agg over graftfs diverged: $r vs $want")
   }
 

@@ -243,7 +243,8 @@ class SnapshotFileGranularSpec extends SparkSpec {
     val (m2, jobs) = withJobCount(
       Snapshot.export(spark, Map("t" -> Snapshot.read(spark, root, "t1", "t")), root, "t2", Some("t1")))
     assert(m2.tables("t") == appended, "the child's entry must be the parent's: same files")
-    assert(jobs == 1 && !new java.io.File(s"$root/t2/t").exists(), "nothing may be written")
+    // a bare read of the parent's files is proven unchanged: not even signed
+    assert(jobs == 0 && !new java.io.File(s"$root/t2/t").exists(), "nothing may be read or written")
     // the same rows with one value changed are rewritten
     val edited = Snapshot.read(spark, root, "t1", "t")
       .withColumn("v", when(col("id") === 4100, lit(-1L)).otherwise(col("v")))
@@ -373,5 +374,93 @@ class SnapshotFileGranularSpec extends SparkSpec {
     tables.keys.foreach { t =>
       assert(child(t).signature == alone(t).signature && child(t).rows == alone(t).rows, t)
     }
+  }
+
+  test("an export of a bare snapshot read of the parent reads no row; any other shape signs") {
+    val root = Files.createTempDirectory("snap_fg_proof").toString
+    val m1 = Snapshot.export(spark, Map("t" -> base), root, "t1")
+    def export(tag: String, df: DataFrame) =
+      withJobCount(Snapshot.export(spark, Map("t" -> df), root, tag, Some("t1")).tables("t"))
+    val (bare, bareJobs) = export("t2", Snapshot.read(spark, root, "t1", "t"))
+    assert(bareJobs == 0 && bare == m1.tables("t"), s"$bareJobs jobs")
+    // the same rows behind a filter are signed, then inherited whole
+    val (filtered, filteredJobs) = export("t3", Snapshot.read(spark, root, "t1", "t").where(col("id") >= 0))
+    assert(filteredJobs == 1 && filtered == m1.tables("t"), s"$filteredJobs jobs")
+    // a column subset is a new table: signed and written
+    val subset = Snapshot.read(spark, root, "t1", "t").select("id", "v")
+    val (projected, projectedJobs) = export("t4", subset)
+    assert(projectedJobs == 2 && sameRows(Snapshot.read(spark, root, "t4", "t"), subset.select("id", "v")))
+    assert(projected.files.forall(_.path.contains("/t4/")))
+    // the parent's files read under another root are signed
+    val other = Files.createTempDirectory("snap_fg_proof_other").toString
+    Files.createDirectories(java.nio.file.Paths.get(other, "t1"))
+    Files.copy(java.nio.file.Paths.get(root, "t1", "manifest.json"), java.nio.file.Paths.get(other, "t1", "manifest.json"))
+    val (foreign, foreignJobs) = export("t5", Snapshot.read(spark, other, "t1", "t"))
+    assert(foreignJobs == 1 && foreign == m1.tables("t"), s"$foreignJobs jobs")
+    // a read taken before an append to the parent holds the pre-append rows
+    val before = Snapshot.read(spark, root, "t1", "t")
+    sink(root, "t1", "t", rows(4000, 500, 1))
+    val (stale, staleJobs) = export("t6", before)
+    assert(staleJobs >= 1 && stale.rows == 4000, s"$staleJobs jobs")
+    assert(sameRows(Snapshot.read(spark, root, "t6", "t"), base))
+  }
+
+  /** `df` written as parquet under a fresh directory, in its partitions. */
+  private def parquetDir(df: DataFrame): String = {
+    val dir = Files.createTempDirectory("snap_fg_in").toString + "/in"
+    df.write.parquet(dir)
+    dir
+  }
+
+  test("an unchanged parquet input reads no row at the second export") {
+    val root = Files.createTempDirectory("snap_fg_parquet").toString
+    val dir = parquetDir(base)
+    val m1 = Snapshot.export(spark, Map("t" -> spark.read.parquet(dir)), root, "t1").tables("t")
+    val inputs = m1.inputs.getOrElse(fail("a parquet input records its fingerprint"))
+    assert(inputs.files.size == 4 && inputs.files.map(_.path) == inputs.files.map(_.path).sorted)
+    // built outside the count: reading a parquet schema runs a job
+    val (again, filtered) = (spark.read.parquet(dir), spark.read.parquet(dir).where(col("id") >= 0))
+    val (m2, jobs) = withJobCount(Snapshot.export(spark, Map("t" -> again), root, "t2", Some("t1")).tables("t"))
+    assert(jobs == 0 && m2 == m1, s"$jobs jobs")
+    // a filtered read of the same files is signed, and inherits whole
+    val (m3, filteredJobs) = withJobCount(
+      Snapshot.export(spark, Map("t" -> filtered), root, "t3", Some("t2")).tables("t"))
+    assert(filteredJobs == 1 && m3 == m1, s"$filteredJobs jobs")
+  }
+
+  test("a parquet file rewritten in place at the same length with a new mtime is signed again") {
+    val root = Files.createTempDirectory("snap_fg_rewrite").toString
+    // plain, uncompressed int columns: other values, same byte length
+    def single(from: Long): java.nio.file.Path = {
+      val dir = Files.createTempDirectory("snap_fg_one").toString + "/one"
+      spark.range(from, from + 100, 1, 1).select(col("id").cast("int").as("k")).write
+        .option("compression", "none").option("parquet.enable.dictionary", "false").parquet(dir)
+      Files.list(java.nio.file.Paths.get(dir)).filter(_.toString.endsWith(".parquet")).findFirst().get
+    }
+    val (a, b) = (single(0), single(1000))
+    assert(Files.size(a) == Files.size(b), "the probe needs two files of one length")
+    val in = Files.createTempDirectory("snap_fg_inplace")
+    val target = in.resolve("data.parquet")
+    Files.copy(a, target)
+    val m1 = Snapshot.export(spark, Map("t" -> spark.read.parquet(in.toString)), root, "t1").tables("t")
+    val mtime = Files.getLastModifiedTime(target).toMillis
+    Files.copy(b, target, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(target, java.nio.file.attribute.FileTime.fromMillis(mtime + 10000))
+    val m2 = Snapshot.export(spark, Map("t" -> spark.read.parquet(in.toString)), root, "t2", Some("t1")).tables("t")
+    assert(m2.signature != m1.signature && m2.inputs.exists(_.files.head.modified == mtime + 10000))
+    assert(Snapshot.read(spark, root, "t2", "t").agg(min("k")).head.getInt(0) == 1000)
+  }
+
+  test("a DSv2 append to the parent entry makes the next export sign the parquet input again") {
+    val root = Files.createTempDirectory("snap_fg_sinkinputs").toString
+    val dir = parquetDir(base)
+    Snapshot.export(spark, Map("t" -> spark.read.parquet(dir)), root, "t1")
+    sink(root, "t1", "t", rows(4000, 500, 1))
+    assert(Snapshot.readManifest(spark, root, "t1").tables("t").inputs.isEmpty,
+      "the sink's entry must not carry the export's fingerprint")
+    val again = spark.read.parquet(dir)
+    val (m2, jobs) = withJobCount(Snapshot.export(spark, Map("t" -> again), root, "t2", Some("t1")).tables("t"))
+    assert(jobs >= 1 && m2.rows == 4000 && m2.inputs.isDefined, s"$jobs jobs")
+    assert(sameRows(Snapshot.read(spark, root, "t2", "t"), base))
   }
 }

@@ -10,11 +10,10 @@ import graft.sources.{Snapshot, Tables}
   * disagree — an external tamper, a partial restore, a retention bug
   * in a foreign tool. The contract pinned here:
   *
-  *  - the manifest's `rows` statistic is ADVISORY (optimizer sizing
-  *    only) — no query answer may come from it. The CountStar pushdown
-  *    answers from parquet FOOTERS (the data itself), so a tampered
-  *    row count cannot lie to `count(*)` on either the agg-pushdown
-  *    path or the row-scan path;
+  *  - the manifest's `rows` statistic alone never answers a query: the
+  *    CountStar pushdown answers from the manifest only when the files'
+  *    signed row counts sum to it, so a tampered row count is refused
+  *    and `count(*)` reads the data on either path;
   *  - a manifest referencing a data file that no longer exists fails
   *    LOUDLY naming the problem — never a silently smaller (or empty)
   *    result, which is data loss masquerading as a small table.
@@ -44,12 +43,12 @@ class SnapshotIntegritySpec extends SparkSpec {
       // the tamper is visible in the advisory statistic...
       assert(Snapshot.readManifest(spark, root, "v1").tables("nation").rows == 999999L)
       // ...but no query answer comes from it: the no-filter count(*)
-      // (the CountStar footer pushdown path) and the row-scan count
-      // (filter suppresses agg pushdown) both report the DATA's truth
+      // (the CountStar pushdown, refused because the files' signed
+      // counts disagree) and the row-scan count (filter suppresses agg
+      // pushdown) both report the DATA's truth
       val viaAggPushdown = readSnap(root).agg(count(lit(1)).as("n"))
-      assert(viaAggPushdown.queryExecution.executedPlan.toString
-        .contains("GraftSnapshotAggScan"),
-        "probe must exercise the footer-stats pushdown path")
+      assert(!answeredFromManifest(viaAggPushdown),
+        "a row count the signed file counts contradict must not be answered")
       assert(viaAggPushdown.head().getLong(0) == trueRows)
       assert(readSnap(root).where(col("n_nationkey") >= 0).count() == trueRows)
     } finally SessionToken.deleteDir(root)
@@ -77,14 +76,15 @@ class SnapshotIntegritySpec extends SparkSpec {
           String.valueOf(c.getMessage).toLowerCase.contains("not exist") ||
           String.valueOf(c.getMessage).toLowerCase.contains("notfound")),
         s"row scan over a missing file must fail naming it: ${eScan.getMessage}")
-      // footer-pushdown count(*) path: same loud failure (the footer
-      // walk opens every file), never a partial count
+      // no-filter count(*) path: same loud failure (the manifest answer
+      // is refused for a missing file, so the row scan opens it), never
+      // a partial count
       val eAgg = intercept[Throwable](readSnap(root).agg(count(lit(1))).head())
       assert(chain(eAgg).exists(c =>
           c.isInstanceOf[java.io.FileNotFoundException] ||
           String.valueOf(c.getMessage).toLowerCase.contains("not exist") ||
           String.valueOf(c.getMessage).toLowerCase.contains("notfound")),
-        s"footer count over a missing file must fail naming it: ${eAgg.getMessage}")
+        s"count over a missing file must fail naming it: ${eAgg.getMessage}")
     } finally SessionToken.deleteDir(root)
   }
 }

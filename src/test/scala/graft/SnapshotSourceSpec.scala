@@ -163,17 +163,14 @@ class SnapshotSourceSpec extends SparkSpec {
       count(lit(1)).as("n"),
       min(col("n_nationkey")).as("min_k"),
       max(col("n_nationkey")).as("max_k"))
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(plan.contains("GraftSnapshotAggScan"), plan)
-    assert(plan.contains("pushedAggregates=[count(*), min(n_nationkey), max(n_nationkey)]"), plan)
+    // answered from the manifest: the one answer row is a local scan
+    assert(answeredFromManifest(agg), agg.queryExecution.executedPlan)
     val r = agg.collect().head
     // n_nationkey is an int32 dimension key — min/max keep the column type
     assert((r.getLong(0), r.getInt(1), r.getInt(2)) == (25L, 0, 24))
   }
 
   test("a 24-file footer aggregate packs files into fewer tasks, equal to the row scan") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val r = Files.createTempDirectory("snap_agg24").toString
     val df = spark.range(0, 24000, 1, 24).select(col("id"), (col("id") % 97).cast("int").as("k"))
     Snapshot.export(spark, Map("t" -> df), r, "t1")
@@ -182,29 +179,113 @@ class SnapshotSourceSpec extends SparkSpec {
       t.agg(count(lit(1)), min("id"), max("id"), min("k"), max("k"))
     val agg = lookup(spark.read.format("graft.sources.SnapshotSource")
       .option("root", r).option("tag", "t1").option("table", "t").load())
-    val result = agg.collect().head
-    val scans = new AdaptiveSparkPlanHelper {}.collect(agg.queryExecution.executedPlan) {
-      case b: BatchScanExec => b
-    }
-    assert(scans.size == 1 && scans.head.scan.description().contains("GraftSnapshotAggScan"))
-    val planned = scans.head.batch.planInputPartitions().length
-    assert(planned > 1 && planned < 24, s"$planned input partitions for 24 files")
-    assert(result == lookup(Snapshot.read(spark, r, "t1", "t")).collect().head)
+    val (result, jobs) = withJobCount(agg.collect().head)
+    // answered from the manifest: no scan task opens any of the 24 files
+    assert(answeredFromManifest(agg), agg.queryExecution.executedPlan)
+    assert(jobs <= 1, s"$jobs jobs for a manifest answer")
+    val rowScan = lookup(Snapshot.read(spark, r, "t1", "t").where(col("id") >= 0))
+    assert(!answeredFromManifest(rowScan))
+    assert(result == rowScan.collect().head)
   }
 
   test("aggregate pushdown declines filters, groupBy and stat-unsafe columns") {
     // filter present → normal scan + residual evaluation
     val filtered = dsv2("nation").where(col("n_nationkey") > 5).agg(count(lit(1)))
-    assert(!filtered.queryExecution.executedPlan.toString.contains("GraftSnapshotAggScan"))
+    assert(!answeredFromManifest(filtered))
     assert(filtered.collect().head.getLong(0) == 19L)
     // groupBy → not pushed
     val grouped = dsv2("nation").groupBy(col("n_regionkey")).agg(count(lit(1)))
-    assert(!grouped.queryExecution.executedPlan.toString.contains("GraftSnapshotAggScan"))
+    assert(!answeredFromManifest(grouped))
     // min over a string column → footer stats not trusted, not pushed
     val strMin = dsv2("nation").agg(min(col("n_name")))
-    assert(!strMin.queryExecution.executedPlan.toString.contains("GraftSnapshotAggScan"))
+    assert(!answeredFromManifest(strMin))
     assert(strMin.collect().head.getString(0) == Snapshot.read(spark, root, "t1", "nation")
       .agg(min(col("n_name"))).collect().head.getString(0))
+  }
+
+  /** `df` exported as table `t` of a fresh root's tag `t1`, read back through DSv2. */
+  private def exported(df: org.apache.spark.sql.DataFrame): (String, org.apache.spark.sql.DataFrame) = {
+    val r = Files.createTempDirectory("snap_answer").toString
+    Snapshot.export(spark, Map("t" -> df), r, "t1")
+    r -> load(r)
+  }
+
+  private def load(r: String) = spark.read.format("graft.sources.SnapshotSource")
+    .option("root", r).option("tag", "t1").option("table", "t").load()
+
+  /** count, then min and max of every column, as one row. */
+  private def bounds(df: org.apache.spark.sql.DataFrame) =
+    df.agg(count(lit(1)), df.columns.flatMap(c => Seq(min(col(c)), max(col(c)))): _*)
+
+  /** Rewrites table `t` of tag `t1` under `r` through `edit`. */
+  private def editEntry(r: String)(edit: Snapshot.TableEntry => Snapshot.TableEntry): Unit = {
+    val m = Snapshot.readManifest(spark, r, "t1")
+    Snapshot.writeManifest(spark, r, m.copy(tables = m.tables + ("t" -> edit(m.tables("t")))))
+  }
+
+  test("an empty table is answered from the manifest: count 0, NULL bounds") {
+    val (_, back) = exported(spark.range(0).select(col("id"), col("id").cast("int").as("i"),
+      expr("date_add(DATE'1970-01-01', cast(id as int))").as("d")))
+    val agg = bounds(back)
+    assert(answeredFromManifest(agg), agg.queryExecution.executedPlan)
+    val r = agg.collect().head
+    assert(r.getLong(0) == 0L && (1 until r.length).forall(r.isNullAt), r)
+  }
+
+  test("min == max, negative numbers and pre-1970 dates are answered from the manifest") {
+    val one = spark.range(5, 6).select(col("id"), (-col("id")).cast("int").as("i"))
+    val (_, oneBack) = exported(one.repartition(1))
+    assert(answeredFromManifest(bounds(oneBack)))
+    assert(bounds(oneBack).collect().head == bounds(one).collect().head)
+    val dated = spark.range(-3, 4, 1, 3).select((col("id") * -1000000000000L).as("l"),
+      (col("id") * 70000).cast("int").as("i"),
+      expr("date_add(DATE'1969-12-31', cast(id * 9000 as int))").as("d"))
+    val (_, datedBack) = exported(dated)
+    val agg = bounds(datedBack)
+    assert(answeredFromManifest(agg), agg.queryExecution.executedPlan)
+    val got = agg.collect().head
+    assert(got.getDate(5).toLocalDate.getYear < 1970 && got.getLong(1) < 0 && got.getInt(3) < 0, got)
+    assert(got == bounds(dated).collect().head)
+  }
+
+  test("a legacy entry with unsigned files is refused and answered by the row scan") {
+    val df = spark.range(0, 3000, 1, 3).select(col("id"), (col("id") % 7).as("k"))
+    val (r, _) = exported(df)
+    editEntry(r)(e => e.copy(files = e.files.map(_.copy(signature = None))))
+    val agg = bounds(load(r))
+    assert(!answeredFromManifest(agg), agg.queryExecution.optimizedPlan)
+    assert(agg.collect().head == bounds(df).collect().head)
+  }
+
+  test("a file without bounds for an aggregated column makes the pushdown refuse") {
+    val df = spark.range(0, 3000, 1, 3).select(col("id"), (col("id") % 7).as("k"))
+    val (r, _) = exported(df)
+    // the file holding the smallest id loses its bounds for id only
+    editEntry(r)(e => e.copy(files = e.files.map(f =>
+      if (f.stats.get("id").exists(_.min == 0L)) f.copy(stats = f.stats - "id") else f)))
+    val back = load(r)
+    assert(Snapshot.readManifest(spark, r, "t1").tables("t").files.count(!_.stats.contains("id")) == 1)
+    val idAgg = back.agg(min("id"), max("id"))
+    assert(!answeredFromManifest(idAgg), idAgg.queryExecution.optimizedPlan)
+    assert(idAgg.collect().head == df.agg(min("id"), max("id")).collect().head)
+    // a column every file still bounds is answered
+    assert(answeredFromManifest(back.agg(count(lit(1)), min("k"), max("k"))))
+  }
+
+  test("a join against an empty snapshot table plans a broadcast") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val (_, empty) = exported(spark.range(0).select(col("id").as("k")))
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // the other side (8000 bytes) is over the threshold; the empty side is not
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1000")
+    try {
+      val joined = spark.range(0, 1000).join(empty, col("id") === col("k"))
+      val plan = joined.queryExecution.executedPlan
+      assert(plan.collect { case b: BroadcastHashJoinExec => b }.nonEmpty, plan)
+      assert(joined.collect().isEmpty)
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   test("DSv2 write: create, append, truncate — manifest is the commit point") {

@@ -49,6 +49,21 @@ trait SparkSpec extends AnyFunSuite {
   def snapshotTable(entry: Snapshot.TableEntry): graft.sources.SnapshotTable =
     graft.sources.SnapshotTable.of("", "", "t", Some(entry), writable = false, spark)
 
+  /** Whether `df`'s aggregate is answered from the snapshot manifest:
+    * its optimized plan scans a `SnapshotAggScan`, and its physical plan
+    * runs no batch scan.
+    */
+  def answeredFromManifest(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
+    val local = df.queryExecution.optimizedPlan.exists {
+      case r: DataSourceV2ScanRelation => r.scan.isInstanceOf[graft.sources.SnapshotAggScan]
+      case _ => false
+    }
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+    local && scans.isEmpty
+  }
+
   /** The distinct files `batch` plans input splits over. */
   def plannedFiles(batch: org.apache.spark.sql.connector.read.Batch): Seq[String] =
     batch.planInputPartitions().toSeq.flatMap(
